@@ -427,9 +427,30 @@ object Pipeline {
     * so a failed attempt's leftovers are invisible; and the lake patch
     * is CONVERGENT — a replayed diff runs against the already-patched
     * lake, produces an empty changelog, and applies nothing.
+    *
+    * A tick that fails leaves no write running: the writes it launched
+    * on driver threads are drained before the failure propagates, so a
+    * replay never races a straggler of the failed attempt.
     */
   private[graft] def p02Tick(s: SparkSession, base: String,
       deltaDocs: DataFrame, tick: Long = 0L): Unit = {
+    import scala.concurrent.Await
+    import scala.concurrent.duration.Duration
+    val inflight = new java.util.concurrent.ConcurrentLinkedQueue[
+      scala.concurrent.Future[Unit]]()
+    try p02TickOn(s, base, deltaDocs, tick, inflight)
+    finally inflight.forEach(f => { Await.ready(f, Duration.Inf); () })
+  }
+
+  /** Test seam for the tick's failure path: invoked with a stage name
+    * once the tick's early index writes are in flight, so a spec can
+    * fail the tick there. A no-op in production.
+    */
+  private[graft] var onTickStage: String => Unit = _ => ()
+
+  private def p02TickOn(s: SparkSession, base: String,
+      deltaDocs: DataFrame, tick: Long,
+      inflight: java.util.Queue[scala.concurrent.Future[Unit]]): Unit = {
     // NOT cache-tracked: version promotion rewrites these roots across
     // ticks, and a persisted relation over old files could serve a
     // later tick stale rows through plan-cache matching. The four
@@ -497,6 +518,8 @@ object Pipeline {
         .parquet(s"$base/postings/t${tick + 1}")),
       Future(dBands.write.mode(SaveMode.Overwrite)
         .parquet(s"$base/bands/t${tick + 1}")))
+    earlyWrites.foreach(inflight.add)
+    onTickStage("early-writes")
     val dbPairs = dbCand
       .join(dEx, "d_id")
       .join(postings.select(col("doc_id").as("b_id"), col("h")),
@@ -697,6 +720,7 @@ object Pipeline {
       // state v{tick+1} already landed via state3's stage cut
       Future(bench2.filter(col("rc2") > 0).select(col("h"), col("rc2").as("rc"))
         .write.mode(SaveMode.Overwrite).parquet(s"$base/bench/v${tick + 1}")))
+    tail.foreach(inflight.add)
     (tail ++ earlyWrites).foreach(Await.result(_, Duration.Inf))
   }
 

@@ -80,16 +80,18 @@ import graft.operators.Lake
   * the advanced chain and retry — full OCC, serialized commits.
   *
   * Scale: reads are plain parquet scans with full pushdown; planning is
-  * one manifest scan (metadata-sized — the l09 argument: at 10M files
-  * the per-footer planning IO is what a 100-TB reader pays, and the
-  * manifest replaces it). The full-merge path never shuffles the
-  * snapshot on the broadcast side; the scoped path's cost is
-  * touched-files + changelog, not snapshot.
+  * one driver-side read of the version's one-file manifest, no Spark
+  * job (metadata-sized — the l09 argument: at 10M files the per-footer
+  * planning IO is what a 100-TB reader pays, and the manifest replaces
+  * it; [[ManifestIO]] is that driver plane). The full-merge path never
+  * shuffles the snapshot on the broadcast side; the scoped path's cost
+  * is touched-files + changelog, not snapshot.
   */
 final class GraftTable private (s: SparkSession, val dir: String,
     key: String) {
 
   import GraftTable._
+  import ManifestIO.{readManifest, writeManifest}
 
   private def fs: FileSystem = fsOf(s, dir)
 
@@ -200,41 +202,75 @@ final class GraftTable private (s: SparkSession, val dir: String,
     s.createDataFrame(java.util.Arrays.asList(rows: _*), sch)
   }
 
-  /** Collected manifest rows of committed version `v`, memoized on this
-    * instance. A manifest is file-count-sized (driver-safe by the same
-    * argument that lets [[touchedPaths]] collect it), yet every consumer
-    * — snapshot reads, range admission, touch admission, the step loops
-    * in [[changes]]/[[history]]/[[vacuum]] — otherwise pays a parquet
-    * footer read plus a collect JOB per call, and the version lifecycle
-    * entries read the same manifests many times over. The memo key
-    * includes the commit marker's PAYLOAD (commit instant + staging
-    * token), so a replay (uncommit → rewrite → commit) can never serve
-    * the superseded manifest: the rewritten commit carries a new
-    * payload. Vacuumed/uncommitted versions never reach the memo —
-    * validate() throws first, exactly as the uncached path did.
+  /** Manifest rows of committed version `v`, memoized on this instance.
+    * A manifest is file-count-sized (driver-safe by the same argument
+    * that lets [[touchedPaths]] collect it), and a cold load is one
+    * driver-side parquet read ([[ManifestIO.readManifest]]: a footer and
+    * one small part file, no Spark job); the memo saves even that for
+    * the version lifecycle entries, which read the same manifests many
+    * times over, and a writer seeds it with the manifest it just landed
+    * ([[commitWith]]). The memo key includes the commit marker's PAYLOAD
+    * (commit instant + staging token + nonce), so a replay (uncommit →
+    * rewrite → commit) can never serve the superseded manifest: the
+    * rewritten commit carries a new payload. Vacuumed/uncommitted
+    * versions never reach the memo — validate() throws first, exactly
+    * as the uncached path did. Loads run outside the map's lock, so
+    * concurrent loads of different versions overlap; two racing loads
+    * of one version both read and the first insert wins.
     */
-  private val manifestMemo: java.util.Map[(Int, String),
-      (StructType, Array[Row])] =
+  private val manifestMemo: java.util.Map[(Int, String), ManifestIO.Data] =
     java.util.Collections.synchronizedMap(
       // access-ordered LRU, bounded: a long-lived service instance
       // cycling many versions (history/vacuum loops touch all of them)
       // must not accumulate one collected manifest per version ever
       // read. 64 entries covers any retention window the gate exercises;
       // vacuum additionally evicts the versions it retires.
-      new java.util.LinkedHashMap[(Int, String), (StructType, Array[Row])](
+      new java.util.LinkedHashMap[(Int, String), ManifestIO.Data](
           16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[(Int, String), (StructType, Array[Row])])
+            e: java.util.Map.Entry[(Int, String), ManifestIO.Data])
             : Boolean = size() > GraftTable.ManifestMemoMax
       })
 
-  private def manifestData(v: Int): (StructType, Array[Row]) = {
+  private def manifestData(v: Int): ManifestIO.Data = {
     validate(v)
-    val payload = markerPayload(fs, v)
-    manifestMemo.computeIfAbsent((v, payload), _ => {
-      val df = s.read.parquet(s"$dir/v$v/_manifest${metaSuffixOf(payload)}")
-      (df.schema, df.collect())
-    })
+    val k = (v, markerPayload(fs, v))
+    Option(manifestMemo.get(k)).getOrElse {
+      val loaded = readManifest(s,
+        s"$dir/v$v/_manifest${metaSuffixOf(k._2)}")
+      Option(manifestMemo.putIfAbsent(k, loaded)).getOrElse(loaded)
+    }
+  }
+
+  private def pathsOf(m: ManifestIO.Data): Array[String] = {
+    val pi = m._1.fieldIndex("path")
+    m._2.map(_.getString(pi))
+  }
+
+  /** Commit version `v` of this table and seed the memo with `m`, the
+    * manifest this handle just landed for it, under the new marker
+    * payload — the writer's next read of `v` needs no load at all.
+    */
+  private def commitWith(v: Int, m: ManifestIO.Data, op: String): Unit = {
+    manifestMemo.putIfAbsent((v, commit(s, dir, v, op = op)), m)
+    ()
+  }
+
+  /** Land version `next`'s manifest when it patches version `n`: `n`'s
+    * rows minus the `rewritten` files, plus the stats of the files just
+    * written under `vdir` — array arithmetic on the driver, no job. A
+    * z-order compact's extra span columns stay on carried rows and read
+    * NULL on the new files (unknown span, readers must admit). Returns
+    * the landed manifest.
+    */
+  private[graft] def landPatchManifest(n: Int, vdir: String,
+      rewritten: Seq[String], schema: StructType): ManifestIO.Data = {
+    val base = manifestData(n)
+    val drop = rewritten.toSet
+    val pi = base._1.fieldIndex("path")
+    val carried = (base._1, base._2.filterNot(r => drop(r.getString(pi))))
+    val (sch, rows) = unionByName(carried, fileStats(s, vdir, key, schema))
+    writeManifest(s, s"$vdir/_manifest", sch, rows)
   }
 
   /** Drop memoized manifests of versions `vs` (vacuum retires them). */
@@ -253,9 +289,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
     */
   def readAsOf(v: Int): DataFrame = {
     val schema = schemaAsOf(v)
-    val (msch, rows) = manifestData(v)
-    val pi = msch.fieldIndex("path")
-    val paths = rows.map(_.getString(pi))
+    val paths = pathsOf(manifestData(v))
     if (paths.isEmpty)
       s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
     else minusDv(v, s.read.schema(schema).parquet(paths.toIndexedSeq: _*))
@@ -354,12 +388,15 @@ final class GraftTable private (s: SparkSession, val dir: String,
     }
 
   /** Carry the base version's DV into `next`, restricted to the paths
-    * `carried` still references — DV rows naming rewritten files are
-    * dropped with the files. Call before [[commit]].
+    * `next`'s manifest `m` still references — DV rows naming rewritten
+    * files are dropped with the files. Call before [[commit]].
     */
-  private def carryDv(n: Int, next: Int, carried: DataFrame): Unit =
+  private def carryDv(n: Int, next: Int, m: ManifestIO.Data): Unit =
     dvOf(n).foreach { dv =>
-      val keep = dv.join(carried.select("path"), Seq("path"), "left_semi")
+      val sp = s
+      import sp.implicits._
+      val keep = dv.join(pathsOf(m).toSeq.toDF("path"), Seq("path"),
+        "left_semi")
       if (keep.limit(1).count() > 0)
         keep.coalesce(1).write.mode(SaveMode.Overwrite)
           .parquet(dvPath(next).toString)
@@ -391,7 +428,8 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val n = currentVersion
     val next = n + 1
     val schema = schemaAsOf(n)
-    val paths = manifest(n).select("path").collect().map(_.getString(0))
+    val m = manifestData(n)
+    val paths = pathsOf(m)
     if (paths.isEmpty) return n // nothing to delete from
     val src = s.read.schema(schema).parquet(paths.toIndexedSeq: _*)
       .withColumn("_graft_fp", col("_metadata.file_path"))
@@ -402,12 +440,11 @@ final class GraftTable private (s: SparkSession, val dir: String,
       .select(col("_graft_fp").as("path"), col(key))
     val dvNew = dvOf(n).fold(matches)(_.unionByName(matches))
     clearDv(next)
-    manifest(n).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/v$next/_manifest")
+    val landed = writeManifest(s, s"$dir/v$next/_manifest", m._1, m._2)
     dvNew.coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(dvPath(next).toString)
     writeSchema(s, dir, next, schema)
-    commit(s, dir, next, op = "DELETE VECTORED")
+    commitWith(next, landed, "DELETE VECTORED")
     next
   }
 
@@ -426,7 +463,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val n = currentVersion
     val touched = touchedPaths(n, read().filter(cond)
       .select(col(key)))
-    val total = manifest(n).count()
+    val total = manifestData(n)._2.length
     if (touched.size * 2 >= total) deleteVectored(cond) else delete(cond)
   }
 
@@ -459,16 +496,10 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val vdir = s"$dir/v$next"
     clearDv(next)
     writeFiles(s, vdir, key, rows)
-    val sp = s
-    import sp.implicits._
-    val carried = m.join(targets.toDF("path"), Seq("path"), "left_anti")
-    carried.unionByName(fileStats(s, vdir, key, schema),
-        allowMissingColumns = true)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$vdir/_manifest")
-    carryDv(n, next, carried)
+    val landed = landPatchManifest(n, vdir, targets, schema)
+    carryDv(n, next, landed)
     writeSchema(s, dir, next, schema)
-    commit(s, dir, next, op = "REORG PURGE")
+    commitWith(next, landed, "REORG PURGE")
     next
   }
 
@@ -597,9 +628,9 @@ final class GraftTable private (s: SparkSession, val dir: String,
     validateIncoming(log)
     val n = currentVersion
     val next = n + 1
-    landVersion(s, dir, next, key,
-      Lake.cdcMergeAuto(alignForMerge(readAsOf(n), log), log, key = key))
-    commit(s, dir, next, op = "MERGE")
+    commitWith(next, landVersion(s, dir, next, key,
+      Lake.cdcMergeAuto(alignForMerge(readAsOf(n), log), log, key = key)),
+      "MERGE")
     next
   }
 
@@ -627,7 +658,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
   def mergeAuto(log: DataFrame): Int = {
     val n = currentVersion
     val touched = touchedPaths(n, log)
-    val total = manifest(n).count()
+    val total = manifestData(n)._2.length
     if (touched.size * 2 >= total) merge(log)
     else mergeScopedOn(n, touched, log)
   }
@@ -663,7 +694,6 @@ final class GraftTable private (s: SparkSession, val dir: String,
       log: DataFrame, op: String = "MERGE SCOPED"): Int = {
     validateIncoming(log)
     val next = n + 1
-    val base = manifest(n)
     val baseSchema = schemaAsOf(n)
     val touchedRows =
       if (touched.isEmpty)
@@ -674,20 +704,10 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val vdir = s"$dir/v$next"
     clearDv(next)
     writeFiles(s, vdir, key, merged)
-    val sp = s
-    import sp.implicits._
-    val carried = base.join(
-      touched.toDF("path"), Seq("path"), "left_anti")
-    // allowMissingColumns: a z-order compact's manifest carries extra
-    // span columns — files this tick rewrites get NULL there (unknown
-    // span, readers must admit), carried rows keep theirs
-    carried.unionByName(fileStats(s, vdir, key, merged.schema),
-        allowMissingColumns = true)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$vdir/_manifest")
-    carryDv(n, next, carried) // DV rows on rewritten files drop with them
+    val landed = landPatchManifest(n, vdir, touched, merged.schema)
+    carryDv(n, next, landed) // DV rows on rewritten files drop with them
     writeSchema(s, dir, next, merged.schema)
-    commit(s, dir, next, op = op)
+    commitWith(next, landed, op)
     next
   }
 
@@ -722,22 +742,23 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val n = currentVersion
     val next = n + 1
     val snap = readAsOf(n)
-    if (zorderBy.isEmpty)
-      landVersion(s, dir, next, key, snap)
-    else {
-      require(zorderBy.size == 2,
-        s"compact(zorderBy) interleaves exactly two columns, got " +
-          s"${zorderBy.mkString("[", ", ", "]")}")
-      val vdir = s"$dir/v$next"
-      clearDv(next)
-      writeFilesZ(s, vdir, zorderBy, snap)
-      fileStats(s, vdir, key, snap.schema, statCols = zorderBy)
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$vdir/_manifest")
-      writeSchema(s, dir, next, snap.schema)
-    }
-    commit(s, dir, next,
-      op = if (zorderBy.isEmpty) "OPTIMIZE" else "OPTIMIZE ZORDER")
+    val landed =
+      if (zorderBy.isEmpty) landVersion(s, dir, next, key, snap)
+      else {
+        require(zorderBy.size == 2,
+          s"compact(zorderBy) interleaves exactly two columns, got " +
+            s"${zorderBy.mkString("[", ", ", "]")}")
+        val vdir = s"$dir/v$next"
+        clearDv(next)
+        writeFilesZ(s, vdir, zorderBy, snap)
+        val (sch, rows) =
+          fileStats(s, vdir, key, snap.schema, statCols = zorderBy)
+        val m = writeManifest(s, s"$vdir/_manifest", sch, rows)
+        writeSchema(s, dir, next, snap.schema)
+        m
+      }
+    commitWith(next, landed,
+      if (zorderBy.isEmpty) "OPTIMIZE" else "OPTIMIZE ZORDER")
     next
   }
 
@@ -759,9 +780,11 @@ final class GraftTable private (s: SparkSession, val dir: String,
     */
   def compactSmall(smallBytes: Long = 32L << 20): Int = {
     val n = currentVersion
-    val m = manifest(n)
-    val small = m.filter(col("n_bytes") < smallBytes)
-      .select("path").collect().map(_.getString(0)).toSeq
+    val (msch, mrows) = manifestData(n)
+    val (pi, bi) = (msch.fieldIndex("path"), msch.fieldIndex("n_bytes"))
+    val small = mrows
+      .filter(r => !r.isNullAt(bi) && r.getLong(bi) < smallBytes)
+      .map(_.getString(pi)).toSeq
     if (small.size < 2) return n
     val next = n + 1
     val schema = schemaAsOf(n)
@@ -769,16 +792,10 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val vdir = s"$dir/v$next"
     clearDv(next)
     writeFiles(s, vdir, key, rows)
-    val sp = s
-    import sp.implicits._
-    val carried = m.join(small.toDF("path"), Seq("path"), "left_anti")
-    carried.unionByName(fileStats(s, vdir, key, schema),
-        allowMissingColumns = true)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$vdir/_manifest")
-    carryDv(n, next, carried)
+    val landed = landPatchManifest(n, vdir, small, schema)
+    carryDv(n, next, landed)
     writeSchema(s, dir, next, schema)
-    commit(s, dir, next, op = "OPTIMIZE BINPACK")
+    commitWith(next, landed, "OPTIMIZE BINPACK")
     next
   }
 
@@ -799,9 +816,9 @@ final class GraftTable private (s: SparkSession, val dir: String,
     validateIncoming(log)
     requireReplayable("mergeAs", v)
     uncommit(s, dir, v) // replay: invisible for the rewrite's duration
-    landVersion(s, dir, v, key,
-      Lake.cdcMergeAuto(alignForMerge(readAsOf(v - 1), log), log, key = key))
-    commit(s, dir, v, op = "MERGE")
+    commitWith(v, landVersion(s, dir, v, key,
+      Lake.cdcMergeAuto(alignForMerge(readAsOf(v - 1), log), log, key = key)),
+      "MERGE")
     v
   }
 
@@ -836,13 +853,12 @@ final class GraftTable private (s: SparkSession, val dir: String,
     requireReplayable("mergeAutoAs", v)
     uncommit(s, dir, v)
     val touched = touchedPaths(v - 1, log)
-    val total = manifest(v - 1).count()
+    val total = manifestData(v - 1)._2.length
     if (touched.size * 2 >= total) {
       validateIncoming(log) // the scoped arm validates in mergeScopedOn
-      landVersion(s, dir, v, key,
+      commitWith(v, landVersion(s, dir, v, key,
         Lake.cdcMergeAuto(alignForMerge(readAsOf(v - 1), log), log,
-          key = key))
-      commit(s, dir, v, op = "MERGE")
+          key = key)), "MERGE")
       v
     } else mergeScopedOn(v - 1, touched, log)
   }
@@ -899,16 +915,18 @@ final class GraftTable private (s: SparkSession, val dir: String,
       val merged =
         Lake.cdcMergeAuto(alignForMerge(readAsOf(n), log), log, key = key)
       writeFiles(s, dataDir, key, merged)
-      fileStats(s, dataDir, key, merged.schema)
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$vdir/_manifest_$token")
+      val (sch, rows) = fileStats(s, dataDir, key, merged.schema)
+      val landed = writeManifest(s, s"$vdir/_manifest_$token", sch, rows)
       writeFsString(f, new HPath(s"$vdir/_graft_schema_$token.json"),
         nullable(merged.schema).json, overwrite = true)
       try {
-        commit(s, dir, next, token, op = "MERGE")
+        val payload = commit(s, dir, next, token, op = "MERGE")
         // on stores where create-exclusive is a checked create, two
         // racers can both pass it — the marker's final content decides
-        if (metaSuffix(next) == s"_$token") return next
+        if (metaSuffix(next) == s"_$token") {
+          manifestMemo.putIfAbsent((next, payload), landed)
+          return next
+        }
         lastLoss = new IllegalStateException(
           s"lost the v$next marker race on graft table $dir")
         cleanup()
@@ -937,8 +955,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
     if (v <= cur) {
       val marker = s"/v$v/"
       val holders = versions.filter(_ > v).filter(w =>
-        manifest(w).filter(col("path").contains(marker)).limit(1)
-          .count() > 0)
+        pathsOf(manifestData(w)).exists(_.contains(marker)))
       if (holders.nonEmpty)
         throw new IllegalStateException(
           s"$what replay of v$v on graft table $dir would tear scoped " +
@@ -1169,8 +1186,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
   def replace(df: DataFrame): Int = {
     validateIncoming(df)
     val next = currentVersion + 1
-    landVersion(s, dir, next, key, df)
-    commit(s, dir, next, op = "REPLACE")
+    commitWith(next, landVersion(s, dir, next, key, df), "REPLACE")
     next
   }
 
@@ -1190,14 +1206,14 @@ final class GraftTable private (s: SparkSession, val dir: String,
     validate(v)
     val next = currentVersion + 1
     clearDv(next)
-    manifest(v).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/v$next/_manifest")
+    val (msch, mrows) = manifestData(v)
+    val landed = writeManifest(s, s"$dir/v$next/_manifest", msch, mrows)
     // the restored state includes v's soft deletes: the DV is part of
     // the version's metadata and copies with the manifest
     dvOf(v).foreach(_.coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(dvPath(next).toString))
     writeSchema(s, dir, next, schemaAsOf(v))
-    commit(s, dir, next, op = "RESTORE")
+    commitWith(next, landed, "RESTORE")
     next
   }
 
@@ -1223,8 +1239,8 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val f = fsOf(s, destDir)
     require(!f.exists(markerPath(destDir, 0)),
       s"cloneTo: $destDir already holds a committed graft table")
-    manifest(v).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$destDir/v0/_manifest")
+    val (msch, mrows) = manifestData(v)
+    writeManifest(s, s"$destDir/v0/_manifest", msch, mrows)
     // the clone-instant snapshot includes the source's soft deletes
     dvOf(v).foreach(_.coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$destDir/v0/_graft_dv"))
@@ -1262,15 +1278,16 @@ final class GraftTable private (s: SparkSession, val dir: String,
   /** The table's audit surface (Delta's DESCRIBE HISTORY): one row per
     * committed version — commit time (the marker's payload), file/row/
     * byte totals and the carried-reference count (0 = self-contained;
-    * >0 = a scoped tick's patchwork), all from ONE aggregate over the
-    * version's manifest (n_bytes is a manifest column recorded at write
-    * time, so history performs ZERO per-file size calls — at 10M files
-    * a stat-per-file loop would be the planning-IO bug l09 exists to
-    * avoid), plus the column count of the stored schema (watch additive
-    * evolution land). Reads only metadata: the markers and the
-    * per-version manifests (each a one-file parquet), never data files;
-    * version count is retention-bounded, so the per-version loop is
-    * model-sized by construction.
+    * >0 = a scoped tick's patchwork), all folded on the driver over the
+    * version's manifest rows (n_bytes is a manifest column recorded at
+    * write time, so history performs ZERO per-file size calls — at 10M
+    * files a stat-per-file loop would be the planning-IO bug l09 exists
+    * to avoid), plus the column count of the stored schema (watch
+    * additive evolution land). Reads only metadata: the markers and the
+    * per-version manifests (each a one-file parquet), never data files,
+    * and starts no Spark job on a DV-free table; version count is
+    * retention-bounded, so the per-version loop is model-sized by
+    * construction.
     */
   def history(): DataFrame = {
     val sp = s
@@ -1278,18 +1295,19 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val f = fs
     versions.map { v =>
       val committedAt = markerPayload(f, v).linesIterator.next().trim
-      val m = manifest(v).agg(
-        count(lit(1)).as("files"), sum("n_rows").as("rows"),
-        sum("n_bytes").as("bytes"),
-        sum(when(!col("path").contains(s"/v$v/"), 1L).otherwise(0L))
-          .as("carried")).head()
-      def long(i: Int) = if (m.isNullAt(i)) 0L else m.getLong(i) // empty version
+      val (msch, rows) = manifestData(v)
+      def total(c: String) = {
+        val i = msch.fieldIndex(c)
+        rows.iterator.map(r => if (r.isNullAt(i)) 0L else r.getLong(i)).sum
+      }
+      val pi = msch.fieldIndex("path")
       // n_rows counts PHYSICAL rows (the manifest's write-time stats);
       // dv_rows is how many of them the version's deletion vector hides
       // — live rows = n_rows - dv_rows (Delta reports DV'd files the
       // same way). One tombstone-sized parquet count per DV'd version.
       val dvRows = dvOf(v).map(_.count()).getOrElse(0L)
-      (v, committedAt, m.getLong(0), long(1), long(2), long(3),
+      (v, committedAt, rows.length.toLong, total("n_rows"), total("n_bytes"),
+        rows.count(r => !r.getString(pi).contains(s"/v$v/")).toLong,
         schemaAsOf(v).fields.length, dvRows, opOf(f, v))
     }.toDF("version", "committed_at", "n_files", "n_rows", "bytes",
       "carried_files", "n_columns", "dv_rows", "operation")
@@ -1478,8 +1496,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val referenced: Set[String] =
       if (doomed.isEmpty) Set.empty
       else retained
-        .flatMap(v => manifest(v).select("path").collect()
-          .map(_.getString(0)))
+        .flatMap(v => pathsOf(manifestData(v)))
         .map(qual).toSet
     val rows = scala.collection.mutable.ArrayBuffer[(Int, String, String)]()
     doomed.foreach { v =>
@@ -1501,7 +1518,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
     if (doomed.isEmpty) return doomed
     val retained = vs.drop(doomed.length)
     val referenced: Set[String] = retained
-      .flatMap(v => manifest(v).select("path").collect().map(_.getString(0)))
+      .flatMap(v => pathsOf(manifestData(v)))
       .map(qual).toSet
     doomed.foreach { v =>
       f.delete(markerPath(dir, v), false)
@@ -1530,6 +1547,8 @@ final class GraftTable private (s: SparkSession, val dir: String,
 }
 
 object GraftTable {
+
+  import ManifestIO.{footerStats, writeManifest}
 
   private val SchemaFile = "_graft_schema.json"
 
@@ -1619,10 +1638,11 @@ object GraftTable {
     * commit-log record: line 1 the commit instant, line 2 the staging
     * token (empty outside [[GraftTable.mergeConcurrent]]), line 3 the
     * OPERATION name (Delta's DESCRIBE HISTORY column — what kind of
-    * write created this version), framed by the terminator.
+    * write created this version), framed by the terminator. Returns the
+    * payload as [[GraftTable.markerPayload]] reads it back.
     */
   private def commit(s: SparkSession, dir: String, v: Int,
-      token: String = null, op: String = "WRITE"): Unit = {
+      token: String = null, op: String = "WRITE"): String = {
     onBeforeCommit(dir, v)
     // line 4 is a per-commit NONCE: no reader parses it; it exists so
     // the payload — the manifest-memo key — is unique per commit even
@@ -1630,9 +1650,9 @@ object GraftTable {
     // within the commit instant's clock resolution
     val payload = java.time.Instant.now().toString +
       "\n" + Option(token).getOrElse("") + "\n" + op +
-      "\n" + java.util.UUID.randomUUID().toString + MarkerEnd
+      "\n" + java.util.UUID.randomUUID().toString
     try writeFsString(fsOf(s, dir), markerPath(dir, v),
-      payload, overwrite = false)
+      payload + MarkerEnd, overwrite = false)
     catch {
       // RawLocalFileSystem raises FileAlreadyExistsException; other
       // connectors may surface the exclusive-create loss as a plain
@@ -1646,6 +1666,7 @@ object GraftTable {
             "writer contract violated); this writer's version is " +
             "abandoned", e)
     }
+    payload.trim
   }
 
   private def uncommit(s: SparkSession, dir: String, v: Int): Unit =
@@ -1695,29 +1716,59 @@ object GraftTable {
   }
 
   /** Per-file (path, key_lo, key_hi, n_rows, n_bytes) stats for the
-    * files under `vdir`, derived in one scan grouped on the file-source
-    * `_metadata` column (which also carries the file size — recorded
-    * here at write time so [[GraftTable.history]] and any byte
-    * accounting read the manifest, never stat files). `statCols` adds
-    * per-file `<col>_lo/_hi` spans for a z-order compact's clustering
-    * keys. The explicit schema keeps an EMPTY version (a tick that
-    * deleted every touched row and inserted none) readable — zero
-    * files, zero rows.
+    * files under `vdir`, recorded at write time (the file size too, so
+    * [[GraftTable.history]] and any byte accounting read the manifest,
+    * never stat files). `statCols` adds per-file `<col>_lo/_hi` spans
+    * for a z-order compact's clustering keys. Taken from the footers
+    * the writer just produced ([[ManifestIO.footerStats]]) — no Spark
+    * job; the one fallback is [[scanStats]], when a stat column's
+    * footer statistics are missing, truncated or of a type whose parquet
+    * order is not Spark's, or the version wrote more files than Spark's
+    * driver-side listing threshold. An EMPTY version (a tick that
+    * deleted every touched row and inserted none) yields zero rows.
     */
   private def fileStats(s: SparkSession, vdir: String, key: String,
-      schema: StructType, statCols: Seq[String] = Nil): DataFrame = {
+      schema: StructType, statCols: Seq[String] = Nil): ManifestIO.Data =
+    footerStats(s, vdir, key, schema, statCols)
+      .getOrElse(scanStats(s, vdir, key, schema, statCols))
+
+  /** [[fileStats]] derived in one scan grouped on the file-source
+    * `_metadata` column (which also carries the file size). The
+    * explicit schema keeps an empty version readable — zero files, zero
+    * rows.
+    */
+  private[graft] def scanStats(s: SparkSession, vdir: String, key: String,
+      schema: StructType, statCols: Seq[String] = Nil): ManifestIO.Data = {
     val extraNames = statCols.filterNot(_ == key)
       .flatMap(c => Seq(s"${c}_lo", s"${c}_hi"))
     val extra = statCols.filterNot(_ == key).flatMap(c =>
       Seq(min(col(c)).as(s"${c}_lo"), max(col(c)).as(s"${c}_hi")))
     val aggs = Seq(min(key).as("key_lo"), max(key).as("key_hi"),
       count(lit(1)).as("n_rows")) ++ extra
-    s.read.schema(nullable(schema)).parquet(vdir)
+    val df = s.read.schema(nullable(schema)).parquet(vdir)
       .groupBy(col("_metadata.file_path").as("path"),
                col("_metadata.file_size").as("n_bytes"))
       .agg(aggs.head, aggs.tail: _*)
       .select((Seq("path", "key_lo", "key_hi", "n_rows", "n_bytes") ++
         extraNames).map(col): _*)
+    (nullable(df.schema), df.collect())
+  }
+
+  /** `a unionByName(b, allowMissingColumns = true)` over manifests held
+    * on the driver: `a`'s columns, then `b`'s extra ones; a row missing
+    * a column reads NULL there.
+    */
+  private def unionByName(a: ManifestIO.Data,
+      b: ManifestIO.Data): ManifestIO.Data = {
+    val sch = StructType(a._1.fields ++
+      b._1.fields.filterNot(f => a._1.fieldNames.contains(f.name)))
+    def align(m: ManifestIO.Data): Array[Row] = {
+      val idx = sch.fieldNames.map(n =>
+        if (m._1.fieldNames.contains(n)) m._1.fieldIndex(n) else -1)
+      m._2.map(r =>
+        Row.fromSeq(idx.toSeq.map(i => if (i < 0) null else r.get(i))))
+    }
+    (sch, align(a) ++ align(b))
   }
 
   private def writeSchema(s: SparkSession, dir: String, v: Int,
@@ -1733,24 +1784,24 @@ object GraftTable {
     * skips it.
     */
   private def landVersion(s: SparkSession, dir: String, v: Int,
-      key: String, df: DataFrame): Unit = {
+      key: String, df: DataFrame): ManifestIO.Data = {
     val vdir = s"$dir/v$v"
     // a full version is self-contained: no DV — and must not inherit
     // one from a crashed deleteVectored at this number
     fsOf(s, dir).delete(new HPath(s"$vdir/_graft_dv"), true)
     writeFiles(s, vdir, key, df)
-    fileStats(s, vdir, key, df.schema)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$vdir/_manifest")
+    val (sch, rows) = fileStats(s, vdir, key, df.schema)
+    val m = writeManifest(s, s"$vdir/_manifest", sch, rows)
     writeSchema(s, dir, v, df.schema)
+    m
   }
 
   /** Create a table at `dir` with `df` as committed version 0. */
   def create(s: SparkSession, dir: String, df: DataFrame,
       key: String = "doc_id"): GraftTable = {
-    landVersion(s, dir, 0, key, df)
-    commit(s, dir, 0, op = "CREATE")
-    new GraftTable(s, dir, key)
+    val t = new GraftTable(s, dir, key)
+    t.commitWith(0, landVersion(s, dir, 0, key, df), "CREATE")
+    t
   }
 
   /** Open an existing table (at least one committed version required). */

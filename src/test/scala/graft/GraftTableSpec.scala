@@ -826,4 +826,173 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
 
     Lake.deleteTree(java.nio.file.Paths.get(dir))
   }
+
+  // ── the driver-side manifest plane ───────────────────────────────────
+
+  /** Version v's manifest rows for the files the version itself wrote,
+    * against the scan-derived stats ([[GraftTable.scanStats]]) of the
+    * directories holding them: same columns, same types, same rows —
+    * paths compared verbatim, since DV rows and readers match on the
+    * exact `_metadata.file_path` spelling. `footers` says whether the
+    * footer statistics were usable for those files (else the scan was
+    * the fallback). An empty version is compared on its own directory.
+    */
+  private def assertManifestMatchesScan(t: GraftTable, dir: String,
+      v: Int, key: String, statCols: Seq[String] = Nil,
+      footers: Boolean = true): Unit = {
+    val m = t.manifest(v)
+    val own = m.filter(col("path").contains(s"/v$v/")).collect()
+    val dirs =
+      if (own.isEmpty) Seq(s"$dir/v$v")
+      else own.map(r => new org.apache.hadoop.fs.Path(
+        r.getAs[String]("path")).getParent.toString).distinct.toSeq
+    val schema = t.schemaAsOf(v)
+    val scanned = dirs.map(d =>
+      GraftTable.scanStats(spark, d, key, schema, statCols))
+    val (sch, _) = scanned.head
+    sch.fields.foreach(f => assert(m.schema(f.name).dataType == f.dataType,
+      s"v$v manifest column ${f.name}: ${m.schema(f.name).dataType} " +
+        s"vs scanned ${f.dataType}"))
+    val expected = scanned.flatMap(_._2.map(_.toSeq)).toSet
+    val actual = own.map(r => sch.fieldNames.toSeq.map(r.getAs[Any])).toSet
+    assert(actual == expected, s"v$v footer-derived manifest != scan")
+    dirs.foreach(d => assert(
+      graft.sources.ManifestIO.footerStats(spark, d, key, schema, statCols)
+        .isDefined == footers,
+      s"v$v: footer stats ${if (footers) "unusable" else "used"} for $d"))
+  }
+
+  test("footer-derived manifests equal the scan-derived ones") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_tbl_fs").toString
+    val t = GraftTable.create(spark, dir, docs)
+    assertManifestMatchesScan(t, dir, 0, "doc_id") // keyed full version
+    val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
+    assert(t.mergeScoped(Lake.cdcChangelog(t.read())
+      .filter(col("doc_id") < cut)) == 1)
+    assertManifestMatchesScan(t, dir, 1, "doc_id") // scoped patch
+    // evolved schema: the changelog ADDS a column
+    val evolved = t.read().filter(col("doc_id") < cut)
+      .withColumn("op", lit("U")).withColumn("score", col("doc_id") * 2)
+    assert(t.mergeScoped(evolved) == 2)
+    assert(t.schemaAsOf(2).fieldNames.contains("score"))
+    assertManifestMatchesScan(t, dir, 2, "doc_id")
+    // a mergeConcurrent token manifest (files under v3/d_<token>/)
+    val v3 = t.mergeConcurrent(t.read().filter(col("doc_id") >= cut * 4)
+      .withColumn("op", lit("U")).withColumn("text", lit("t")))
+    assert(t.manifest(v3).filter(col("path").contains("/d_t")).count() > 0)
+    assertManifestMatchesScan(t, dir, v3, "doc_id")
+    // empty version: every row deleted, zero-row files skipped
+    val v4 = t.delete(lit(true))
+    assert(t.manifest(v4).count() == 0 && t.readAsOf(v4).count() == 0)
+    assertManifestMatchesScan(t, dir, v4, "doc_id")
+    // the empty manifest still infers the manifest schema under Spark
+    assert(spark.read.parquet(s"$dir/v$v4/_manifest").schema ==
+      t.manifest(v4).schema)
+
+    // compact(zorderBy): key spans plus both clustering columns' spans
+    val li = Tables.lineitem(spark, sfDir)
+      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
+    val zdir = java.nio.file.Files.createTempDirectory("graft_tbl_fz").toString
+    val tz = GraftTable.create(spark, zdir, li, key = "l_orderkey")
+    assert(tz.compact(zorderBy = Seq("l_partkey", "l_suppkey")) == 1)
+    assertManifestMatchesScan(tz, zdir, 1, "l_orderkey",
+      statCols = Seq("l_partkey", "l_suppkey"))
+    Seq(dir, zdir).foreach(d => Lake.deleteTree(java.nio.file.Paths.get(d)))
+  }
+
+  test("a key without footer statistics falls back to the stats scan") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_tbl_ns").toString
+    val statsKey = "parquet.column.statistics.enabled"
+    spark.conf.set(statsKey, "false") // data files land without min/max
+    try {
+      val t = GraftTable.create(spark, dir, docs)
+      assertManifestMatchesScan(t, dir, 0, "doc_id", footers = false)
+      val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
+      t.mergeScoped(Lake.cdcChangelog(t.read()).filter(col("doc_id") < cut))
+      assertManifestMatchesScan(t, dir, 1, "doc_id", footers = false)
+      assert(collectSorted(t.readRange(0L, cut)) ==
+        collectSorted(t.read().filter(col("doc_id") < cut)))
+    } finally spark.conf.unset(statsKey)
+    // a DATE key: footer min/max are not used for it, and its manifest
+    // reads back through Spark's reader function on the driver
+    val ddir = java.nio.file.Files.createTempDirectory("graft_tbl_dk").toString
+    val dated = docs.withColumn("day",
+      date_add(lit("2020-01-01").cast("date"), col("doc_id").cast("int")))
+    val td = GraftTable.create(spark, ddir, dated, key = "day")
+    assertManifestMatchesScan(td, ddir, 0, "day", footers = false)
+    val cold = GraftTable.open(spark, ddir, "day")
+    val (m0, jobs) = jobsDuring(cold.manifest(0).collect())
+    assert(jobs == 0, s"cold date-keyed manifest(0) started $jobs job(s)")
+    assert(m0.map(_.toSeq).toSet ==
+      td.manifest(0).collect().map(_.toSeq).toSet)
+    assert(collectSorted(cold.read()) == collectSorted(dated))
+    Seq(dir, ddir).foreach(d => Lake.deleteTree(java.nio.file.Paths.get(d)))
+  }
+
+  test("a manifest written by a Spark job still reads, and the driver " +
+       "writer's manifests infer the same schema under Spark") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_tbl_om").toString
+    val t = GraftTable.create(spark, dir, docs)
+    val m0 = t.manifest(0)
+    val rows0 = m0.collect().map(_.toSeq).toSet
+    assert(spark.read.parquet(s"$dir/v0/_manifest").schema == m0.schema)
+    // rewrite v0's manifest the way it was written before the driver
+    // plane: a coalesced Spark write of the same rows
+    spark.createDataFrame(java.util.Arrays.asList(m0.collect(): _*),
+        m0.schema)
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/v0/_manifest")
+    val cold = GraftTable.open(spark, dir)
+    assert(cold.manifest(0).schema == m0.schema)
+    assert(cold.manifest(0).collect().map(_.toSeq).toSet == rows0,
+      "a Spark-written manifest read back differently")
+    assert(collectSorted(cold.readAsOf(0)) == collectSorted(docs))
+    // and a later version still patches on top of it (an identity
+    // upsert of the low keys: content unchanged, files rewritten)
+    val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
+    assert(cold.mergeScoped(cold.read().filter(col("doc_id") < cut)
+      .withColumn("op", lit("U"))) == 1)
+    assert(collectSorted(GraftTable.open(spark, dir).read()) ==
+      collectSorted(docs))
+    Lake.deleteTree(java.nio.file.Paths.get(dir))
+  }
+
+  test("manifest read, scoped manifest landing and history start no job") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_tbl_nj").toString
+    val t = GraftTable.create(spark, dir, docs)
+    val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
+    assert(t.mergeScoped(Lake.cdcChangelog(t.read())
+      .filter(col("doc_id") < cut)) == 1)
+
+    // a cold handle loads the manifest on the driver
+    val cold = GraftTable.open(spark, dir)
+    val (m1, coldJobs) = jobsDuring(cold.manifest(1).collect())
+    assert(coldJobs == 0, s"cold manifest(1) started $coldJobs job(s)")
+    assert(m1.nonEmpty)
+
+    // the scoped merge's manifest landing, re-run over v1's own files:
+    // footer stats, the carried-rows filter and the write, no job
+    val v0Paths = t.manifest(0).select("path").collect().map(_.getString(0))
+    val touched = v0Paths.filterNot(m1.map(_.getAs[String]("path")).toSet)
+    assert(touched.nonEmpty, "the scoped merge rewrote nothing")
+    val (landed, landJobs) = jobsDuring(
+      t.landPatchManifest(0, s"$dir/v1", touched.toSeq, t.schemaAsOf(1)))
+    assert(landJobs == 0, s"manifest landing started $landJobs job(s)")
+    assert(landed._2.map(_.toSeq).toSet == m1.map(_.toSeq).toSet)
+    assert(GraftTable.open(spark, dir).manifest(1).collect()
+      .map(_.toSeq).toSet == m1.map(_.toSeq).toSet)
+
+    // history folds the manifests on the driver (DV-free table)
+    val (h, histJobs) = jobsDuring(GraftTable.open(spark, dir).history()
+      .collect())
+    assert(histJobs == 0, s"history() started $histJobs job(s)")
+    assert(h.map(_.getAs[Long]("n_files")).toSeq ==
+      Seq(0, 1).map(v => t.manifest(v).count()))
+    assert(h(1).getAs[Long]("carried_files") ==
+      t.manifest(1).filter(!col("path").contains("/v1/")).count())
+    Lake.deleteTree(java.nio.file.Paths.get(dir))
+  }
 }

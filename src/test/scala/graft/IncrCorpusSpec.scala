@@ -241,4 +241,32 @@ class IncrCorpusSpec extends AnyFunSuite with SparkFixture {
     // and the content is still the full rebuild
     assert(lakeRows(base) == fullRebuild(baseRows ++ deltaRows))
   }
+
+  test("a tick that fails after launching its index writes leaves no " +
+       "write running, and its replay converges") {
+    def doc(i: Long) = (i, "src0",
+      "the " + ('a' to 'l').map(c => s"f$i$c$c").mkString(" "))
+    val baseRows = (1L to 30L).map(doc)
+    val deltaRows = (31L to 40L).map(doc) :+ ((41L, "src0", doc(5L)._3))
+    val base = newBase()
+    Pipeline.p02Build1(spark, docsDF(baseRows), base)
+    Pipeline.onTickStage = _ =>
+      throw new IllegalStateException("injected tick fault")
+    val e =
+      try intercept[IllegalStateException](
+        Pipeline.p02Tick(spark, base, docsDF(deltaRows)))
+      finally Pipeline.onTickStage = _ => ()
+    assert(e.getMessage == "injected tick fault")
+    // both early index writes finished before the failure surfaced, and
+    // the session runs no job of the failed attempt
+    Seq("postings", "bands").foreach(a => assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(base, a, "t1", "_SUCCESS")),
+      s"the failed tick's $a/t1 write was still running"))
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a job of the failed tick is still running")
+    Pipeline.p02Tick(spark, base, docsDF(deltaRows))
+    assert(lakeRows(base) == fullRebuild(baseRows ++ deltaRows),
+      "the replayed tick != full rebuild")
+  }
 }

@@ -27,4 +27,28 @@ object SparkFixture {
 trait SparkFixture {
   def spark: SparkSession = SparkFixture.spark
   def sfDir: String = SparkFixture.SfDir
+
+  /** `body`'s result and the number of Spark jobs started while it ran.
+    * The listener bus is drained before the counting listener registers
+    * and again before the count is read, since job events arrive
+    * asynchronously; the count covers every job of the session, so run
+    * nothing concurrently.
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusAccess.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(l)
+  }
 }
