@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -108,146 +107,70 @@ object GraftTypeChecks {
     check(name, exprs.forall(_.dataType == StringType), exprs)
 }
 
+/** Column builders for graft's closure-bound kernels. Each binds a model
+  * built on the driver (hyperplanes, centroids, a sorted hash list, a
+  * Bloom filter, BPE merges, an LM) into its expression, so nothing is
+  * installed in a function registry and two plans built at once can
+  * never see each other's binding. The fixed kernels are SQL functions
+  * injected by [[graft.GraftExtensions]].
+  */
 object GraftFunctions {
-  /** Register graft's native expressions with a session's function registry
-    * so plans can use them via `expr("cosine_sim(a, b)")`.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle3_hashes", exprs => ShingleHashes(exprs(0), 3), "built-in")
-    reg.createOrReplaceTempFunction(
-      "md5_shingle3_hashes", exprs => Md5ShingleHashes(exprs(0), 3), "built-in")
-    reg.createOrReplaceTempFunction(
-      "md5_shingle8_hashes", exprs => Md5ShingleHashes(exprs(0), 8), "built-in")
-    reg.createOrReplaceTempFunction(
-      "md5_span8_hashes", exprs => Md5SpanHashes(exprs(0), 8), "built-in")
-    reg.createOrReplaceTempFunction(
-      "md5_span3_hashes", exprs => Md5SpanHashes(exprs(0), 3), "built-in")
-    reg.createOrReplaceTempFunction(
-      "winnow4_positions", exprs => WinnowPositions(exprs(0), 4), "built-in")
-    reg.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyHash(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash60_md5", exprs => SimHash60Md5(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "char_jaccard", exprs => CharSetJaccard(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "codepoint_set", exprs => CodepointSet(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sorted_jaccard", exprs => SortedSetJaccard(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "lsh_band_keys", exprs => LshBandKeys(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "topk_by", exprs => TopKBy(exprs(0), exprs(1),
-        exprs(2).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"topk_by: k must be an integer literal, got $other")
-        }).toAggregateExpression(), "built-in")
-  }
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+  import org.apache.spark.unsafe.types.UTF8String
 
-  /** Register a sorted-long-set membership function (binary search over
-    * an array riding the closure — see [[InSortedLongs]]).
-    */
-  def registerInSortedLongs(spark: SparkSession, name: String,
-      values: Array[Long]): Unit = {
-    val sorted = values.clone().sorted
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => InSortedLongs(exprs(0), sorted), "built-in")
-  }
+  /** n-bit hyperplane sign code of a float vector — see [[SignCode]]. */
+  def signCode(vec: Column, planes: Array[Array[Double]]): Column =
+    column(SignCode(expression(vec), planes))
 
-  /** Register a fused count-of-members function bound to a sorted long
-    * list (sorted defensively): `name(array<long>)` -> BIGINT count of
-    * elements present in the list — see [[CountInSortedLongs]].
+  /** Nearest of the first `ncells` rows of a FLOAT anchor matrix — the
+    * cell quantizer of e04/e08/PQ (see [[LshKernels.nearestAnchor]]).
     */
-  def registerCountInSortedLongs(spark: SparkSession, name: String,
-      values: Array[Long]): Unit = {
-    val sorted = values.clone().sorted
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => CountInSortedLongs(exprs(0), sorted), "built-in")
-  }
+  def nearestAnchor(vec: Column, ncells: Column,
+      anchors: Array[Array[Float]]): Column =
+    column(NearestAnchor(expression(vec), expression(ncells), anchors))
 
-  /** Register a Bloom-filter membership probe bound to a built filter:
-    * `name(BIGINT)` -> BOOLEAN might-contain — see [[BloomContainsLong]].
+  /** BIGINT count of an array<long>'s elements present in `values`
+    * (sorted defensively) — see [[CountInSortedLongs]].
     */
-  /** Register a single-round BPE merge bound to one (a, b) symbol pair —
-    * `name(array<string>) -> array<string>`. Bound like
-    * [[registerInSortedLongs]] so corpus-derived symbols never pass
-    * through SQL-string quoting; resolution binds the pair at analysis
-    * time, so re-registering for the next round cannot disturb an
-    * already-analyzed plan.
+  def countInSortedLongs(arr: Column, values: Array[Long]): Column =
+    column(CountInSortedLongs(expression(arr), values.clone().sorted))
+
+  /** BOOLEAN might-contain of a BIGINT in a built Bloom filter — see
+    * [[BloomContainsLong]].
     */
-  def registerBpeMergeOnce(spark: SparkSession, name: String,
-      a: String, b: String): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BpeMergeOnce(exprs(0),
-        org.apache.spark.unsafe.types.UTF8String.fromString(a),
-        org.apache.spark.unsafe.types.UTF8String.fromString(b)), "built-in")
+  def bloomContainsLong(v: Column,
+      bloom: org.apache.spark.util.sketch.BloomFilter): Column =
+    column(BloomContainsLong(expression(v), bloom))
 
-  /** Register the full K-merge BPE fold bound to a trained merge list
-    * (rank order) — `name(array<string>) -> array<string>`, one codegen
-    * kernel call per word instead of K chained interpreted aggregates.
+  /** array<int> of the span starts whose md5 span-n hash is in `values`
+    * (sorted defensively) — see [[SpanHitStarts]].
     */
-  def registerBpeFold(spark: SparkSession, name: String,
-      merges: Seq[(String, String)]): Unit = {
-    val as = merges.map(m =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(m._1)).toArray
-    val bs = merges.map(m =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(m._2)).toArray
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BpeFold(exprs(0), as, bs), "built-in")
-  }
+  def spanHitStarts(text: Column, values: Array[Long], n: Int = 8): Column =
+    column(SpanHitStarts(expression(text), n, values.clone().sorted))
 
-  def registerBloomContainsLong(spark: SparkSession, name: String,
-      bloom: org.apache.spark.util.sketch.BloomFilter): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BloomContainsLong(exprs(0), bloom), "built-in")
-
-  /** Register the fused boiler-span probe bound to a span-hash list
-    * (sorted defensively, like [[registerInSortedLongs]]):
-    * `name(text)` -> array<int> of hit span starts.
+  /** One greedy BPE merge of adjacent (a, b) over array<string>. The
+    * symbols bind through the constructor, never through SQL quoting.
     */
-  def registerSpanHitStarts(spark: SparkSession, name: String,
-      values: Array[Long], n: Int = 8): Unit = {
-    val sorted = values.clone().sorted
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SpanHitStarts(exprs(0), n, sorted), "built-in")
-  }
+  def bpeMergeOnce(sym: Column, a: String, b: String): Column =
+    column(BpeMergeOnce(expression(sym),
+      UTF8String.fromString(a), UTF8String.fromString(b)))
 
-  /** Register d43/s24's LM scorer bound to a trained model's arrays:
-    * `name(text)` -> BIGINT exact NLL sum in integer micros — see
-    * [[LmNllMicros]]. Caller passes PRE-SORTED parallel key/value
-    * arrays (sorting here would break key↔value alignment).
+  /** The full K-merge BPE fold bound to a trained merge list (rank
+    * order): one codegen kernel call per word — see [[BpeFold]].
     */
-  def registerLmNllMicros(spark: SparkSession, name: String,
-      bigramKeys: Array[Long], bigramMicros: Array[Long],
-      ctxKeys: Array[Long], ctxMicros: Array[Long],
-      dfltMicros: Long): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => LmNllMicros(exprs(0), bigramKeys, bigramMicros,
-        ctxKeys, ctxMicros, dfltMicros), "built-in")
+  def bpeFold(sym: Column, merges: Seq[(String, String)]): Column =
+    column(BpeFold(expression(sym),
+      merges.map(m => UTF8String.fromString(m._1)).toArray,
+      merges.map(m => UTF8String.fromString(m._2)).toArray))
 
-  /** Register a hyperplane sign-code function bound to a plane matrix. */
-  def registerSignCode(spark: SparkSession, name: String,
-      planes: Array[Array[Double]]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SignCode(exprs(0), planes), "built-in")
-
-  /** Register a nearest-anchor assignment function bound to a FLOAT
-    * anchor matrix: `name(embedding, ncells)` — e04/e04_large's cell
-    * quantizer (see [[LshKernels.nearestAnchor]]).
+  /** d43/s24's LM scorer: BIGINT exact NLL sum in integer micros — see
+    * [[LmNllMicros]]. The caller passes PRE-SORTED parallel key/value
+    * arrays (sorting here would break key-value alignment).
     */
-  def registerNearestAnchor(spark: SparkSession, name: String,
-      planes: Array[Array[Float]]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => NearestAnchor(exprs(0), exprs(1), planes), "built-in")
+  def lmNllMicros(text: Column, bigramKeys: Array[Long],
+      bigramMicros: Array[Long], ctxKeys: Array[Long],
+      ctxMicros: Array[Long], dfltMicros: Long): Column =
+    column(LmNllMicros(expression(text), bigramKeys, bigramMicros,
+      ctxKeys, ctxMicros, dfltMicros))
 }

@@ -471,8 +471,7 @@ case class WinnowPositions(child: Expression, w: Int)
 /** Codegen'd membership test against a SORTED long array riding the
   * closure (binary search — the boiler-span list a stream-side scrub
   * probes per span must not cost a linear scan per row). The caller
-  * sorts; an unsorted array would silently return wrong answers, so
-  * the registration helper sorts defensively.
+  * sorts; an unsorted array would silently return wrong answers.
   */
 case class InSortedLongs(child: Expression, sorted: Array[Long])
     extends UnaryExpression {
@@ -587,8 +586,8 @@ case class PolyHash(child: Expression) extends UnaryExpression {
   * a per-doc "shared shingles vs the benchmark set" tally is ONE
   * codegen'd kernel call per row instead of an interpreted
   * filter-lambda chain (the same HOF trap [[SpanHitStarts]] closed for
-  * the boiler probe). Caller sorts; the registration helper sorts
-  * defensively.
+  * the boiler probe). Caller sorts; the Column builder
+  * ([[GraftFunctions.countInSortedLongs]]) sorts defensively.
   */
 case class CountInSortedLongs(child: Expression, sorted: Array[Long])
     extends UnaryExpression {

@@ -50,7 +50,7 @@ final class TopKBuffer(val k: Int) {
   * brute-force k-NN over a 100-TB corpus never range-sorts or windows the
   * full scored set; the shuffle is k rows per (group, map task).
   *
-  * Usage (registered as `topk_by(score, id, k)`): returns
+  * Usage (injected by [[graft.GraftExtensions]] as `topk_by(score, id, k)`): returns
   * `array<struct<score double, id bigint>>` sorted best-first.
   */
 case class TopKBy(

@@ -105,7 +105,7 @@ object LshKernels {
     * both of which split into unicode code points.
     */
   def charJaccard(a: UTF8String, b: UTF8String): Double =
-    // single implementation: the registered char_jaccard SQL function and
+    // single implementation: the injected char_jaccard SQL function and
     // the codepoint_set + sorted_jaccard operator path must stay
     // bit-consistent (the d04 oracle depends on it)
     sortedJaccard(codepointSet(a), codepointSet(b))

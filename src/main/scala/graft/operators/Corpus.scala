@@ -185,7 +185,6 @@ object Corpus {
     // oracle alike.
     "d39_stratified_sample" -> OpDef.sql(
       (s, d) => {
-        graft.expressions.GraftFunctions.register(s)
         val k = 20
         Tables.documents(s, d)
           .withColumn("b", Dedup.idBucket50(col("doc_id")))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.OpDef
+import graft.expressions.GraftFunctions
 import graft.sources.Tables
 
 /** Deduplication family over `documents`:
@@ -194,7 +195,6 @@ object Dedup {
 
   private[graft] def d03Body(s: SparkSession, d: String, wideAt: Long,
       densePairsPerDoc: Long): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val sp = s
     import sp.implicits._
     val sigs = persistTracked("d03_sigs", Tables.documents(s, d)
@@ -277,7 +277,6 @@ object Dedup {
     * semantics provable). Probe/spec path, not a gate entry.
     */
   private[graft] def d03DenseBody(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val sigs = persistTracked("d03dense_sigs", Tables.documents(s, d)
       .select(col("doc_id"), expr("simhash60_md5(text)").as("simhash")))
     val buckets = simhashBuckets(sigs, DenseBlockWidth, DenseChoose)
@@ -355,8 +354,7 @@ object Dedup {
     *
     * An empty shingle set yields null band_sig — such rows fall out of
     * the equality probe exactly as the batch path's len(hs) > 0 filter
-    * drops them. (Callers register graft functions already; the binding
-    * is parameterless, so the fixed registry name cannot race.)
+    * drops them. `lsh_band_keys` is injected by [[graft.GraftExtensions]].
     */
   private[graft] def bandArray(mh: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     call_function("lsh_band_keys", mh)
@@ -507,7 +505,6 @@ object Dedup {
     */
   private[graft] def minhashPairsFrom(s: SparkSession, docsIn: DataFrame,
       name: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     // Materialized once: the shingle table feeds the signature path and
     // both sides of the verify join (at 100 TB this is the signature
     // table you'd persist to the lake between pipeline stages).
@@ -563,7 +560,6 @@ object Dedup {
   private[graft] def d24ArtifactsFrom(s: SparkSession, docsIn: DataFrame,
       name: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    graft.expressions.GraftFunctions.register(s)
     val docs = docsIn
       .withColumn("split", splitOf(splitBucket(col("doc_id"))))
       .withColumn("fp", textFp)
@@ -1397,7 +1393,6 @@ object Dedup {
     // the shingle hash — same plan minus the hint.
     "d16_decontaminate" -> OpDef.sql(
       (s, d) => {
-        graft.expressions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
           .withColumn("split", splitOf(splitBucket(col("doc_id"))))
           .withColumn("mh", expr("md5_shingle3_hashes(text)"))
@@ -1438,7 +1433,6 @@ object Dedup {
     // gate overlap rates (BloomDecontamSpec measures it).
     "d30_bloom_decontam" -> OpDef.sql(
       (s, d) => {
-        graft.expressions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
           .withColumn("split", splitOf(splitBucket(col("doc_id"))))
           .withColumn("mh", expr("md5_shingle3_hashes(text)"))
@@ -1450,12 +1444,10 @@ object Dedup {
         // the data; production persists the bits next to the benchmark
         // suite and rebuilds only when the suite changes).
         val bloom = bench.stat.bloomFilter("h", math.max(1L, bench.count()), 0.01)
-        graft.expressions.GraftFunctions.registerBloomContainsLong(
-          s, "bench_might_contain", bloom)
         docs.filter(col("split") === "train")
           .select(col("doc_id"), size(col("mh")).cast("bigint").as("n_shingles"),
                   explode(col("mh")).as("h"))
-          .filter(expr("bench_might_contain(h)"))
+          .filter(GraftFunctions.bloomContainsLong(col("h"), bloom))
           .join(bench.hint("shuffle_hash"), Seq("h"), "inner")
           .groupBy("doc_id", "n_shingles")
           .agg(count(lit(1)).as("n_shared"))
@@ -1533,16 +1525,13 @@ object Dedup {
     * the boiler-lake join path instead).
     */
   private[graft] def benchShingleList(s: SparkSession, d: String): Array[Long] =
-    benchShingleListFrom(s,
-      Tables.documents(s, d)
+    benchShingleListFrom(Tables.documents(s, d)
         .filter(splitOf(splitBucket(col("doc_id"))) === "test"))
 
   /** Same model from an arbitrary benchmark-docs frame (the parity
     * harness feeds hand corpora through the identical definition).
     */
-  private[graft] def benchShingleListFrom(s: SparkSession,
-      benchDocs: DataFrame): Array[Long] = {
-    graft.expressions.GraftFunctions.register(s)
+  private[graft] def benchShingleListFrom(benchDocs: DataFrame): Array[Long] = {
     benchDocs
       .select(explode(expr("md5_shingle3_hashes(text)")).as("h"))
       .distinct()
@@ -1558,16 +1547,13 @@ object Dedup {
     * intake firehose. Shared by the s15 gate entry and the parity
     * harness so both exercise one definition.
     */
-  private[graft] def decontamVerdicts(s: SparkSession, docs: DataFrame,
+  private[graft] def decontamVerdicts(docs: DataFrame,
       bench: Array[Long]): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
-    graft.expressions.GraftFunctions.registerCountInSortedLongs(
-      s, "bench_shared_count", bench)
     docs
       .select(col("doc_id"), expr("md5_shingle3_hashes(text)").as("mh"))
       .filter(size(col("mh")) > 0)
       .select(col("doc_id"), size(col("mh")).cast("bigint").as("n_shingles"),
-              expr("bench_shared_count(mh)").as("n_shared"))
+              GraftFunctions.countInSortedLongs(col("mh"), bench).as("n_shared"))
       .filter(col("n_shared").cast("double") / col("n_shingles") >= 0.2)
       .select(col("doc_id"), col("n_shingles"), col("n_shared"),
               round(col("n_shared").cast("double") / col("n_shingles")
@@ -1656,7 +1642,7 @@ object Dedup {
     */
   private[graft] def boilerSpanHashesFrom(s: SparkSession,
       docs: DataFrame): Array[Long] =
-    boilerSpanTable(s, docs).collect().map(_.getLong(0))
+    boilerSpanTable(docs).collect().map(_.getLong(0))
 
   /** The boiler-span model as a FRAME (h: long), the form that stays on
     * the cluster: span doc-frequency (one combinable countDistinct
@@ -1665,9 +1651,7 @@ object Dedup {
     * [[writeBoilerLake]] persists it for the join-path probe that needs
     * no driver-resident copy at all.
     */
-  private[graft] def boilerSpanTable(s: SparkSession,
-      docs: DataFrame): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
+  private[graft] def boilerSpanTable(docs: DataFrame): DataFrame = {
     docs
       .select(col("doc_id"), explode(expr("md5_span8_hashes(text)")).as("h"))
       .groupBy("h").agg(countDistinct(col("doc_id")).as("df"))
@@ -1687,7 +1671,7 @@ object Dedup {
     */
   private[graft] def writeBoilerLake(s: SparkSession, docs: DataFrame,
       path: String): Unit =
-    boilerSpanTable(s, docs)
+    boilerSpanTable(docs)
       .repartitionByRange(col("h")).sortWithinPartitions("h")
       .write.mode("overwrite").parquet(path)
 
@@ -1719,9 +1703,8 @@ object Dedup {
     * longs), shuffle join above — the form with no driver-resident or
     * per-task copy of the list at all.
     */
-  private[graft] def scrubViaLake(s: SparkSession, docs: DataFrame,
+  private[graft] def scrubViaLake(docs: DataFrame,
       boiler: DataFrame, broadcastBoiler: Boolean): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val spanSide = if (broadcastBoiler) broadcast(boiler) else boiler
     val hits = docs
       .select(col("doc_id"),
@@ -1742,13 +1725,10 @@ object Dedup {
     * Untouched rows pass through verbatim, d29's convention; on the
     * corpus the list was built from, the output IS d29's.
     */
-  private[graft] def scrubAgainst(s: SparkSession, docs: DataFrame,
+  private[graft] def scrubAgainst(docs: DataFrame,
       boiler: Array[Long]): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
-    graft.expressions.GraftFunctions.registerSpanHitStarts(
-      s, "graft_boiler_hits", boiler)
     rebuildScrubbed(docs
-      .withColumn("hit_is", expr("graft_boiler_hits(text)")))
+      .withColumn("hit_is", GraftFunctions.spanHitStarts(col("text"), boiler)))
   }
 
   /** The in-row rebuild shared by BOTH probe forms (collected-array
@@ -1893,7 +1873,6 @@ object Dedup {
     // results) drops most pairs before the scan.
     "d04_char_jaccard" -> OpDef.sql(
       (s, d) => {
-        graft.expressions.GraftFunctions.register(s)
         val docs = withLenWidth(s, d, CharBandBase, CharBandMin)
           .withColumn("len_band", (length(col("text")) / col("len_w")).cast("int"))
           .withColumn("chars", expr("codepoint_set(text)"))
@@ -1933,7 +1912,6 @@ object Dedup {
     // sets in practice, and the blocking bounds the pair count by design.
     "d10_ngram_jaccard" -> OpDef.sql(
       (s, d) => {
-        graft.expressions.GraftFunctions.register(s)
         // same density-derived band width as d04 (wider base: shingle
         // sets tolerate more length drift than codepoint sets at their
         // respective thresholds)
@@ -2005,7 +1983,6 @@ object Dedup {
     // hash-oracle-checked, not rows-only.
     "d08_fingerprint" -> OpDef.sql(
       (s, d) => {
-        graft.expressions.GraftFunctions.register(s)
         Tables.documents(s, d)
           .withColumn("mh", expr("md5_shingle3_hashes(text)"))
           .filter(size(col("mh")) > 0)
@@ -2087,7 +2064,6 @@ object Dedup {
     // pairs are invisible to BOTH).
     "d41_containment_dedup" -> OpDef.sql(
       (s, d) => {
-        graft.expressions.GraftFunctions.register(s)
         val sh = persistTracked("d41_sh",
           Tables.documents(s, d)
             .withColumn("hs", expr("md5_span3_hashes(text)"))
@@ -2254,7 +2230,6 @@ object Dedup {
 
     "d37_winnow" -> OpDef.sql(
       (s, d) => {
-        graft.expressions.GraftFunctions.register(s)
         Tables.documents(s, d)
           .withColumn("hs", expr("md5_span3_hashes(text)"))
           .filter(size(col("hs")) > 0)
@@ -2304,7 +2279,6 @@ object Dedup {
     // runs as ordinary combinable aggregations.
     "d27_span_dedup" -> OpDef.sql(
       (s, d) => {
-        graft.expressions.GraftFunctions.register(s)
         val sh = persistTracked("d27_spans",
           Tables.documents(s, d)
             .withColumn("hs", expr("md5_shingle8_hashes(text)"))
@@ -2364,7 +2338,6 @@ object Dedup {
     // thousands).
     "d29_boilerplate_scrub" -> OpDef.sql(
       (s, d) => {
-        graft.expressions.GraftFunctions.register(s)
         // the kernel splits on \s+ exactly like the ws column, so span
         // index k covers words k..k+7 of ws; the md5-60-bit fold is the
         // engine-shared convention (saltedBucket, d08/d27)

@@ -1766,14 +1766,11 @@ object Lake {
     // mid-commit would lose a TB-scale touched-partition set where the
     // parquet stage is recoverable.
     val staged = stageCutAuto(s, merged, s"$stageDir/cdc_staged")
-    val before = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try staged.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
-      .parquet(snapDir)
-    finally before match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // dynamic overwrite as a per-write option: the shared session's conf
+    // stays untouched, so concurrent writers never see this write's mode
+    staged.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCols: _*).parquet(snapDir)
     val stillThere = staged.select(partCols.map(col): _*).distinct()
       .collect().map(r => partCols.indices.map(r.getString).toSeq).toSet
     touched.filterNot(stillThere).foreach { t =>

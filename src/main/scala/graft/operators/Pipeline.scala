@@ -48,7 +48,6 @@ object Pipeline {
     */
   private[graft] def p01Build(s: SparkSession, docsIn: DataFrame,
       family: String, stamp: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     // 1 — quality gate: one codegen'd scan, keep-filtered, persisted
     // (every later stage reads the survivors)
     val q = graft.Caching.persistTracked(s"${family}_q",
@@ -239,8 +238,7 @@ object Pipeline {
     * hashes (+count), token count. One text scan; after this, text is
     * never consulted again.
     */
-  private def p02Derive(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
+  private def p02Derive(docs: DataFrame): DataFrame = {
     TextAnalysis.withQualityKeep(docs).filter(col("keep"))
       .select(col("doc_id"), col("source"), col("text"))
       .withColumn("split", Dedup.splitOf(Dedup.splitBucket(col("doc_id"))))
@@ -323,7 +321,7 @@ object Pipeline {
     */
   private[graft] def p02Build1(s: SparkSession, docsIn: DataFrame,
       base: String): Unit = {
-    val q = graft.Caching.persistTracked("p02_q", p02Derive(s, docsIn))
+    val q = graft.Caching.persistTracked("p02_q", p02Derive(docsIn))
     val shing = q.filter(col("n_sh") > 0).select("doc_id", "mh")
     // the band index lands on disk FIRST and the self-join reads it
     // back: the 32-min minhash aggregation runs once instead of once
@@ -470,7 +468,7 @@ object Pipeline {
       .map(Await.result(_, Duration.Inf))
     val Seq(state, postings, bandIdx, bench) = openF
     val dq = graft.Caching.persistTracked("p02_dq",
-      p02Derive(s, deltaDocs))
+      p02Derive(deltaDocs))
 
     // ---- exact keepers: only fps present in the delta can change
     val dFp = dq.groupBy("fp").agg(min("doc_id").as("d_min"))

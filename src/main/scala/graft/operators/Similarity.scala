@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.OpDef
@@ -18,7 +18,6 @@ import graft.expressions.GraftFunctions
   */
 object Similarity {
 
-  private val NumPlanes = 8
   private[graft] val NumQueries = 5
   private[graft] val TopK = 10
   // e13 range-search geometry: radius tau over a wider query slice than
@@ -226,24 +225,6 @@ object Similarity {
   // reproduced literally in the DuckDB oracle SQL).
   private[operators] def planes(numPlanes: Int): Array[Array[Double]] =
     graft.expressions.LshKernels.planes(numPlanes)
-  private val Planes: Array[Array[Double]] = planes(NumPlanes)
-
-  /** n-bit sign code: bit j = sign(plane_j . vec), via the codegen'd
-    * [[graft.expressions.SignCode]] kernel. Each dot product is a
-    * sequential ascending-index fold in double, so bucket assignment is
-    * bit-identical to DuckDB's `list_dot_product` in the oracle (the
-    * interpreted aggregate/zip_with form computed the same value ~50x
-    * slower).
-    */
-  private[operators] def signCode(s: SparkSession, vecCol: String,
-      ps: Array[Array[Double]] = Planes): org.apache.spark.sql.Column = {
-    val name = s"sign_code_${ps.length}"
-    // GraftExtensions may already have injected this function at session
-    // build time with identical planes; only register when it's absent
-    if (!s.catalog.functionExists(name))
-      GraftFunctions.registerSignCode(s, name, ps)
-    expr(s"$name($vecCol)")
-  }
 
   /** The same sign code as a DuckDB SQL expression (for oracles). */
   private[operators] def signCodeSql(vecSql: String,
@@ -300,13 +281,18 @@ object Similarity {
     */
   private[graft] val E02TargetBucket = 512L
 
-  /** Register band `t`'s full-width sign code (idempotent per session). */
-  private def bandCodeFn(s: SparkSession, t: Int): String = {
-    val name = s"sign_code_d09_b$t"
-    if (!s.catalog.functionExists(name))
-      GraftFunctions.registerSignCode(s, name, bandPlanes(t))
-    name
-  }
+  private lazy val BandPlaneSets: IndexedSeq[Array[Array[Double]]] =
+    (0 until NumDupBands).map(bandPlanes)
+
+  /** Band `t`'s sign code of `embedding` via the codegen'd
+    * [[graft.expressions.SignCode]] kernel, masked to the active width
+    * `bits`. Each dot product is a sequential ascending-index fold in
+    * double, so bucket assignment is bit-identical to DuckDB's
+    * `list_dot_product` in the oracle.
+    */
+  private def bandCode(t: Int): Column =
+    GraftFunctions.signCode(col("embedding"), BandPlaneSets(t))
+      .bitwiseAND(expr("shiftleft(1, bits) - 1"))
 
   /** d09's verified near-dup pairs (a_id < b_id, sim >= 0.35) — the body
     * of the d09 gate entry, shared with e06's cluster canonicalization
@@ -318,7 +304,7 @@ object Similarity {
     * `bits` from [[bandBitsCase]] on a broadcast one-row corpus count.
     * Shared by d09/e06's pair builder and e02's multiprobe ANN.
     */
-  private[graft] def bandedCodes(s: SparkSession, emb: DataFrame,
+  private[graft] def bandedCodes(emb: DataFrame,
       target: Long = TargetBucket, countOver: DataFrame = null,
       fixedBits: Option[Int] = None): DataFrame = {
     // one-row broadcast: every row learns the corpus count, and the
@@ -339,9 +325,7 @@ object Similarity {
         .withColumn("bits", expr(bandBitsCase("corpus_n", target)))
     }
     val bandStructs = (0 until NumDupBands).map { t =>
-      val fn = bandCodeFn(s, t)
-      struct(lit(t).as("band"),
-             expr(s"$fn(embedding) & (shiftleft(1, bits) - 1)").as("bcode"))
+      struct(lit(t).as("band"), bandCode(t).as("bcode"))
     }
     sized
       .select(col("vec_id"), col("bits"), explode(array(bandStructs: _*)).as("bb"))
@@ -350,9 +334,8 @@ object Similarity {
   }
 
   private[graft] def embedDupPairs(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
-    val bands = bandedCodes(s, emb).drop("bits")
+    val bands = bandedCodes(emb).drop("bits")
     val a = bands.toDF("a_id", "band", "bcode")
     val b = bands.toDF("b_id", "band", "bcode")
     val cands = a.join(b, Seq("band", "bcode"))
@@ -424,8 +407,8 @@ object Similarity {
     * persisted under "e04L_assigned" — factored out so SemProbe can time
     * assignment separately from the in-cell pair join.
     */
-  private[graft] def e04LargeAssigned(s: SparkSession,
-      emb: DataFrame, level2Base: Long, corpusN: Long): DataFrame = {
+  private[graft] def e04LargeAssigned(emb: DataFrame, level2Base: Long,
+      corpusN: Long): DataFrame = {
     // both levels are the codegen'd per-row argmax (NearestAnchor) over
     // their float anchor matrices — the broadcast-explode-max_by
     // formulation this replaced cost ~80 s of row traffic at 200k x 256
@@ -434,10 +417,6 @@ object Similarity {
     // (metadata-only job), folded through the Scala ladder twins —
     // spec-pinned equal to the oracle's CASE text — instead of a second
     // in-plan one-row broadcast computing the same values.
-    GraftFunctions.registerNearestAnchor(s, "sem_cell",
-      planes(MaxSemCells).map(_.map(_.toFloat)))
-    GraftFunctions.registerNearestAnchor(s, "sem_cell2",
-      planes2.map(_.map(_.toFloat)))
     val sized = emb
       .withColumn("ncells", lit(semCells(corpusN)))
       .withColumn("ncells2", lit(semCells2(corpusN, level2Base)))
@@ -445,14 +424,15 @@ object Similarity {
     // survivor anti-join read it (same discipline as e04's assignment)
     graft.Caching.persistTracked("e04L_assigned",
       sized.select(col("vec_id"),
-        expr("sem_cell(embedding, ncells)").as("cell"),
-        expr("sem_cell2(embedding, ncells2)").as("cell2"),
+        GraftFunctions.nearestAnchor(col("embedding"), col("ncells"),
+          planes(MaxSemCells).map(_.map(_.toFloat))).as("cell"),
+        GraftFunctions.nearestAnchor(col("embedding"), col("ncells2"),
+          planes2.map(_.map(_.toFloat))).as("cell2"),
         col("embedding")))
   }
 
   private[graft] def e04LargeBody(s: SparkSession, d: String,
       level2Base: Long = SemLevel2At): DataFrame = {
-    GraftFunctions.register(s)
     val sp = s
     import sp.implicits._
     val emb = Tables.embeddings(s, d)
@@ -464,7 +444,7 @@ object Similarity {
       level2Base * MaxSemCells,
       "a third anchor level (same construction) or e03's trained quantizer")
       .foreach(System.err.println)
-    val assigned = e04LargeAssigned(s, emb, level2Base, corpusN)
+    val assigned = e04LargeAssigned(emb, level2Base, corpusN)
     val a = assigned.select(col("cell"), col("cell2"),
                             col("vec_id").as("a_id"), col("embedding").as("a_vec"))
     val b = assigned.select(col("cell"), col("cell2"),
@@ -539,26 +519,24 @@ object Similarity {
     */
   private[graft] val lloydRuns = new java.util.concurrent.atomic.AtomicLong
 
-  private def trainLloyd(s: SparkSession, vecs: DataFrame, k: Int,
-      seedOffset: Int, fnPrefix: String): Array[Array[Float]] =
-    trainLloydSeeded(s, vecs, k,
+  private def trainLloyd(vecs: DataFrame, k: Int,
+      seedOffset: Int): Array[Array[Float]] =
+    trainLloydSeeded(vecs, k,
       planes(seedOffset + k).slice(seedOffset, seedOffset + k)
-        .map(_.map(_.toFloat)), fnPrefix)
+        .map(_.map(_.toFloat)))
 
   /** [[trainLloyd]] with an explicit seed matrix — the general form the
     * PQ sub-codebooks need (their seeds live in a SUBSPACE, so the
     * full-dim plane family can't seed them directly; e11 slices it).
     */
-  private[graft] def trainLloydSeeded(s: SparkSession, vecs: DataFrame,
-      k: Int, seed: Array[Array[Float]],
-      fnPrefix: String): Array[Array[Float]] = {
+  private[graft] def trainLloydSeeded(vecs: DataFrame,
+      k: Int, seed: Array[Array[Float]]): Array[Array[Float]] = {
     lloydRuns.incrementAndGet()
     var centroids: Array[Array[Float]] = seed
     for (it <- 0 until LloydIters) {
-      val fn = s"${fnPrefix}_it$it"
-      GraftFunctions.registerNearestAnchor(s, fn, centroids)
       val means = vecs
-        .select(expr(s"$fn(vec, $k)").as("cell"), posexplode(col("vec")))
+        .select(GraftFunctions.nearestAnchor(col("vec"), lit(k), centroids)
+                  .as("cell"), posexplode(col("vec")))
         .groupBy("cell", "pos").agg(avg("col").as("v"))
         .groupBy("cell")
         .agg(expr("transform(array_sort(collect_list(named_struct(" +
@@ -603,19 +581,18 @@ object Similarity {
       else e08SamplePred(math.min(1000000L, trainTarget * 1000000L / n + 1))
     val sample = graft.Caching.persistTracked("e08_train_sample",
       emb.filter(samplePred).select(col("vec_id"), col("embedding")))
-    val c1 = trainLloyd(s,
-      sample.select(col("vec_id"), col("embedding").as("vec")),
-      k1, 0, "e08_l1")
-    GraftFunctions.registerNearestAnchor(s, "e08_cell1", c1)
+    val c1 = trainLloyd(
+      sample.select(col("vec_id"), col("embedding").as("vec")), k1, 0)
     val cent1 = c1.zipWithIndex.map { case (a, i) => (i, a.toSeq) }
       .toSeq.toDF("cell", "c1vec")
-    val c2 = trainLloyd(s,
+    val c2 = trainLloyd(
       sample
-        .withColumn("cell", expr(s"e08_cell1(embedding, $k1)"))
+        .withColumn("cell",
+          GraftFunctions.nearestAnchor(col("embedding"), lit(k1), c1))
         .join(broadcast(cent1), "cell")
         .withColumn("resid", expr("zip_with(embedding, c1vec, (x, y) -> x - y)"))
         .select(col("vec_id"), col("resid").as("vec")),
-      k2, k1, "e08_l2")
+      k2, k1)
     E08Model(k1, k2, c1, c2)
   }
 
@@ -658,15 +635,15 @@ object Similarity {
       emb: DataFrame): DataFrame = {
     val sp = s
     import sp.implicits._
-    GraftFunctions.registerNearestAnchor(s, "e08_cell1", m.c1)
-    GraftFunctions.registerNearestAnchor(s, "e08_cell2", m.c2)
     val cent1 = m.c1.zipWithIndex.map { case (a, i) => (i, a.toSeq) }
       .toSeq.toDF("cell", "c1vec")
     emb
-      .withColumn("cell", expr(s"e08_cell1(embedding, ${m.k1})"))
+      .withColumn("cell",
+        GraftFunctions.nearestAnchor(col("embedding"), lit(m.k1), m.c1))
       .join(broadcast(cent1), "cell")
       .withColumn("resid", expr("zip_with(embedding, c1vec, (x, y) -> x - y)"))
-      .withColumn("cell2", expr(s"e08_cell2(resid, ${m.k2})"))
+      .withColumn("cell2",
+        GraftFunctions.nearestAnchor(col("resid"), lit(m.k2), m.c2))
       .select("vec_id", "cell", "cell2", "embedding")
   }
 
@@ -724,17 +701,17 @@ object Similarity {
     * deterministic plane family restricted to that subspace's
     * coordinates (disjoint seeds per subspace by construction).
     */
-  private[graft] def pqTrain(s: SparkSession, emb: DataFrame): PqModel = {
+  private[graft] def pqTrain(emb: DataFrame): PqModel = {
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     require(dim % PqM == 0, s"PQ subspaces need dim % $PqM == 0, got $dim")
     val sub = dim / PqM
     val books = Array.tabulate(PqM) { i =>
       val seed = planes(PqK).map(p =>
         p.slice(i * sub, (i + 1) * sub).map(_.toFloat))
-      trainLloydSeeded(s,
+      trainLloydSeeded(
         emb.select(col("vec_id"),
           expr(s"slice(embedding, ${i * sub + 1}, $sub)").as("vec")),
-        PqK, seed, s"pq_sub$i")
+        PqK, seed)
     }
     PqModel(PqM, PqK, sub, books, emb.count())
   }
@@ -763,13 +740,11 @@ object Similarity {
     * over the codebook-norms literal — the ADC cosine denominator
     * without ever reconstructing x̂.
     */
-  private[graft] def pqEncode(s: SparkSession, m: PqModel,
+  private[graft] def pqEncode(m: PqModel,
       emb: DataFrame): DataFrame = {
-    for (i <- 0 until m.m)
-      GraftFunctions.registerNearestAnchor(s, s"pq_code$i", m.books(i))
     val coded = (0 until m.m).foldLeft(emb) { (df, i) =>
-      df.withColumn(s"code$i", expr(
-        s"pq_code$i(slice(embedding, ${i * m.sub + 1}, ${m.sub}), ${m.k})"))
+      df.withColumn(s"code$i", GraftFunctions.nearestAnchor(
+        slice(col("embedding"), i * m.sub + 1, m.sub), lit(m.k), m.books(i)))
     }
     val n2Expr = (0 until m.m).map { i =>
       val arr = m.books(i).map(c => c.map(x => x.toDouble * x).sum)
@@ -820,7 +795,6 @@ object Similarity {
 
   private[graft] def pqShortlist(s: SparkSession, m: PqModel,
       codes: DataFrame, queries: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
     val qt = pqQueryLut(m, queries)
     codes.join(broadcast(qt), col("vec_id") =!= col("q_id"))
       .withColumn("adc", adcScore(m))
@@ -843,7 +817,6 @@ object Similarity {
   private[graft] def ivfPqShortlist(s: SparkSession, m: PqModel,
       cellCodes: DataFrame, centroids: DataFrame,
       queries: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
     val qt = pqQueryLut(m, e03ProbeCells(queries, centroids))
     // qt: (q_id, cell, q_norm, t0..t{M-1})
     cellCodes.join(broadcast(qt), Seq("cell"))
@@ -945,7 +918,6 @@ object Similarity {
     */
   private[graft] def e03TrainCentroids(s: SparkSession,
       emb: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
     val sp = s
     import sp.implicits._
     // deterministic tie-break on equal similarity: prefer lower cell id
@@ -1002,7 +974,6 @@ object Similarity {
 
   private[graft] def e03Search(s: SparkSession, postings: DataFrame,
       centroids: DataFrame, queries: DataFrame, k: Int = TopK): DataFrame = {
-    GraftFunctions.register(s)
     val probes = e03ProbeCells(queries, centroids)
     postings
       .join(broadcast(probes), Seq("cell"))
@@ -1030,7 +1001,6 @@ object Similarity {
     */
   private[graft] def e10VerdictsWith(s: SparkSession, m: E08Model,
       idxAssigned: DataFrame, arriving: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
     e08AssignWith(s, m, arriving)
       .join(idxAssigned, Seq("cell", "cell2"), "left")
       .withColumn("sim_raw",
@@ -1061,7 +1031,6 @@ object Similarity {
     */
   private[graft] def knnInt8Search(s: SparkSession, deq: DataFrame,
       queries: DataFrame, k: Int = TopK): DataFrame = {
-    GraftFunctions.register(s)
     deq.join(broadcast(queries), col("vec_id") =!= col("q_id"))
       .withColumn("sim",
         round(expr("cosine_sim(dvec, q_vec)") + lit(1e-10), 6))
@@ -1118,7 +1087,6 @@ object Similarity {
     */
   private[graft] def hybridSearchIds(s: SparkSession, d: String,
       qids: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     val emb = Tables.embeddings(s, d)
     // lexical leg — d32's BM25 statistics. The corpus-side model
@@ -1191,7 +1159,6 @@ object Similarity {
 
   private[graft] def knnBruteSearch(s: SparkSession, emb: DataFrame,
       queries: DataFrame, k: Int = TopK): DataFrame = {
-    GraftFunctions.register(s)
     emb.join(broadcast(queries), col("vec_id") =!= col("q_id"))
       .withColumn("sim",
         round(expr("cosine_sim(embedding, q_vec)") + lit(1e-10), 6))
@@ -1317,7 +1284,6 @@ object Similarity {
     */
   private[graft] def cascadeKnnSearch(s: SparkSession, sk: DataFrame,
       qsk: DataFrame, emb: DataFrame, k: Int = TopK): DataFrame = {
-    GraftFunctions.register(s)
     val pairs = sk.join(broadcast(qsk), col("vec_id") =!= col("q_id"))
       .withColumn("approx",
         expr("cosine_sim(dx, dy)") * col("dn") * col("dm"))
@@ -1356,9 +1322,8 @@ object Similarity {
     */
   private[graft] def e02LshSearch(s: SparkSession, emb: DataFrame,
       queries: DataFrame, k: Int = TopK): DataFrame = {
-    GraftFunctions.register(s)
-    val bands = bandedCodes(s, emb, E02TargetBucket)
-    val qCodes = bandedCodes(s,
+    val bands = bandedCodes(emb, E02TargetBucket)
+    val qCodes = bandedCodes(
       queries.select(col("q_id").as("vec_id"), col("q_vec").as("embedding")),
       E02TargetBucket, countOver = emb)
     lshProbeStage(s, bands, qCodes, emb, queries, k)
@@ -1375,7 +1340,6 @@ object Similarity {
   private[graft] def lshProbeStage(s: SparkSession, bands: DataFrame,
       qCodes: DataFrame, emb: DataFrame, queries: DataFrame,
       k: Int = TopK): DataFrame = {
-    GraftFunctions.register(s)
     // flip indices (i, j) over 1-based bit positions with 0 = "no
     // flip": (0,0) is the home bucket, (i,0) single flips, (i,j<i)
     // double flips — 1 + bits + C(bits,2) probes per (query, band)
@@ -1414,7 +1378,6 @@ object Similarity {
     * LOWER-id near-duplicate (rounded cosine >= 0.35).
     */
   private[graft] def e08BodyFrom(s: SparkSession, emb: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
     e08PairStage(e08Assigned(s, emb))
   }
 
@@ -1599,7 +1562,6 @@ object Similarity {
     // and the no-training reuse).
     "e03_ann_ivf" -> OpDef.rowsOnly(
       (s, d) => {
-        GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         val dir = graft.sources.AnnIndexLake.ensureE03Index(s, d, emb)
         graft.sources.AnnIndexLake.e03SearchFromIndex(s, dir, emb,
@@ -1632,7 +1594,6 @@ object Similarity {
     // over identical inputs.
     "e04_semantic_dedup" -> OpDef.sql(
       (s, d) => {
-        GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         // one metadata-only count, two uses: the saturation check and
         // the ladder width (through the Scala twin, spec-pinned equal
@@ -1646,15 +1607,14 @@ object Similarity {
         // per-row codegen'd argmax over the float anchor matrix (see
         // NearestAnchor) — same assignment the oracle's scored/rank CTE
         // computes, without exploding corpus_n x ncells rows
-        GraftFunctions.registerNearestAnchor(s, "sem_cell",
-          planes(MaxSemCells).map(_.map(_.toFloat)))
         val sized = emb.withColumn("ncells", lit(semCells(corpusN)))
         // persisted: both sides of the in-cell self-join and the final
         // survivor anti-join read it — unpersisted, the whole anchor
         // scoring pass would run three times
         val assigned = graft.Caching.persistTracked("e04_assigned",
           sized.select(col("vec_id"),
-            expr("sem_cell(embedding, ncells)").as("cell"),
+            GraftFunctions.nearestAnchor(col("embedding"), col("ncells"),
+              planes(MaxSemCells).map(_.map(_.toFloat))).as("cell"),
             col("embedding")))
         val a = assigned.select(col("cell"), col("vec_id").as("a_id"),
                                 col("embedding").as("a_vec"))
@@ -1771,15 +1731,12 @@ object Similarity {
     // vectors when the graph must be total).
     "e05_knn_graph" -> OpDef.sql(
       (s, d) => {
-        GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         val sized = emb
           .crossJoin(broadcast(emb.agg(count(lit(1)).as("corpus_n"))))
           .withColumn("bits", expr(bandBitsCase("corpus_n")))
         val bandStructs = (0 until NumDupBands).map { t =>
-          val fn = bandCodeFn(s, t)
-          struct(lit(t).as("band"),
-                 expr(s"$fn(embedding) & (shiftleft(1, bits) - 1)").as("bcode"))
+          struct(lit(t).as("band"), bandCode(t).as("bcode"))
         }
         val bands = sized
           .select(col("vec_id"), explode(array(bandStructs: _*)).as("bb"))
@@ -1919,7 +1876,6 @@ object Similarity {
     // pair stage is identical either way.
     "e08_semantic_dedup_trained" -> OpDef.rowsOnly(
       (s, d) => {
-        GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         val m = e08ModelMemo("e08", d)(e08TrainModel(s, emb))
         e08PairStage(graft.Caching.persistTracked("e08_assigned",
@@ -1968,7 +1924,6 @@ object Similarity {
 
     "e09_knn_int8" -> OpDef.sql(
       (s, d) => {
-        GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         val queries = emb.filter(col("vec_id") < NumQueries)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -2017,9 +1972,9 @@ object Similarity {
     "e11_pq_search" -> OpDef.rowsOnly(
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val m = pqModelMemo(d)(pqTrain(s, emb))
+        val m = pqModelMemo(d)(pqTrain(emb))
         val codes = graft.Caching.persistTracked("e11_codes",
-          pqEncode(s, m, emb))
+          pqEncode(m, emb))
         val queries = emb.filter(col("vec_id") < NumQueries)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
         pqSearch(s, m, codes,
@@ -2041,7 +1996,6 @@ object Similarity {
     // in one of its query's probed cells, zero Lloyd jobs on reuse.
     "e12_ivfpq_search" -> OpDef.rowsOnly(
       (s, d) => {
-        GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         graft.sources.AnnIndexLake.ivfPqSearch(s, d,
           emb.select("vec_id", "embedding"),
@@ -2096,7 +2050,6 @@ object Similarity {
     // perturbs tau across the bound's margin.
     "e13_range_search" -> OpDef.sql(
       (s, d) => {
-        GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         // the PERSISTED sketch artifact — physically embedding-free
         // (AnnIndexLake.writeCascadeSketch); float vectors enter only
@@ -2156,7 +2109,6 @@ object Similarity {
     // filter, digits and all, including rounded-tie ordering.
     "e14_filtered_knn" -> OpDef.sql(
       (s, d) => {
-        GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         // predicate prunes the persisted embedding-free sketch scan;
         // survivors point-fetch their floats (cascadeKnnSearch's doc)

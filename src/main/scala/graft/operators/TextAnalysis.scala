@@ -57,39 +57,6 @@ object TextAnalysis {
             (size(expr("filter(cuts, t -> CAST(n_tok AS DOUBLE) > t)"))
               + lit(1)).cast("int")))
 
-  /** One greedy left-to-right BPE merge of adjacent (a, b) over a symbol
-    * array — the native [[graft.expressions.BpeMergeOnce]] kernel bound
-    * to the round's pair (the comparison is against the last EMITTED
-    * symbol, so a symbol consumed by a merge can't start another one).
-    * a/b bind through the expression constructor, never through SQL
-    * string quoting of corpus-derived symbols; the interpreted
-    * aggregate() fold this replaces copied the accumulator array per
-    * element (O(L²) per word, uncompiled).
-    */
-  /** Registered names are UNIQUE PER BINDING (a digest of the bound
-    * symbols): register-then-resolve on the shared FunctionRegistry is
-    * not atomic, so a fixed name raced — two plans built concurrently in
-    * one session with different pairs/merge lists could silently bind
-    * the other's symbols. A deterministic digest-name also makes
-    * re-registration idempotent (same binding → same factory), and the
-    * registry stays bounded by the number of DISTINCT bindings (≤ K per
-    * corpus, mergeCache-capped corpora).
-    */
-  private def bindingName(prefix: String, parts: Seq[String]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    parts.foreach { p =>
-      md.update(p.getBytes("UTF-8")); md.update(0.toByte)
-    }
-    prefix + md.digest().take(8).map("%02x".format(_)).mkString
-  }
-
-  private def bpeMergeOnce(s: SparkSession, sym: Column, a: String,
-      b: String): Column = {
-    val name = bindingName("graft_bpe_merge_once_", Seq(a, b))
-    graft.expressions.GraftFunctions.registerBpeMergeOnce(s, name, a, b)
-    call_function(name, sym)
-  }
-
   /** Train `k` BPE merges on the corpus (see the d34 gate entry's comment
     * for the scale shape). Returns the merge table: one row per learned
     * merge (rank, left, right, merged, pair count at selection time).
@@ -119,8 +86,14 @@ object TextAnalysis {
         if (top.nonEmpty) {
           val (a, b, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
           merges += ((r, a, b, a + b, n))
+          // one greedy left-to-right merge of adjacent (a, b), the native
+          // BpeMergeOnce kernel bound to the round's pair (the comparison
+          // is against the last EMITTED symbol, so a symbol consumed by a
+          // merge can't start another one); the interpreted aggregate()
+          // fold it replaced copied the accumulator per element (O(L²))
           val next = cur
-            .withColumn("sym", bpeMergeOnce(s, col("sym"), a, b))
+            .withColumn("sym",
+              graft.expressions.GraftFunctions.bpeMergeOnce(col("sym"), a, b))
             .persist()
           // materialize the round before dropping its parent, so the next
           // round's aggregate never recomputes the whole merge chain
@@ -170,15 +143,9 @@ object TextAnalysis {
     * kernel call per word ([[graft.expressions.BpeFold]]) instead of K
     * chained interpreted aggregate() folds.
     */
-  private def bpeFold(s: SparkSession, w: Column,
-      merges: Seq[(String, String)]): Column =
+  private def bpeFold(w: Column, merges: Seq[(String, String)]): Column =
     if (merges.isEmpty) split(w, "")
-    else {
-      val name = bindingName("graft_bpe_fold_",
-        merges.flatMap(m => Seq(m._1, m._2)))
-      graft.expressions.GraftFunctions.registerBpeFold(s, name, merges)
-      call_function(name, split(w, ""))
-    }
+    else graft.expressions.GraftFunctions.bpeFold(split(w, ""), merges)
 
   /** The tokenizer's word table: every DISTINCT word of `docs` folded
     * ONCE. This is the model-shaped half of apply — vocabulary-sized
@@ -192,7 +159,7 @@ object TextAnalysis {
       .select(explode(split(col("text"), "\\s+")).as("w"))
       .filter(length(col("w")) > 0).distinct()
       .withColumn("n_sym",
-        size(bpeFold(docs.sparkSession, col("w"), merges)))
+        size(bpeFold(col("w"), merges)))
 
   /** Tokenize with a trained merge list: corpus words probe the folded
     * vocab by broadcast join; words OUTSIDE the vocab (an arriving
@@ -208,7 +175,7 @@ object TextAnalysis {
       .join(broadcast(vocab), Seq("w"), "left")
       .withColumn("n_sym_eff",
         coalesce(col("n_sym"),
-          size(bpeFold(docs.sparkSession, col("w"), merges))))
+          size(bpeFold(col("w"), merges))))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"), sum("n_sym_eff").as("n_bpe_tokens"))
       .orderBy("doc_id")
@@ -223,8 +190,9 @@ object TextAnalysis {
     * left-to-right non-overlapping merge of (a,b) is then a single
     * `replace(ws, '␟a␟␟b␟', '␟ab␟')`: standard replace scans left to
     * right and resumes AFTER each replacement, which is exactly the
-    * fold semantics of [[bpeMergeOnce]] (a consumed symbol cannot start
-    * the next merge; "aaa" under (a,a) → "aa","a"), and the
+    * fold semantics of [[graft.expressions.BpeMergeOnce]] (a consumed
+    * symbol cannot start the next merge; "aaa" under (a,a) → "aa","a"),
+    * and the
     * double-sentinel inner boundary means a pair pattern can never
     * match across partial symbols. Every CTE is MATERIALIZED: the K
     * chained rounds reference their predecessors several times, and
@@ -398,25 +366,7 @@ object TextAnalysis {
     * once per distinct model entry — driver-side, charset²-bounded.
     */
   final case class LmModel(bigramKeys: Array[Long], bigramMicros: Array[Long],
-      ctxKeys: Array[Long], ctxMicros: Array[Long], dfltMicros: Long) {
-    /** Registry name derived from the model content — two different
-      * models (gate corpus vs a spec's hand corpus) never collide.
-      */
-    lazy val fnName: String = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val buf = java.nio.ByteBuffer.allocate(8)
-      def put(a: Array[Long]): Unit = a.foreach { v =>
-        buf.clear(); buf.putLong(v); md.update(buf.array()) }
-      put(bigramKeys); put(bigramMicros); put(ctxKeys); put(ctxMicros)
-      buf.clear(); buf.putLong(dfltMicros); md.update(buf.array())
-      "lm_nll_" + md.digest().map("%02x".format(_)).mkString.take(12)
-    }
-    def register(s: SparkSession): String = {
-      graft.expressions.GraftFunctions.registerLmNllMicros(
-        s, fnName, bigramKeys, bigramMicros, ctxKeys, ctxMicros, dfltMicros)
-      fnName
-    }
-  }
+      ctxKeys: Array[Long], ctxMicros: Array[Long], dfltMicros: Long)
 
   // train-once memo per corpus stamp (the e08ModelMemo discipline) — a
   // bench rep or a stream restart must not retrain an unchanged corpus
@@ -472,14 +422,15 @@ object TextAnalysis {
     * seconds). The long micro-sum divided back to a double matches the
     * oracle's DECIMAL-sum→DOUBLE cast digit for digit.
     */
-  private[graft] def lmScore(s: SparkSession, docs: DataFrame,
+  private[graft] def lmScore(docs: DataFrame,
       m: LmModel): DataFrame = {
-    val fn = m.register(s)
     docs
       .withColumn("n_big",
         when(length(col("text")) >= 2, length(col("text")) - 1)
           .otherwise(lit(0)).cast("int"))
-      .withColumn("micros", expr(s"$fn(text)"))
+      .withColumn("micros", graft.expressions.GraftFunctions.lmNllMicros(
+        col("text"), m.bigramKeys, m.bigramMicros, m.ctxKeys, m.ctxMicros,
+        m.dfltMicros))
       .select(col("doc_id"), col("lang"), col("n_big"),
         when(col("n_big") > 0,
           round(-(col("micros").cast("double") / lit(1e6)) / col("n_big")
@@ -651,7 +602,6 @@ object TextAnalysis {
     // kernels): scan-speed at any scale, like d05-d07.
     "d15_repetition" -> OpDef.sql(
       (s, d) => {
-        graft.expressions.GraftFunctions.register(s)
         val nWords = nMatches(col("text"), WsTokenPat)
         // the shingle kernel splits on \s+ INCLUDING empty edge tokens, so
         // its total-shingle denominator is split-length - 2 (as in the
@@ -1123,7 +1073,6 @@ object TextAnalysis {
     // number in the thousands even at 100 TB.
     "d42_cosine_pairs" -> OpDef.sql(
       (s, d) => {
-        graft.expressions.GraftFunctions.register(s)
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.types.DecimalType
         val t = 0.8
@@ -1216,7 +1165,7 @@ object TextAnalysis {
         val docs = Tables.documents(s, d)
         val m = lmModelMemo(Tables.stamp(d, "documents"))(
           lmModel(docs.filter(col("lang") === "en")))
-        lmScore(s, docs, m).orderBy("doc_id")
+        lmScore(docs, m).orderBy("doc_id")
       },
       duckD43Sql)
   )

@@ -28,9 +28,9 @@ case class AsOfJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoin]] to [[AsOfJoinExec]]. Registered per-session via
-  * `spark.experimental.extraStrategies` (see [[AsOf.join]]) or session
-  * extensions.
+/** Plans [[AsOfJoin]] to [[AsOfJoinExec]]. Installed only by session
+  * extensions ([[graft.GraftExtensions]]), so [[AsOf.join]] needs a
+  * session built with them.
   */
 object AsOfJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -308,9 +308,6 @@ object AsOf {
     require(overlap.isEmpty,
       s"as-of join requires disjoint column names between the two sides; " +
         s"rename before joining: ${overlap.mkString(", ")}")
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     val lp = GraftSqlBridge.logicalPlan(l)
     val rp = GraftSqlBridge.logicalPlan(r)
     def res(p: LogicalPlan, name: String): Attribute =

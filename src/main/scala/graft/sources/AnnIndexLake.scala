@@ -161,7 +161,6 @@ object AnnIndexLake {
     */
   def e08DedupFromIndex(s: SparkSession, dir: String,
       emb: DataFrame): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val assigned = graft.Caching.persistTracked("e08_lake_assigned",
       readE08Assignments(s, dir)
         .join(emb.select("vec_id", "embedding"), "vec_id")
@@ -313,12 +312,12 @@ object AnnIndexLake {
       dir: String): Similarity.PqModel = {
     val sp = s
     import sp.implicits._
-    val m = Similarity.pqTrain(s, emb)
+    val m = Similarity.pqTrain(emb)
     m.books.zipWithIndex.flatMap { case (book, i) =>
       book.zipWithIndex.map { case (c, j) => (i, j, c.toSeq) }
     }.toSeq.toDF("sub", "cell", "vec")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    Similarity.pqEncode(s, m, emb)
+    Similarity.pqEncode(m, emb)
       .write.mode("overwrite").parquet(s"$dir/codes")
     m
   }
@@ -333,7 +332,7 @@ object AnnIndexLake {
   def appendToPqIndex(s: SparkSession, dir: String, newEmb: DataFrame,
       batchId: String = null): Unit =
     landAppend(s, s"$dir/codes", batchId,
-      Similarity.pqEncode(s, readPqModel(s, dir), newEmb))
+      Similarity.pqEncode(readPqModel(s, dir), newEmb))
 
   /** The persisted PQ model, collected back (M*K rows — metadata). */
   def readPqModel(s: SparkSession, dir: String): Similarity.PqModel = {
@@ -417,7 +416,7 @@ object AnnIndexLake {
     val bits = Similarity.bandBits(n, Similarity.E02TargetBucket)
     Seq((bits, n)).toDF("bits", "corpus_n")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    Similarity.bandedCodes(s, emb, fixedBits = Some(bits))
+    Similarity.bandedCodes(emb, fixedBits = Some(bits))
       .select("vec_id", "band", "bcode")
       .repartition(col("band")).sortWithinPartitions("band", "bcode")
       .write.mode("overwrite").parquet(s"$dir/codes")
@@ -438,7 +437,7 @@ object AnnIndexLake {
   def appendToLshIndex(s: SparkSession, dir: String, newEmb: DataFrame,
       batchId: String = null): Unit =
     landAppend(s, s"$dir/codes", batchId,
-      Similarity.bandedCodes(s, newEmb,
+      Similarity.bandedCodes(newEmb,
           fixedBits = Some(readLshBits(s, dir)))
         .select("vec_id", "band", "bcode")
         .repartition(col("band")).sortWithinPartitions("band", "bcode"))
@@ -460,7 +459,7 @@ object AnnIndexLake {
   def e02LshSearchFromIndex(s: SparkSession, dir: String, emb: DataFrame,
       queries: DataFrame, k: Int = Similarity.TopK): DataFrame = {
     val bits = readLshBits(s, dir)
-    val qCodes = Similarity.bandedCodes(s,
+    val qCodes = Similarity.bandedCodes(
       queries.select(col("q_id").as("vec_id"), col("q_vec").as("embedding")),
       fixedBits = Some(bits))
     Similarity.lshProbeStage(s, s.read.parquet(s"$dir/codes"),

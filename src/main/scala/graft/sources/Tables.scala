@@ -25,7 +25,8 @@ object Tables {
 
   /** `events.ts` has shifted physical encodings across driver testdata
     * generations — parquet TIMESTAMP(NANOS) (readable only via
-    * `nanosAsLong`, as a raw Long of epoch nanoseconds) and plain
+    * `nanosAsLong`, as a raw Long of epoch nanoseconds; [[graft.GraftSession]]
+    * sets it when the session is built) and plain
     * microsecond timestamps without the UTC flag (which Spark infers as
     * TIMESTAMP_NTZ). The engine's canonical lake shape is `ts` = epoch
     * NANOSECONDS as a Long: every loader normalizes to it so downstream
@@ -34,10 +35,8 @@ object Tables {
     * division — matches the oracles' `epoch_ns(ts)//1000`) rides along
     * for all bucketing/gap math.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(spark: SparkSession, dir: String): DataFrame =
     withTsUs(load(spark, dir, "events"))
-  }
 
   /** Epoch-nanos Column from whatever physical type the file carries.
     * The NTZ branch casts through TIMESTAMP under the session timezone —

@@ -409,12 +409,12 @@ object StreamParity {
         (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))
       val in = MemoryStream[(Long, String)]
       val streamed = drain(spark, "parity_s13",
-        Dedup.scrubAgainst(spark, in.toDF().toDF("doc_id", "text"), boiler),
+        Dedup.scrubAgainst(in.toDF().toDF("doc_id", "text"), boiler),
         "append",
         Seq(() => { in.addData(docs.take(2)); () },
             () => { in.addData(docs.drop(2)); () }))
         .map(key).toSet
-      val batch = Dedup.scrubAgainst(spark, docs.toDF("doc_id", "text"), boiler)
+      val batch = Dedup.scrubAgainst(docs.toDF("doc_id", "text"), boiler)
         .collect().map(key).toSet
       val removed = batch.map(t => (t._1, t._3)).toMap
       Result("s13_stream_scrub", streamed.size, batch.size,
@@ -483,19 +483,17 @@ object StreamParity {
         (2L, run("a", 6) + " " + run("c", 6)),           // 4/10 = 0.4
         (3L, run("d", 5) + " wb_0 wb_1 wb_2 " + run("e", 4)), // 1/10
         (4L, run("f", 12)))                              // disjoint
-      val bench = Dedup.benchShingleListFrom(spark,
-        benchDocs.toDF("doc_id", "text"))
+      val bench = Dedup.benchShingleListFrom(benchDocs.toDF("doc_id", "text"))
       def key(r: org.apache.spark.sql.Row) =
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
       val in = MemoryStream[(Long, String)]
       val streamed = drain(spark, "parity_s15",
-        Dedup.decontamVerdicts(spark, in.toDF().toDF("doc_id", "text"), bench),
+        Dedup.decontamVerdicts(in.toDF().toDF("doc_id", "text"), bench),
         "append",
         Seq(() => { in.addData(arriving.take(2)); () },
             () => { in.addData(arriving.drop(2)); () }))
         .map(key).toSet
-      val batch = Dedup.decontamVerdicts(spark,
-          arriving.toDF("doc_id", "text"), bench)
+      val batch = Dedup.decontamVerdicts(arriving.toDF("doc_id", "text"), bench)
         .collect().map(key).toSet
       val flagged = batch.map(_._1)
       Result("s15_stream_decontam", streamed.size, batch.size,
@@ -659,7 +657,7 @@ object StreamParity {
       val arriving = Seq(
         (10L, "en", "ab"), (11L, "en", "ba"), (12L, "zh", "zq"),
         (13L, "en", "x"))
-      def leg(docs: DataFrame) = TextAnalysis.lmScore(spark, docs, m)
+      def leg(docs: DataFrame) = TextAnalysis.lmScore(docs, m)
       def key(r: org.apache.spark.sql.Row) =
         (r.getLong(0), r.getString(1), r.getInt(2),
           if (r.isNullAt(3)) Double.NaN else r.getDouble(3))

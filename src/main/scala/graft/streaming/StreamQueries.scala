@@ -280,7 +280,6 @@ object StreamQueries {
   private def eventStream(s: SparkSession, d: String,
                           dir: String = null,
                           filesPerTrigger: Int = 0): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = s.read.parquet(s"$d/events.parquet").schema
     var reader = s.readStream.schema(schema)
     if (filesPerTrigger > 0)
@@ -467,7 +466,6 @@ object StreamQueries {
     "s10_stream_incr_dedup" -> OpDef.sql(
       (s, d) => {
         import graft.operators.Dedup
-        graft.expressions.GraftFunctions.register(s)
         val (_, _, fpIdx, bandIdx, shIdx) = Dedup.d24Artifacts(s, d, name = "s10")
         val dir = stagedDocsDir(s, d)
         val schema = s.read.parquet(s"$d/documents.parquet").schema
@@ -515,8 +513,7 @@ object StreamQueries {
         val schema = s.read.parquet(s"$d/documents.parquet").schema
         val docs = s.readStream.schema(schema).parquet(dir)
         drainFiles(s, "s13",
-            graft.operators.Dedup.scrubAgainst(
-              s, docs.select("doc_id", "text"), boiler),
+            graft.operators.Dedup.scrubAgainst(docs.select("doc_id", "text"), boiler),
             d, feedBytes = dirBytes(dir))
           .orderBy("doc_id")
       },
@@ -1288,7 +1285,7 @@ object StreamQueries {
         val schema = s.read.parquet(s"$d/documents.parquet").schema
         val docs = s.readStream.schema(schema).parquet(dir)
         drainFiles(s, "s24",
-            TextAnalysis.lmScore(s, docs.select("doc_id", "lang", "text"), m),
+            TextAnalysis.lmScore(docs.select("doc_id", "lang", "text"), m),
             d, feedBytes = dirBytes(dir))
           .orderBy("doc_id")
       },
@@ -1377,7 +1374,7 @@ object StreamQueries {
         val docs = s.readStream.schema(schema).parquet(dir)
           .filter(Dedup.splitOf(Dedup.splitBucket(col("doc_id"))) === "train")
         drainFiles(s, "s15",
-            Dedup.decontamVerdicts(s, docs.select("doc_id", "text"), bench),
+            Dedup.decontamVerdicts(docs.select("doc_id", "text"), bench),
             d, feedBytes = dirBytes(dir))
           .orderBy("doc_id")
       },

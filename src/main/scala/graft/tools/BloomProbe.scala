@@ -22,7 +22,6 @@ object BloomProbe {
     val sfDir = args(0)
     val tag = if (args.length > 1) args(1) else "last"
     val s = GraftSession.getOrCreate()
-    graft.expressions.GraftFunctions.register(s)
 
     val docs = Tables.documents(s, sfDir)
       .withColumn("split", Dedup.splitOf(Dedup.splitBucket(col("doc_id"))))
@@ -37,11 +36,11 @@ object BloomProbe {
     // model build outside the timers (the lake premise: built once)
     val nBench = bench.count()
     val bloom = bench.stat.bloomFilter("h", math.max(1L, nBench), 0.01)
-    graft.expressions.GraftFunctions.registerBloomContainsLong(
-      s, "probe_might_contain", bloom)
+    val mightContain =
+      graft.expressions.GraftFunctions.bloomContainsLong(col("h"), bloom)
 
     val nTrainShingles = train.count()
-    val bloomPassed = train.filter(expr("probe_might_contain(h)")).count()
+    val bloomPassed = train.filter(mightContain).count()
     val trueHits = train.join(bench, Seq("h"), "left_semi").count()
 
     def verdicts(probe: org.apache.spark.sql.DataFrame,
@@ -70,7 +69,7 @@ object BloomProbe {
     val (viaShuffle, viaBloom) =
       try {
         (time { run(verdicts(train, bench.hint("shuffle_hash"))) },
-         time { run(verdicts(train.filter(expr("probe_might_contain(h)")),
+         time { run(verdicts(train.filter(mightContain),
            bench.hint("shuffle_hash"))) })
       } finally s.conf.set(Thresh, before)
 

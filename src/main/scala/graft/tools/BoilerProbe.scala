@@ -35,19 +35,19 @@ object BoilerProbe {
       df.write.format("noop").mode("overwrite").save()
 
     // warm code paths once
-    run(Dedup.scrubViaLake(s, docs, lake, broadcastBoiler = true))
+    run(Dedup.scrubViaLake(docs, lake, broadcastBoiler = true))
     // the model is PREBUILT on every path (that's the lake's premise) —
     // the array probe gets its collected copy outside the timer too, so
     // the three timings compare probe cost alone
     val arr = Dedup.boilerSpanHashesFrom(s, docs)
-    val viaArray = time { run(Dedup.scrubAgainst(s, docs, arr)) }
-    val viaBroadcast = time { run(Dedup.scrubViaLake(s, docs, lake,
+    val viaArray = time { run(Dedup.scrubAgainst(docs, arr)) }
+    val viaBroadcast = time { run(Dedup.scrubViaLake(docs, lake,
       broadcastBoiler = true)) }
     val Thresh = "spark.sql.autoBroadcastJoinThreshold"
     val before = s.conf.get(Thresh)
     s.conf.set(Thresh, "-1")
     val viaShuffle =
-      try time { run(Dedup.scrubViaLake(s, docs, lake, broadcastBoiler = false)) }
+      try time { run(Dedup.scrubViaLake(docs, lake, broadcastBoiler = false)) }
       finally s.conf.set(Thresh, before)
 
     val json =

@@ -23,7 +23,6 @@ object CosineProbe {
     require(args.length == 1, "usage: CosineProbe <dataDir>")
     val d = args(0)
     val s = graft.GraftSession.getOrCreate()
-    graft.expressions.GraftFunctions.register(s)
     def timed[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"[probe] $tag%-12s ${(System.nanoTime() - t0) / 1e9}%.1f s"); r

@@ -32,12 +32,11 @@ object D09DensityProbe {
     val tag = if (args.length > 1) args(1) else "last"
     val stride = if (args.length > 2) Some(args(2).toLong) else None
     val s = GraftSession.getOrCreate()
-    graft.expressions.GraftFunctions.register(s)
 
     val emb = Tables.embeddings(s, sfDir)
     val n = emb.count()
     val bands = graft.Caching.persistTracked("d09probe_bands",
-      Similarity.bandedCodes(s, emb))
+      Similarity.bandedCodes(emb))
     val bits = bands.select(max("bits")).head().getInt(0)
     // per-(band, bcode) bucket sizes: candidate volume = sum C(sz, 2)
     val buckets = bands.groupBy("band", "bcode")

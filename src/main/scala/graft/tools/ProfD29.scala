@@ -3,7 +3,6 @@ import org.apache.spark.sql.functions._
 object ProfD29 {
   def main(args: Array[String]): Unit = {
     val s = graft.GraftSession.getOrCreate()
-    graft.expressions.GraftFunctions.register(s)
     val d = "/tmp/graft_sf10"
     var t0 = System.nanoTime()
     val w = graft.Caching.persistTracked("p_w", graft.sources.Tables.documents(s, d)

@@ -19,14 +19,13 @@ object SemProbe {
     val dir = args(0)
     val mode = if (args.length == 2) args(1) else "e04L"
     val s = graft.GraftSession.getOrCreate()
-    graft.expressions.GraftFunctions.register(s)
     val emb = graft.sources.Tables.embeddings(s, dir)
 
     var t0 = System.nanoTime()
     val assigned = mode match {
       case "e08" => graft.operators.Similarity.e08Assigned(s, emb)
       case _ => graft.operators.Similarity
-        .e04LargeAssigned(s, emb, graft.operators.Similarity.SemLevel2At,
+        .e04LargeAssigned(emb, graft.operators.Similarity.SemLevel2At,
           emb.count())
     }
     assigned.write.format("noop").mode("overwrite").save()

@@ -17,7 +17,6 @@ object SimHashProbe {
     require(args.length == 1, "usage: SimHashProbe <dataDir>")
     val dir = args(0)
     val s = graft.GraftSession.getOrCreate()
-    graft.expressions.GraftFunctions.register(s)
     val sigs = graft.sources.Tables.documents(s, dir)
       .select(col("doc_id"), expr("simhash60_md5(text)").as("simhash"))
       .persist()

@@ -1,7 +1,8 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils, SparkSession => ClassicSession}
 
 /** Bridge into `private[sql]` plan construction — the standard technique a
   * Spark library uses to turn a custom LogicalPlan into a DataFrame
@@ -13,4 +14,8 @@ object GraftSqlBridge {
 
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[ClassicDataset[Row]].logicalPlan
+
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }

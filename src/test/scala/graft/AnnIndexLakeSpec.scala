@@ -171,7 +171,7 @@ class AnnIndexLakeSpec extends AnyFunSuite with SparkFixture {
     AnnIndexLake.appendToPqIndex(spark, dp, neu)
     assert(spark.read.parquet(s"$dp/codes")
         .collect().map(_.toSeq).toSet ==
-      Similarity.pqEncode(spark, AnnIndexLake.readPqModel(spark, dp), emb)
+      Similarity.pqEncode(AnnIndexLake.readPqModel(spark, dp), emb)
         .collect().map(_.toSeq).toSet,
       "pq append diverged from one-pass encode")
 
@@ -300,7 +300,7 @@ class AnnIndexLakeSpec extends AnyFunSuite with SparkFixture {
     // identity vs the SAME model searched in memory (the write-path
     // model): codes + shortlist + re-rank must survive the round trip
     val inMem = Similarity.pqSearch(spark, trained,
-        Similarity.pqEncode(spark, trained, emb),
+        Similarity.pqEncode(trained, emb),
         emb.select("vec_id", "embedding"), queries)
       .collect().map(_.toSeq).toSeq
     assert(overLake == inMem, "lake-backed e11 diverged from in-memory")
@@ -320,7 +320,7 @@ class AnnIndexLakeSpec extends AnyFunSuite with SparkFixture {
     AnnIndexLake.appendToLshIndex(spark, dir, emb.filter(col("vec_id") < 100))
     val grown = spark.read.parquet(s"$dir/codes")
       .collect().map(_.toSeq).toSet
-    val onePass = Similarity.bandedCodes(spark, emb, fixedBits = Some(bits))
+    val onePass = Similarity.bandedCodes(emb, fixedBits = Some(bits))
       .select("vec_id", "band", "bcode").collect().map(_.toSeq).toSet
     assert(grown == onePass, "LSH append diverged from a one-pass build")
 

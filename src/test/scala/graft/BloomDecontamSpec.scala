@@ -95,7 +95,7 @@ class BloomDecontamSpec extends AnyFunSuite with SparkFixture {
         graft.operators.Dedup.splitBucket(col("doc_id"))) === "train")
       .select("doc_id", "text")
     val inRow = resultKey(
-      graft.operators.Dedup.decontamVerdicts(spark, docs, bench)
+      graft.operators.Dedup.decontamVerdicts(docs, bench)
         .orderBy("doc_id"))
     assert(inRow == d16, s"in-row kernel path diverged:\n d16=$d16\n s15=$inRow")
   }
@@ -120,7 +120,7 @@ class BloomDecontamSpec extends AnyFunSuite with SparkFixture {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val bench = graft.operators.Dedup.benchShingleList(spark, corpusDir)
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = graft.operators.Dedup.decontamVerdicts(spark,
+    val q = graft.operators.Dedup.decontamVerdicts(
         in.toDF().toDF("doc_id", "text"), bench)
       .writeStream.format("memory").queryName("s15_probe")
       .outputMode("append").start()
@@ -137,7 +137,6 @@ class BloomDecontamSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("bloom prefilter: no false negatives, fp fraction within bound") {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = graft.sources.Tables.documents(spark, corpusDir)
       .withColumn("split", graft.operators.Dedup.splitOf(
         graft.operators.Dedup.splitBucket(col("doc_id"))))

@@ -25,13 +25,13 @@ class BoilerLakeSpec extends AnyFunSuite with SparkFixture {
     Dedup.writeBoilerLake(spark, docs, dir)
     val lake = spark.read.parquet(dir)
 
-    val viaArray = Dedup.scrubAgainst(spark, docs,
+    val viaArray = Dedup.scrubAgainst(docs,
         Dedup.boilerSpanHashesFrom(spark, docs))
       .collect().map(key).sortBy(_._1).toSeq
     assert(viaArray.nonEmpty)
     assert(viaArray.exists(_._3 > 0), "corpus has no boilerplate to scrub")
 
-    val viaBroadcast = Dedup.scrubViaLake(spark, docs, lake,
+    val viaBroadcast = Dedup.scrubViaLake(docs, lake,
         broadcastBoiler = true)
       .collect().map(key).sortBy(_._1).toSeq
     assert(viaBroadcast == viaArray, "broadcast-join scrub diverged")
@@ -42,7 +42,7 @@ class BoilerLakeSpec extends AnyFunSuite with SparkFixture {
     val before = spark.conf.get(Thresh)
     spark.conf.set(Thresh, "-1")
     try {
-      val viaShuffle = Dedup.scrubViaLake(spark, docs, lake,
+      val viaShuffle = Dedup.scrubViaLake(docs, lake,
           broadcastBoiler = false)
         .collect().map(key).sortBy(_._1).toSeq
       assert(viaShuffle == viaArray, "shuffle-join scrub diverged")

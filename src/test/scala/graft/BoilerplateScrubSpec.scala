@@ -63,7 +63,7 @@ class BoilerplateScrubSpec extends AnyFunSuite with SparkFixture {
     assume(new java.io.File(GateDir).isDirectory)
     val boiler = graft.operators.Dedup.boilerSpanHashes(spark, GateDir)
     assert(boiler.nonEmpty)
-    val got = graft.operators.Dedup.scrubAgainst(spark,
+    val got = graft.operators.Dedup.scrubAgainst(
         graft.sources.Tables.documents(spark, GateDir).select("doc_id", "text"),
         boiler)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
@@ -81,8 +81,7 @@ class BoilerplateScrubSpec extends AnyFunSuite with SparkFixture {
       spark.sqlContext
     val boiler = graft.operators.Dedup.boilerSpanHashes(spark, GateDir)
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = graft.operators.Dedup.scrubAgainst(spark,
-        in.toDF().toDF("doc_id", "text"), boiler)
+    val q = graft.operators.Dedup.scrubAgainst(in.toDF().toDF("doc_id", "text"), boiler)
       .writeStream.format("memory").queryName("s13_probe")
       .outputMode("append").start()
     try {

@@ -131,4 +131,51 @@ class CdcScaleSpec extends AnyFunSuite with SparkFixture {
       docs.filter(col("source") =!= "src5").count())
     Lake.deleteTree(java.nio.file.Paths.get(base))
   }
+
+  test("partition-scoped apply leaves the session conf alone, during and after") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_cdcspec_l08c").toString
+    docs.repartition(col("source"))
+      .write.mode("overwrite").partitionBy("source").parquet(s"$base/snap")
+    val v1 = spark.read.parquet(s"$base/snap")
+      .select("doc_id", "source", "text")
+    val others = v1.filter(col("source") =!= "src1").orderBy("doc_id").collect()
+    val log = v1.filter(col("source") === "src1")
+      .select(lit("U").as("op"), col("doc_id"), col("source"),
+              concat(col("text"), lit(" (patched)")).as("text"))
+      .cache()
+    val nPatched = log.count()
+    val confBefore = spark.conf.getAll
+
+    // a SQL execution copies the session's set confs into its jobs'
+    // properties, so each job start shows the conf its write ran under
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        seen.add(String.valueOf(Option(e.properties).map(_.getProperty(key)).orNull))
+        ()
+      }
+    }
+    org.apache.spark.ListenerBusAccess.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      Lake.cdcApplyPartitioned(spark, s"$base/snap", log, s"$base/stage")
+      org.apache.spark.ListenerBusAccess.drain(sc)
+    } finally sc.removeSparkListener(l)
+
+    assert(!seen.isEmpty)
+    assert(seen.toArray.forall(_ == "null"),
+      s"a job of the apply ran with $key set on the session: $seen")
+    assert(spark.conf.getAll == confBefore)
+    val snap = spark.read.parquet(s"$base/snap")
+    assert(snap.filter(col("source") =!= "src1").orderBy("doc_id")
+      .select("doc_id", "source", "text").collect().sameElements(others),
+      "untouched partitions must survive the dynamic overwrite")
+    assert(snap.filter(col("text").endsWith(" (patched)")).count() == nPatched)
+    log.unpersist()
+    Lake.deleteTree(java.nio.file.Paths.get(base))
+  }
 }

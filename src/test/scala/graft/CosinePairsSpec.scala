@@ -24,7 +24,6 @@ class CosinePairsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("matches a brute-force all-pairs replay on the real corpus") {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val tf = docs
       .select(col("doc_id"), explode(expr("md5_span3_hashes(text)")).as("h"))
@@ -82,7 +81,6 @@ class CosinePairsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("unit norms: every doc's squared feature mass sums to ~1") {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val tf = docs
       .select(col("doc_id"), explode(expr("md5_span3_hashes(text)")).as("h"))

@@ -2,12 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.expressions.GraftFunctions
 
 class CosineSimilaritySpec extends AnyFunSuite with SparkFixture {
 
   private def sim(a: Seq[Float], b: Seq[Float]): Double = {
-    GraftFunctions.register(spark)
     val sp = spark
     import sp.implicits._
     Seq((a, b)).toDF("a", "b")
@@ -35,7 +33,6 @@ class CosineSimilaritySpec extends AnyFunSuite with SparkFixture {
   }
 
   test("topk_by over a corpus with a zero embedding matches Spark's own NaN-greatest sort") {
-    GraftFunctions.register(spark)
     val sp = spark
     import sp.implicits._
     // corpus vec 99 is all-zero -> cosine NaN, which Spark sorts GREATEST
@@ -56,7 +53,6 @@ class CosineSimilaritySpec extends AnyFunSuite with SparkFixture {
   }
 
   test("codegen and interpreted paths agree on real embeddings") {
-    GraftFunctions.register(spark)
     val emb = graft.sources.Tables.embeddings(spark, sfDir).limit(50)
       .select(col("vec_id"), col("embedding"))
     val pairs = emb.crossJoin(

@@ -160,7 +160,6 @@ class DupClusterSpec extends AnyFunSuite with SparkFixture {
 
   test("d16 flags exactly the train docs sharing >= 20% shingles with the test split") {
     import org.apache.spark.sql.functions._
-    graft.expressions.GraftFunctions.register(spark)
     // independent ground truth: collect every doc's shingle set and split,
     // compute the overlap in plain Scala (affordable at sf0.001 only)
     val rows = graft.sources.Tables.documents(spark, sfDir)

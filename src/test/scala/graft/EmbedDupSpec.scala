@@ -51,7 +51,6 @@ class EmbedDupSpec extends AnyFunSuite with SparkFixture {
 
   test("recall vs exact all-pairs at the 0.35 threshold (sf0.001)") {
     import org.apache.spark.sql.functions._
-    graft.expressions.GraftFunctions.register(spark)
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
       .select("vec_id", "embedding")
     // exact baseline: tiny corpus, all-pairs is affordable IN THE SPEC

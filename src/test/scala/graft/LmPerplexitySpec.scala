@@ -26,7 +26,7 @@ class LmPerplexitySpec extends AnyFunSuite with SparkFixture {
       (1L, "en", "ab"), (2L, "en", "ba"), (3L, "en", "bb"),
       (4L, "en", "ca"), (5L, "en", "x"), (6L, "en", "")
     ).toDF("doc_id", "lang", "text")
-    val out = TextAnalysis.lmScore(spark, docs, m)
+    val out = TextAnalysis.lmScore(docs, m)
       .orderBy("doc_id")
       .select("doc_id", "n_big", "nll")
       .collect()

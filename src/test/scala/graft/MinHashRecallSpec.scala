@@ -21,7 +21,6 @@ class MinHashRecallSpec extends AnyFunSuite with SparkFixture {
   test("d02 banding recall matches the 8x4 S-curve on exhaustive pairs (sf0.01)") {
     val dir = "/root/testdata/sf0.01"
     assume(new java.io.File(dir).isDirectory)
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), expr("md5_shingle3_hashes(text)").as("sh"))
       .filter(size(col("sh")) > 0)

@@ -137,8 +137,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.functions.col
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select("doc_id", "text")
-    val boiler = graft.operators.Dedup.boilerSpanTable(spark, docs)
-    val pB = graft.operators.Dedup.scrubViaLake(spark, docs, boiler,
+    val boiler = graft.operators.Dedup.boilerSpanTable(docs)
+    val pB = graft.operators.Dedup.scrubViaLake(docs, boiler,
         broadcastBoiler = true)
       .queryExecution.executedPlan.toString
     assert(pB.contains("BroadcastHashJoin"),
@@ -147,7 +147,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val before = spark.conf.get(Thresh)
     spark.conf.set(Thresh, "-1")
     try {
-      val pS = graft.operators.Dedup.scrubViaLake(spark, docs, boiler,
+      val pS = graft.operators.Dedup.scrubViaLake(docs, boiler,
           broadcastBoiler = false)
         .queryExecution.executedPlan.toString
       assert(!pS.contains("BroadcastHashJoin"),
@@ -162,7 +162,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select("doc_id", "text")
     val boiler = graft.operators.Dedup.boilerSpanHashesFrom(spark, docs)
-    val p = graft.operators.Dedup.scrubAgainst(spark, docs, boiler)
+    val p = graft.operators.Dedup.scrubAgainst(docs, boiler)
       .queryExecution.executedPlan.toString
     assert(p.contains("span_hit_starts"),
       s"fused probe kernel missing from the scrub plan:\n$p")

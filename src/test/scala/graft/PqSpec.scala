@@ -40,8 +40,8 @@ class PqSpec extends AnyFunSuite with SparkFixture {
 
   test("ADC scores are the reconstructed-centroid cosine; re-rank exact") {
     val embDF = graft.sources.Tables.embeddings(spark, sfDir)
-    val m = Similarity.pqModelMemo(sfDir)(Similarity.pqTrain(spark, embDF))
-    val codes = Similarity.pqEncode(spark, m, embDF).collect()
+    val m = Similarity.pqModelMemo(sfDir)(Similarity.pqTrain(embDF))
+    val codes = Similarity.pqEncode(m, embDF).collect()
       .map(r => r.getLong(0) -> (0 until m.m).map(i => r.getInt(i + 1)))
       .toMap
     val vecs = embDF.collect()
@@ -82,7 +82,7 @@ class PqSpec extends AnyFunSuite with SparkFixture {
     val queries = embDF.filter(col("vec_id") < Similarity.NumQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val gotShort = Similarity.pqShortlist(spark, m,
-        Similarity.pqEncode(spark, m, embDF), queries).collect()
+        Similarity.pqEncode(m, embDF), queries).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).map { case (q, rs) => q -> rs.map(t => t._2 -> t._3) }
     for ((q, got) <- gotShort) {

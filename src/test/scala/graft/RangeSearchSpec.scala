@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.expressions.GraftFunctions
 import graft.operators.Similarity
 
 /** e13_range_search: the oracle hash proves the cascade missed nothing
@@ -15,7 +14,6 @@ import graft.operators.Similarity
 class RangeSearchSpec extends AnyFunSuite with SparkFixture {
 
   private def brute(tau: Double): Set[(Long, Long)] = {
-    GraftFunctions.register(spark)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val q = emb.filter(col("vec_id") < Similarity.RangeQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -50,7 +48,6 @@ class RangeSearchSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("bound soundness: |exact - approx| <= eps on every pair") {
-    GraftFunctions.register(spark)
     val sk = sketch(spark.read.parquet(s"$sfDir/embeddings.parquet"))
       .select(col("vec_id"), col("embedding"), col("qx"), col("sx"), col("rx"))
     val q = sk.limit(20).select(col("vec_id").as("q_id"),
@@ -90,7 +87,6 @@ class RangeSearchSpec extends AnyFunSuite with SparkFixture {
   test("completeness across taus spanning the bound margin") {
     // rebuild the cascade at each tau and compare against brute force —
     // the bound must hold regardless of where the threshold sits
-    GraftFunctions.register(spark)
     val sk = sketch(spark.read.parquet(s"$sfDir/embeddings.parquet"))
       .select(col("vec_id"), col("embedding"), col("qx"), col("sx"), col("rx"))
     val q = sk.filter(col("vec_id") < Similarity.RangeQueries)

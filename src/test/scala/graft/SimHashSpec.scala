@@ -34,7 +34,6 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("simhash64 kernel matches the explode + 64-bit-sum aggregate formulation") {
-    graft.expressions.GraftFunctions.register(spark)
     val kernel = Tables.documents(spark, sfDir)
       .select(col("doc_id"), expr("simhash64(text)").as("k"))
     val agg = aggregateSimhash(sfDir).withColumnRenamed("simhash", "a")
@@ -67,7 +66,6 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("simhash60_md5 kernel matches the explode + 60-bit-sum aggregate formulation") {
-    graft.expressions.GraftFunctions.register(spark)
     val kernel = Tables.documents(spark, sfDir)
       .select(col("doc_id"), expr("simhash60_md5(text)").as("k"))
     val agg = aggregateSimhash60(sfDir).withColumnRenamed("simhash", "a")
@@ -88,7 +86,6 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
   private val WideChoose = Dedup.WideChoose
 
   test("the widened 10-choose-4 family is exhaustively complete at the same radius") {
-    graft.expressions.GraftFunctions.register(spark)
     assert(WideWidths.length - WideChoose == Dedup.SimHashRadius)
     val sigsDf = Tables.documents(spark, sfDir)
       .select(col("doc_id"), expr("simhash60_md5(text)").as("simhash"))
@@ -119,7 +116,6 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
   test("wider keys cut candidate work at the same radius (sf0.1)") {
     val dir = "/root/testdata/sf0.1"
     assume(new java.io.File(dir).isDirectory)
-    graft.expressions.GraftFunctions.register(spark)
     val sigsDf = Tables.documents(spark, dir)
       .select(col("doc_id"), expr("simhash60_md5(text)").as("simhash"))
       .persist()
@@ -146,7 +142,6 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
     // count 0) must change NOTHING — the ladder is a density knob, not a
     // semantics knob. This is what makes the count ladder safe: a rung
     // disagreement could only ever cost performance, never correctness.
-    graft.expressions.GraftFunctions.register(spark)
     val gate = SparkEntry.queries("d03_simhash")(spark, sfDir)
       .collect().map(_.toSeq).toSeq
     val forcedWide = Dedup.d03Body(spark, sfDir, wideAt = 0L)
@@ -159,7 +154,6 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
   test("d03 block-pair banding is exhaustively complete at the radius (sf0.01)") {
     val dir = "/root/testdata/sf0.01"
     assume(new java.io.File(dir).isDirectory)
-    graft.expressions.GraftFunctions.register(spark)
     val sigs = Tables.documents(spark, dir)
       .select(col("doc_id"), expr("simhash60_md5(text)").as("simhash"))
       .collect()
@@ -190,7 +184,6 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
     // nothing beyond it
     val dir = "/root/testdata/sf0.01"
     assume(new java.io.File(dir).isDirectory)
-    graft.expressions.GraftFunctions.register(spark)
     val sigs = Tables.documents(spark, dir)
       .select(col("doc_id"), expr("simhash60_md5(text)").as("simhash"))
       .collect()
@@ -222,7 +215,6 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
     assert(Dedup.DenseRadius == 4)
     val dir = "/root/testdata/sf0.01"
     assume(new java.io.File(dir).isDirectory)
-    graft.expressions.GraftFunctions.register(spark)
     val sigs = Tables.documents(spark, dir)
       .select(col("doc_id"), expr("simhash60_md5(text)").as("simhash"))
     val n = sigs.count()
@@ -245,7 +237,6 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
     // exhaustive-recall guarantee.
     val sp = spark
     import sp.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     val base = "the quick brown fox jumps over the lazy dog while " +
       "seventeen analysts review quarterly parquet manifests before " +
       "the cluster rebalances its shuffle partitions at dawn"
@@ -293,7 +284,6 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
     // measured density sits an order under the threshold, so the gate
     // keeps the radius-6 guarantee — its output must contain 5-6 band
     // pairs (non-vacuously narrow) and equal the forced-narrow run.
-    graft.expressions.GraftFunctions.register(spark)
     val gate = SparkEntry.queries("d03_simhash")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val forcedNarrow = Dedup.d03Body(spark, sfDir, Dedup.SimHashWideAt, Long.MaxValue)

@@ -19,7 +19,6 @@ import graft.operators.Dedup
 class StreamIncrDedupSpec extends AnyFunSuite with SparkFixture {
 
   test("per-row bandArray equals the batch minhashBands family bit-for-bit") {
-    graft.expressions.GraftFunctions.register(spark)
     val shing = graft.sources.Tables.documents(spark, sfDir)
       .withColumn("mh", expr("md5_shingle3_hashes(text)"))
       .filter(size(col("mh")) > 0)
