@@ -192,8 +192,9 @@ object HashKernels {
     * occurs in `sorted` — [[md5SpanHashes]] + binary search FUSED in one
     * kernel call. The transform/filter higher-order wrapper this
     * replaces ran interpreted per row and measured ~6x the whole
-    * join-path scrub at sf1 (BoilerProbe); fusing makes the stream-side
-    * boiler probe one codegen'd call per row again.
+    * join-path scrub at sf1 (bench/BENCH_boiler_probe_sf1_r10.json);
+    * fusing makes the stream-side boiler probe one codegen'd call per
+    * row again.
     */
   def spanHitStarts(text: UTF8String, n: Int, sorted: Array[Long]): ArrayData = {
     val hs = md5SpanHashes(text, n)
@@ -468,40 +469,12 @@ case class WinnowPositions(child: Expression, w: Int)
     copy(child = newChild)
 }
 
-/** Codegen'd membership test against a SORTED long array riding the
-  * closure (binary search — the boiler-span list a stream-side scrub
-  * probes per span must not cost a linear scan per row). The caller
-  * sorts; an unsorted array would silently return wrong answers.
-  */
-case class InSortedLongs(child: Expression, sorted: Array[Long])
-    extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def prettyName: String = "in_sorted_longs"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName: argument must be BIGINT, got ${child.dataType.simpleString}")
-
-  override def nullSafeEval(input: Any): Any =
-    java.util.Arrays.binarySearch(sorted, input.asInstanceOf[Long]) >= 0
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sorted", sorted, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"(java.util.Arrays.binarySearch($ref, $c) >= 0)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): InSortedLongs =
-    copy(child = newChild)
-}
-
 /** Fused boiler-span probe: text -> array<int> of the span starts whose
   * md5-60-bit span-n hash is in the SORTED list riding the closure (see
   * [[HashKernels.spanHitStarts]]). The scrub's per-row hit detection as
   * ONE codegen'd kernel call instead of an interpreted
-  * transform+filter chain over [[Md5SpanHashes]] + [[InSortedLongs]].
+  * transform+filter chain over [[Md5SpanHashes]] + a per-span binary
+  * search.
   */
 case class SpanHitStarts(child: Expression, n: Int, sorted: Array[Long])
     extends UnaryExpression {
@@ -582,7 +555,7 @@ case class PolyHash(child: Expression) extends UnaryExpression {
 }
 
 /** How many elements of an array<long> occur in a SORTED long list —
-  * [[InSortedLongs]] lifted over an array and FUSED with the count, so
+  * a binary-search membership test FUSED with the count, so
   * a per-doc "shared shingles vs the benchmark set" tally is ONE
   * codegen'd kernel call per row instead of an interpreted
   * filter-lambda chain (the same HOF trap [[SpanHitStarts]] closed for

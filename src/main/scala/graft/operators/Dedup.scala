@@ -39,50 +39,22 @@ object Dedup {
   private[graft] val BlockWidth = Array(8, 8, 8, 8, 7, 7, 7, 7)
   private val BlockOff = BlockWidth.scanLeft(0)(_ + _).init
 
-  /** The widened family for dense corpora: 10 blocks of 6 bits, choose 4
-    * — 210 tables of 24-bit keys at the SAME guaranteed radius
-    * (10 - 4 = 6). SimHashSpec proves its exhaustive recall and measures
-    * a 2.3x candidate cut — but the round-7 sf10 measurement DEMOTED it
-    * from the gate ladder: at 500k docs (exactly the scale the switch
-    * targeted) the wide family ran 633 s against the narrow family's
-    * 13.2 s. Two facts the ladder's design missed: (a) the bucket
-    * SELF-JOIN's cost is dominated by sorting bucket ROWS, of which wide
-    * emits 7.5x more (210 tables x corpus vs 28 x corpus — 105M rows at
-    * 500k docs); (b) the density relief never materializes on real
-    * signature distributions, because near-identical documents produce
-    * near-identical simhashes that collide at ANY key width — the hot
-    * buckets that drive pair cost are insensitive to widening (probe:
-    * 2024 buckets of >= 100 docs at 24-bit keys). Meanwhile the narrow
-    * family's supposed ~500k turnover (r6's 19.9x) disappeared once the
-    * combos moved to a broadcast join inside whole-stage codegen — its
-    * measured curve is now FLAT (5.7 s -> 13.2 s for 10x data,
-    * bench/BENCH_d03_scale_r7.json).
-    *
-    * [[SimHashWideAt]] therefore keeps the narrow family active at every
-    * reachable count; the wide config stays available (d03Body's wideAt
-    * = 0 forces it — SimHashSpec does) for a deployment whose signature
-    * distribution is near-uniform, where the density argument holds.
-    * The honest 100-TB answer for denser corpora is a smaller guaranteed
-    * radius or multi-probe, not more tables.
-    */
-  private[graft] val WideBlockWidth: Array[Int] = Array.fill(10)(6)
-  private[graft] val WideChoose = 4
-  private[graft] val SimHashWideAt = Long.MaxValue
-
-  /** The SMALLER-RADIUS family for denser corpora — the escape the wide
-    * family's demotion note names (see above). 6 blocks of 10 bits,
+  /** The SMALLER-RADIUS family for denser corpora: 6 blocks of 10 bits,
     * choose 2: C(6,2) = 15 tables (half the narrow family's 28 bucket
     * rows per doc) of 20-bit keys (16-32x fewer random collisions per
     * table than the narrow 15/16-bit keys), guaranteed radius 6 - 2 = 4.
     * The trade is explicit: exhaustive recall shrinks from Hamming <= 6
     * to <= 4 — which still catches near-identical documents (true
     * near-dup simhashes differ in 0-3 bits; the 5-6 bit band is mostly
-    * borderline rewrites) while cutting BOTH cost terms the wide family
-    * could not: bucket rows (sort volume) and random collisions.
-    * Probe-forced like the wide family (d03DenseBody; SimHashProbe
-    * measures, SimHashSpec proves the <= 4 recall exhaustively) — the
-    * gate ladder keeps the narrow family until a deployment's density
-    * demands the trade.
+    * borderline rewrites) while cutting both cost terms of the bucket
+    * self-join: bucket rows (sort volume) and random collisions. More
+    * tables at the same radius do not help: a C(10,4) family (210 tables
+    * of 24-bit keys) ran 633 s against the narrow family's 13.2 s at
+    * 500k docs (bench/BENCH_d03_scale_r7.json), since it emits 7.5x the
+    * bucket rows and near-identical documents collide at any key width.
+    * Engaged by measured density ([[D03DensePairsPerDoc]]);
+    * bench/BENCH_d03_dense_r8.json measures it at sf10 and SimHashSpec
+    * proves the <= 4 recall exhaustively.
     */
   private[graft] val DenseBlockWidth: Array[Int] = Array.fill(6)(10)
   private[graft] val DenseChoose = 2
@@ -123,9 +95,9 @@ object Dedup {
   /** All C(B,c) c-block combinations of a block layout, each one
     * candidate table, as (offset, width) slices. Pigeonhole: <= B - c
     * differing bits leave some c blocks untouched, so the guaranteed
-    * radius of the (widths, c) family is B - c. The gate config ladders
-    * between (BlockWidth, 2) — 28 pair tables — and the widened
-    * (WideBlockWidth, WideChoose) on the corpus count.
+    * radius of the (widths, c) family is B - c. d03 selects between
+    * (BlockWidth, 2) — 28 pair tables — and (DenseBlockWidth,
+    * DenseChoose) — 15 — on measured density.
     */
   private[graft] def blockCombos(widths: Array[Int], c: Int): Seq[Seq[(Int, Int)]] = {
     require(c >= 1 && c <= widths.length)
@@ -150,7 +122,7 @@ object Dedup {
 
   /** (doc_id, simhash, tbl, bkey) bucket rows of a (widths, c) family
     * over a (doc_id, simhash) frame — d03's candidate generator, exposed
-    * by family so specs exercise widened configs on the same machinery.
+    * by family so specs exercise each family on the same machinery.
     */
   private[graft] def simhashBuckets(sigs: DataFrame,
       widths: Array[Int], c: Int): DataFrame = {
@@ -163,38 +135,30 @@ object Dedup {
   }
 
   /** One family's combo tables as rows for the broadcast combos frame:
-    * (fam, tbl, then four uniform (offset, mask, multiplier) slices with
-    * the first slice's multiplier omitted — a padding slice (0, 0, 1)
-    * contributes `acc*1 + 0 = acc` to the key fold, so c=2 and c=4
-    * families share one bkey expression, bit-identical to [[comboKey]]).
+    * (fam, tbl, o1, m1, o2, m2, s2) — two (offset, mask) slices and the
+    * second slice's multiplier, so `((simhash >> o1) & m1) * s2 +
+    * ((simhash >> o2) & m2)` is bit-identical to [[comboKey]].
     */
   private def comboTupleRows(fam: Int, widths: Array[Int], c: Int) =
     blockCombos(widths, c).zipWithIndex.map { case (combo, t) =>
-      val p = combo ++ Seq.fill(4 - combo.size)((0, 0))
-      (fam, t, p(0)._1, (1L << p(0)._2) - 1,
-       p(1)._1, (1L << p(1)._2) - 1, 1L << p(1)._2,
-       p(2)._1, (1L << p(2)._2) - 1, 1L << p(2)._2,
-       p(3)._1, (1L << p(3)._2) - 1, 1L << p(3)._2)
+      require(combo.size == 2, "the combos frame holds block-pair families")
+      val (o1, w1) = combo(0)
+      val (o2, w2) = combo(1)
+      (fam, t, o1, (1L << w1) - 1, o2, (1L << w2) - 1, 1L << w2)
     }
 
-  /** d03's pipeline with the family switch-over count as a parameter
-    * (the gate passes [[SimHashWideAt]]; the spec passes 0 to force the
-    * widened family and prove output invariance). Bucket rows come from
-    * a broadcast join against a 238-row combos frame — the family
+  /** d03's pipeline. Bucket rows come from a broadcast join against a
+    * 43-row combos frame (28 narrow + 15 dense tables) — the family
     * tables are DATA, not expression trees, so whole-stage codegen stays
-    * small either way (an explode over 210 struct literals blew janino's
-    * 64KB method limit and fell back to interpreted execution — exactly
-    * the path that must stay codegen'd at scale). The ACTIVE family is
-    * picked by a one-row-broadcast selector in the join filter — the
-    * count ladder (wideAt) first, then the MEASURED density flip to the
-    * dense C(6,2) family ([[D03DensePairsPerDoc]]) — no driver action,
+    * small. The ACTIVE family is picked by a one-row-broadcast selector
+    * in the join filter — the MEASURED density flip to the dense C(6,2)
+    * family past `densePairsPerDoc` ([[D03DensePairsPerDoc]] at the
+    * gate; specs pass a negative value to force dense, Long.MaxValue to
+    * force narrow) — inside the plan, with no separate Spark action,
     * mirroring the oracle's `FROM sig, combos, sel2`.
     */
-  private[graft] def d03Body(s: SparkSession, d: String, wideAt: Long): DataFrame =
-    d03Body(s, d, wideAt, D03DensePairsPerDoc)
-
-  private[graft] def d03Body(s: SparkSession, d: String, wideAt: Long,
-      densePairsPerDoc: Long): DataFrame = {
+  private[graft] def d03Body(s: SparkSession, d: String,
+      densePairsPerDoc: Long = D03DensePairsPerDoc): DataFrame = {
     val sp = s
     import sp.implicits._
     val sigs = persistTracked("d03_sigs", Tables.documents(s, d)
@@ -217,29 +181,24 @@ object Dedup {
           .filter(col("a_id") < col("b_id"))
           .agg(count(lit(1)).as("sp")))
       .select(
-        when(col("corpus_n") > wideAt, 1)
-          .when(col("sp").cast("decimal(38,0)") * col("corpus_n") >
-                lit(densePairsPerDoc) * col("n_s").cast("decimal(38,0)") * col("n_s"), 2)
+        when(col("sp").cast("decimal(38,0)") * col("corpus_n") >
+             lit(densePairsPerDoc) * col("n_s").cast("decimal(38,0)") * col("n_s"), 1)
           .otherwise(0).as("active_fam"))
       .withColumn("cut_radius",
-        when(col("active_fam") === 2, DenseRadius).otherwise(SimHashRadius))
+        when(col("active_fam") === 1, DenseRadius).otherwise(SimHashRadius))
     // one row, but its plan contains the sample join — persist so the
     // two consumers (combos filter, radius cut) run the measurement once
     val selP = persistTracked("d03_sel", sel)
     val combos =
       (comboTupleRows(0, BlockWidth, 2) ++
-        comboTupleRows(1, WideBlockWidth, WideChoose) ++
-        comboTupleRows(2, DenseBlockWidth, DenseChoose))
-        .toDF("fam", "tbl", "o1", "m1",
-              "o2", "m2", "s2", "o3", "m3", "s3", "o4", "m4", "s4")
+        comboTupleRows(1, DenseBlockWidth, DenseChoose))
+        .toDF("fam", "tbl", "o1", "m1", "o2", "m2", "s2")
     val buckets = sigs
       .crossJoin(broadcast(selP))
       .crossJoin(broadcast(combos))
       .filter(col("fam") === col("active_fam"))
       .select(col("doc_id"), col("simhash"), col("tbl"),
-        expr("((((simhash >> o1) & m1) * s2 + ((simhash >> o2) & m2)) * s3" +
-             " + ((simhash >> o3) & m3)) * s4 + ((simhash >> o4) & m4)")
-          .as("bkey"))
+        expr("((simhash >> o1) & m1) * s2 + ((simhash >> o2) & m2)").as("bkey"))
     // Candidate pairing is a bucket-key SELF-JOIN via sort-merge — kept
     // deliberately after measuring the alternatives at sf10 (500k docs,
     // 105M bucket rows) under the 8g driver-default heap:
@@ -258,35 +217,12 @@ object Dedup {
               bit_count(expr("a_hash ^ b_hash")).as("hamming"))
       // filter BEFORE distinct: drops the (majority) non-matching
       // pairs map-side instead of shuffling them through the dedup.
-      // The cut is the ACTIVE family's guaranteed radius (6 narrow/wide,
+      // The cut is the ACTIVE family's guaranteed radius (6 narrow,
       // 4 dense) so the output stays exactly "all pairs within the
       // radius" — opportunistic beyond-radius collisions never leak.
       .crossJoin(broadcast(selP.select("cut_radius")))
       .filter(col("hamming") <= col("cut_radius"))
       .select("a_id", "b_id", "hamming")
-      .distinct()
-      .orderBy("a_id", "b_id")
-  }
-
-  /** d03 under the FORCED dense family: same pipeline shape as d03Body
-    * (bucket self-join via sort-merge, Hamming cut before distinct) with
-    * [[DenseBlockWidth]]/[[DenseChoose]] tables and the matching
-    * guaranteed radius as the output cut — so the result is EXACTLY
-    * "all pairs at Hamming <= DenseRadius" (opportunistic 5-6 bit
-    * collisions are filtered rather than emitted partially, keeping the
-    * semantics provable). Probe/spec path, not a gate entry.
-    */
-  private[graft] def d03DenseBody(s: SparkSession, d: String): DataFrame = {
-    val sigs = persistTracked("d03dense_sigs", Tables.documents(s, d)
-      .select(col("doc_id"), expr("simhash60_md5(text)").as("simhash")))
-    val buckets = simhashBuckets(sigs, DenseBlockWidth, DenseChoose)
-    val a = buckets.toDF("a_id", "a_hash", "tbl", "bkey")
-    val b = buckets.toDF("b_id", "b_hash", "tbl", "bkey")
-    a.join(b, Seq("tbl", "bkey"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-              bit_count(expr("a_hash ^ b_hash")).as("hamming"))
-      .filter(col("hamming") <= DenseRadius)
       .distinct()
       .orderBy("a_id", "b_id")
   }
@@ -1157,35 +1093,28 @@ object Dedup {
        |ORDER BY a_id, b_id""".stripMargin
   }
 
-  /** One family's combo tables as DuckDB VALUES rows, each combo padded
-    * to 4 uniform (offset, mask, multiplier) slices — a padding slice
-    * (off 0, mask 0, mult 1) contributes `acc*1 + 0 = acc` to the key
-    * fold, so c=2 and c=4 families share one bkey expression. The fold is
-    * bit-identical to the operator's [[comboKey]] (acc*2^w + block).
+  /** One family's combo tables as DuckDB VALUES rows
+    * (fam, tbl, o1, m1, o2, m2, s2) — the same block-pair slices as the
+    * operator's combos frame, so the key fold is bit-identical to
+    * [[comboKey]] (acc*2^w + block).
     */
   private def comboValuesRows(fam: Int, widths: Array[Int], c: Int): String =
-    blockCombos(widths, c).zipWithIndex.map { case (combo, t) =>
-      val padded = combo ++ Seq.fill(4 - combo.size)((0, 0))
-      val slices = padded.map { case (off, w) =>
-        s"$off, ${(1L << w) - 1}, ${1L << w}" }
-      s"($fam, $t, ${slices.mkString(", ")})"
-    }.mkString(",\n    ")
+    comboTupleRows(fam, widths, c).map(_.productIterator.mkString("(", ", ", ")"))
+      .mkString(",\n    ")
 
   /** d03's DuckDB twin: md5-60-bit word hashes -> 60 per-bit sign sums ->
-    * the ACTIVE family's bucket tables (all three families' combos
-    * generated as one VALUES list from the same arrays the operator
-    * uses) -> bucket self-join -> Hamming filter at the active radius.
-    * Family selection mirrors the operator exactly: the count ladder
-    * first (corpus_n vs wideAt — the gate's wideAt is MaxValue, so fam 1
-    * is spec-only), then the MEASURED density flip — narrow-family
-    * candidate pairs over the 10%-of-md5-buckets sample, pairs-per-doc
-    * estimate sp*n/n_s^2 compared as an exact HUGEINT (Spark:
-    * DECIMAL(38,0)) integer inequality against [[D03DensePairsPerDoc]].
+    * the ACTIVE family's bucket tables (both families' combos generated
+    * as one VALUES list from the same arrays the operator uses) ->
+    * bucket self-join -> Hamming filter at the active radius. Family
+    * selection mirrors the operator exactly: the MEASURED density flip —
+    * narrow-family candidate pairs over the 10%-of-md5-buckets sample,
+    * pairs-per-doc estimate sp*n/n_s^2 compared as an exact HUGEINT
+    * (Spark: DECIMAL(38,0)) integer inequality against
+    * [[D03DensePairsPerDoc]].
     */
   private def duckD03Sql: String = {
     val comboRows = comboValuesRows(0, BlockWidth, 2) + ",\n    " +
-      comboValuesRows(1, WideBlockWidth, WideChoose) + ",\n    " +
-      comboValuesRows(2, DenseBlockWidth, DenseChoose)
+      comboValuesRows(1, DenseBlockWidth, DenseChoose)
     s"""WITH w AS (
        |  SELECT doc_id, string_split_regex(text, '\\s+') AS ws FROM documents),
        |hw AS (
@@ -1200,7 +1129,7 @@ object Dedup {
        |    AS BIGINT) AS simhash
        |  FROM hw),
        |n AS (SELECT count(*) AS corpus_n FROM documents),
-       |combos(fam, tbl, o1, m1, s1, o2, m2, s2, o3, m3, s3, o4, m4, s4) AS (VALUES
+       |combos(fam, tbl, o1, m1, o2, m2, s2) AS (VALUES
        |    $comboRows),
        |samp AS (
        |  SELECT doc_id, simhash FROM sig
@@ -1209,27 +1138,24 @@ object Dedup {
        |ns AS (SELECT count(*) AS n_s FROM samp),
        |sbk AS (
        |  SELECT doc_id, tbl,
-       |         ((((simhash >> o1) & m1) * s2 + ((simhash >> o2) & m2)) * s3
-       |           + ((simhash >> o3) & m3)) * s4 + ((simhash >> o4) & m4) AS bkey
+       |         ((simhash >> o1) & m1) * s2 + ((simhash >> o2) & m2) AS bkey
        |  FROM samp, combos WHERE combos.fam = 0),
        |spc AS (
        |  SELECT count(*) AS sp FROM sbk a JOIN sbk b
        |    ON a.tbl = b.tbl AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
        |sel AS (
-       |  SELECT CASE WHEN n.corpus_n > $SimHashWideAt THEN 1
-       |              WHEN CAST(spc.sp AS HUGEINT) * n.corpus_n
+       |  SELECT CASE WHEN CAST(spc.sp AS HUGEINT) * n.corpus_n
        |                   > $D03DensePairsPerDoc * CAST(ns.n_s AS HUGEINT) * ns.n_s
-       |              THEN 2 ELSE 0 END AS active_fam
+       |              THEN 1 ELSE 0 END AS active_fam
        |  FROM n, ns, spc),
        |sel2 AS (
        |  SELECT active_fam,
-       |         CASE WHEN active_fam = 2 THEN $DenseRadius
+       |         CASE WHEN active_fam = 1 THEN $DenseRadius
        |              ELSE $SimHashRadius END AS cut_radius
        |  FROM sel),
        |buckets AS (
        |  SELECT doc_id, simhash, tbl,
-       |         ((((simhash >> o1) & m1) * s2 + ((simhash >> o2) & m2)) * s3
-       |           + ((simhash >> o3) & m3)) * s4 + ((simhash >> o4) & m4) AS bkey
+       |         ((simhash >> o1) & m1) * s2 + ((simhash >> o2) & m2) AS bkey
        |  FROM sig, combos, sel2
        |  WHERE combos.fam = sel2.active_fam)
        |SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
@@ -1690,13 +1616,14 @@ object Dedup {
     * non-matching spans before the exchange. Output is bit-identical
     * either way (BoilerLakeSpec).
     *
-    * Measured (BoilerProbe, prebuilt model on every path, sf1): the
-    * first in-row probe formulation — interpreted transform+filter HOFs
-    * around the codegen'd binary search — ran 14.1 s vs 2.2 broadcast-
-    * join / 3.5 shuffle-join, which exposed the HOF wrapper (not the
-    * search) as ~6x the whole operator. Fusing the probe into ONE
-    * codegen'd kernel (SpanHitStarts: span hashing + binary search per
-    * row, no lambdas) brought the in-row form to 2.45 s — parity with
+    * Measured (bench/BENCH_boiler_probe_*_r10.json, prebuilt model on
+    * every path, sf1): the first in-row probe formulation — interpreted
+    * transform+filter HOFs around the codegen'd binary search — ran
+    * 14.1 s vs 2.2 broadcast-join / 3.5 shuffle-join, which exposed the
+    * HOF wrapper (not the search) as ~6x the whole operator. Fusing
+    * the probe into ONE codegen'd kernel (SpanHitStarts: span hashing +
+    * binary search per row, no lambdas) brought the in-row form to
+    * 2.45 s — parity with
     * the joins (broadcast 1.87 / shuffle 2.62 same run,
     * bench/BENCH_boiler_probe_*.json). Pick by MODEL SIZE now, not
     * probe speed: in-row/broadcast under ~10^7 spans (~100 MB of
@@ -1829,23 +1756,16 @@ object Dedup {
     // recall radius — no silently-missed near-dups, unlike chunk schemes
     // whose guarantee stops below their threshold.
     //
-    // Scale: the ACTIVE family is count-laddered (the d04/d09/d10
-    // discipline). Below SimHashWideAt: 28 bucket rows per doc,
-    // candidates only from ~15-bit-key equality joins — ~1/2340 of all
-    // pairs under a uniform code distribution. Past it: the widened
-    // (10 x 6-bit choose 4) family — 210 tables of 24-bit keys, ~2^8
-    // sparser buckets each, same pigeonhole radius (10 - 4 = 6), so
-    // recall is still exactly 1.0 at the radius (SimHashSpec proves the
-    // widened family exhaustive, and proves the OUTPUT is invariant
-    // under the switch — both families are complete at the radius and
-    // the Hamming filter is exact, so the ladder is purely a density
-    // knob). Selection is a one-row-broadcast corpus count feeding two
-    // pre-explode filters — no driver action; the DuckDB oracle carries
-    // both families' combo tables and selects with the same count CASE.
-    // An exact-recall Hamming join stays inherently pair-shaped — the
-    // ladder keeps the per-bucket density (hence pair work per doc)
-    // bounded as the corpus grows; beyond ~16M docs add a third rung
-    // with the same algebra (e.g. 12-choose-6: 924 tables, 30-bit keys).
+    // Scale: 28 bucket rows per doc, candidates only from ~15-bit-key
+    // equality joins — ~1/2340 of all pairs under a uniform code
+    // distribution. A corpus of near-identical cliques defeats any key
+    // width, so the ACTIVE family is chosen by MEASURED density
+    // (D03DensePairsPerDoc): narrow-family candidate pairs over a 10%
+    // md5 sample, and past the threshold the C(6,2) dense family at
+    // radius 4 (see DenseBlockWidth). Selection is a one-row-broadcast
+    // selector feeding the combos filter and the radius cut, inside the
+    // plan; the DuckDB oracle carries both families' combo tables and
+    // selects with the same integer inequality.
     // Code/hash family: a 60-bit code over md5-60-bit word hashes
     // (simhash60_md5) rather than the 64-bit xxhash kernel, so every
     // stage — word split, word hash, per-bit sign sums, block keys,
@@ -1854,9 +1774,9 @@ object Dedup {
     // as the general-purpose function; only this operator's signature
     // moved). 60 bits split into 8 blocks of widths 8,8,8,8,7,7,7,7:
     // pigeonhole over block COUNT, not width, so the radius-6 guarantee
-    // holds in both families.
+    // holds.
     "d03_simhash" -> OpDef.sql(
-      (s, d) => d03Body(s, d, SimHashWideAt),
+      (s, d) => d03Body(s, d),
       duckD03Sql),
 
     // Blocked character-set Jaccard pairs (SQL-expressible near-dup metric).

@@ -225,7 +225,7 @@ object Pipeline {
   //     step of the shard count rewrites all placements (metadata-only).
   // ---------------------------------------------------------------------
 
-  /** The delta-selection bucket (gate + P02Probe): md5-salted,
+  /** The delta-selection bucket (gate; bench/BENCH_p02_incr_*): md5-salted,
     * independent of the split bucket so delta ids interleave with base
     * ids — the adversarial arrival order.
     */

@@ -404,8 +404,9 @@ object Similarity {
     * already documents for level 1, applied twice.
     */
   /** The composite (cell, cell2) assignment stage of [[e04LargeBody]],
-    * persisted under "e04L_assigned" — factored out so SemProbe can time
-    * assignment separately from the in-cell pair join.
+    * persisted under "e04L_assigned" — factored out so assignment can be
+    * timed separately from the in-cell pair join
+    * (bench/BENCH_e04_scale_r7.json).
     */
   private[graft] def e04LargeAssigned(emb: DataFrame, level2Base: Long,
       corpusN: Long): DataFrame = {
@@ -648,8 +649,9 @@ object Similarity {
   }
 
   /** e08's composite trained assignment (vec_id, cell, cell2, embedding),
-    * persisted under "e08_assigned" — factored so the spec and SemProbe
-    * can measure cell occupancy/density without the pair stage.
+    * persisted under "e08_assigned" — factored so the spec can measure
+    * cell occupancy/density without the pair stage (the sf10 split is
+    * in bench/BENCH_e08_scale_r8.json).
     */
   private[graft] def e08Assigned(s: SparkSession, emb: DataFrame): DataFrame =
     graft.Caching.persistTracked("e08_assigned",
@@ -1187,9 +1189,9 @@ object Similarity {
     * sf1); (2) in production the sketch IS the stored artifact — built
     * once at ingest, scanned instead of the float vectors. Sizes at
     * this corpus's dim=64: the int8 codes are 64 B + 2 scalars ≈ 80 B/
-    * row packed (AnnTierProbe's figure) vs the 256 B float vector; the
-    * materialized `dx` column here is array<float> — 256 B, the same
-    * as the embedding — so the GATE artifact trades no storage, only
+    * row packed (bench/BENCH_ann_tiers_r17.json) vs the 256 B float
+    * vector; the materialized `dx` column here is array<float> — 256 B,
+    * the same as the embedding — so the GATE artifact trades no storage, only
     * IO shape (the scan can exclude `embedding`); the ~80 B packed
     * tinyint layout is the production form (store qx+sx, dequantize in
     * the scan projection). Everything per-pair downstream is codegen:

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -14,6 +14,44 @@ import java.util.concurrent.atomic.AtomicInteger
 private[streaming] object StreamRun {
 
   private val runId = new AtomicInteger()
+
+  /** The drain's private session and the streamed plan re-bound to it.
+    *
+    * Stateful streaming ops allocate one state store PER shuffle
+    * partition per operator (a stream-stream join allocates four) and
+    * pay their checkpoint/commit overhead per micro-batch; at the gate's
+    * data sizes that fixed cost dwarfs the work, so the drain runs with
+    * fewer partitions — but a BIG drain (sf10's 20M-event feeds) is the
+    * opposite regime: the stateful phase is CPU-bound on per-row object
+    * work and 8 state partitions cap it at 8 threads. Callers that know
+    * their feed size pass `inputBytes` and the drain scales its state
+    * shard count with the data (~one shard per 2 MB of feed, clamped to
+    * [8, session default]) — the spill-aware sizing rule: partition
+    * count follows data volume, and results are partition-count
+    * invariant (keyed state and aggregates don't care how keys shard).
+    *
+    * The count is set on a CLONE of the caller's session (shared
+    * context and caches; a copy of its runtime conf, so a state-store
+    * provider the caller set still applies) that the query starts
+    * from, so the caller's session never sees it: a concurrent plan
+    * build or stream on the caller's session keeps its own value, and
+    * nothing is restored while the stream thread may still be
+    * capturing confs. The caller's streaming listeners are registered
+    * on the clone too, so they still see the drain's progress. On a
+    * real cluster this knob sizes state shards to executors as usual.
+    */
+  private def runSession(spark: SparkSession, streamed: DataFrame,
+                         inputBytes: Long): (SparkSession, DataFrame) = {
+    val key = "spark.sql.shuffle.partitions"
+    val parts =
+      if (inputBytes <= 0L) 8L
+      else math.max(8L, math.min(spark.conf.get(key).toLong,
+        inputBytes / (2L * 1024 * 1024)))
+    val run = GraftSqlBridge.cloneSession(spark)
+    run.conf.set(key, parts.toString)
+    spark.streams.listListeners().foreach(run.streams.addListener)
+    (run, GraftSqlBridge.ofRows(run, GraftSqlBridge.logicalPlan(streamed)))
+  }
 
   /** [[drain]] for append-mode legs whose RESULT is large (sf10's
     * sessionization emits millions of sessions, the dedup leg re-emits
@@ -30,22 +68,13 @@ private[streaming] object StreamRun {
                    name: String, scratch: String,
                    inputBytes: Long = -1L): DataFrame = {
     graft.operators.Lake.deleteTree(java.nio.file.Paths.get(scratch))
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(_.toLong).getOrElse {
-        if (inputBytes <= 0L) 8L
-        else math.max(8L, math.min(before.toLong,
-          inputBytes / (2L * 1024 * 1024)))
-      }
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
-      val q = streamed.writeStream.format("parquet")
-        .option("path", s"$scratch/out")
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .outputMode("append")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    val (_, onRun) = runSession(spark, streamed, inputBytes)
+    val q = onRun.writeStream.format("parquet")
+      .option("path", s"$scratch/out")
+      .option("checkpointLocation", s"$scratch/ckpt")
+      .outputMode("append")
+      .start()
+    try q.processAllAvailable() finally q.stop()
     val outPath = java.nio.file.Paths.get(scratch, "out")
     val out =
       if (java.nio.file.Files.isDirectory(outPath))
@@ -62,46 +91,18 @@ private[streaming] object StreamRun {
             name: String, feeds: Seq[() => Unit] = Seq.empty,
             inputBytes: Long = -1L): DataFrame = {
     val sink = s"${name}_${runId.incrementAndGet()}"
-    // Stateful streaming ops allocate one state store PER shuffle
-    // partition per operator (a stream-stream join allocates four) and
-    // pay their checkpoint/commit overhead per micro-batch; at the gate's
-    // data sizes that fixed cost dwarfs the work, so the drain runs with
-    // fewer partitions — but a BIG drain (sf10's 20M-event feeds) is the
-    // opposite regime: the stateful phase is CPU-bound on per-row object
-    // work and 8 state partitions cap it at 8 threads. Callers that know
-    // their feed size pass `inputBytes` and the drain scales its state
-    // shard count with the data (~one shard per 2 MB of feed, clamped to
-    // [8, session default]) — the spill-aware sizing rule: partition
-    // count follows data volume, and results are partition-count
-    // invariant (keyed state and aggregates don't care how keys shard).
-    // The streaming thread clones the session and
-    // captures confs ASYNCHRONOUSLY after start() returns, so the conf is
-    // held until the drain completes (restoring right after start()
-    // would race the clone and let the first micro-batch run at the
-    // session default). On a real cluster this knob sizes state shards to
-    // executors as usual.
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    // SPARK_GRAFT_STREAM_PARTS pins the drain's state shard count
-    // outright (cluster tuning / experiments); otherwise size from the
-    // feed when known
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(_.toLong).getOrElse {
-        if (inputBytes <= 0L) 8L
-        else math.max(8L, math.min(before.toLong,
-          inputBytes / (2L * 1024 * 1024)))
-      }
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    val (run, onRun) = runSession(spark, streamed, inputBytes)
+    val q = onRun.writeStream.format("memory").queryName(sink)
+      .outputMode(mode).start()
     try {
-      val q = streamed.writeStream.format("memory").queryName(sink)
-        .outputMode(mode).start()
-      try {
-        if (feeds.isEmpty) q.processAllAvailable()
-        else feeds.foreach { f => f(); q.processAllAvailable() }
-      } finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
-    val out = spark.table(sink)
+      if (feeds.isEmpty) q.processAllAvailable()
+      else feeds.foreach { f => f(); q.processAllAvailable() }
+    } finally q.stop()
+    // the sink's temp view lives in the session that started the query;
+    // the result is handed back bound to the caller's session
+    val out = GraftSqlBridge.ofRows(spark, GraftSqlBridge.logicalPlan(run.table(sink)))
     graft.Caching.persistTracked(name, out)
-    spark.catalog.dropTempView(sink)
+    run.catalog.dropTempView(sink)
     out
   }
 }

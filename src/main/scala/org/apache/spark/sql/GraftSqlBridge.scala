@@ -15,6 +15,12 @@ object GraftSqlBridge {
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[ClassicDataset[Row]].logicalPlan
 
+  /** A session over the same context and shared state that starts from a
+    * copy of `spark`'s runtime conf, temp views and functions.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[ClassicSession].cloneSession()
+
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -54,7 +54,7 @@ class AnnRecallSpec extends AnyFunSuite with SparkFixture {
     // scale-free and Hamming-1 multiprobe lifts it (p^bits ->
     // p^bits + bits*p^(bits-1)*(1-p), OR'd over NumDupBands bands), so
     // these floors are meant to HOLD ACROSS SFs, not just at the gate
-    // SF — AnnTierProbe measures the same quantity at sf10 (the r12
+    // SF — bench/BENCH_ann_tiers_r*.json records it at sf10 (the r12
     // static-code form measured 0.02 there; floors below would have
     // caught it)
     assert(mean >= 0.6, f"mean LSH recall $mean%.2f below floor 0.6")

@@ -127,18 +127,25 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("InSortedLongs equals Set membership under random probes") {
+  test("CountInSortedLongs equals the Set-membership count under random probes") {
     val r = new Random(79)
     for (_ <- 1 to 100) {
       val vals = Array.fill(r.nextInt(40))(r.nextLong() % 1000)
       val sorted = vals.clone().sorted
       val set = vals.toSet
       for (_ <- 1 to 50) {
-        val probe = r.nextLong() % 1000
-        val got = graft.expressions.InSortedLongs(
-          org.apache.spark.sql.catalyst.expressions.Literal(probe), sorted)
+        // small value range: probe arrays repeat elements, and n = 0
+        // gives the empty array
+        val arr = Array.fill(r.nextInt(20))(r.nextLong() % 1000)
+        val expected = arr.count(set.contains).toLong
+        assert(HashKernels.countInSorted(ArrayData.toArrayData(arr), sorted) == expected,
+          s"arr=${arr.toSeq} vals=${vals.toSeq}")
+        val got = graft.expressions.CountInSortedLongs(
+          org.apache.spark.sql.catalyst.expressions.Literal.create(
+            arr.toSeq, org.apache.spark.sql.types.ArrayType(
+              org.apache.spark.sql.types.LongType, containsNull = false)), sorted)
           .eval(null)
-        assert(got == set.contains(probe), s"probe=$probe vals=${vals.toSeq}")
+        assert(got == expected, s"arr=${arr.toSeq} vals=${vals.toSeq}")
       }
     }
   }

@@ -76,81 +76,6 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
     assert(kernel.count() > 0)
   }
 
-  /** The widened family d03's count ladder switches to past
-    * Dedup.SimHashWideAt — same guaranteed radius (10 - 4 = 6) with
-    * 24-bit keys for corpora where the 28 pair tables' ~15-bit keys run
-    * too dense (measured turning over at sf10 —
-    * bench/BENCH_dedup_scale_r6.json).
-    */
-  private val WideWidths = Dedup.WideBlockWidth
-  private val WideChoose = Dedup.WideChoose
-
-  test("the widened 10-choose-4 family is exhaustively complete at the same radius") {
-    assert(WideWidths.length - WideChoose == Dedup.SimHashRadius)
-    val sigsDf = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), expr("simhash60_md5(text)").as("simhash"))
-    val sigs = sigsDf.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val expected = (for {
-      i <- sigs.indices.iterator
-      j <- (i + 1) until sigs.length
-      if java.lang.Long.bitCount(sigs(i)._2 ^ sigs(j)._2) <= Dedup.SimHashRadius
-    } yield (sigs(i)._1, sigs(j)._1)).toSet
-    assert(expected.nonEmpty, "no near-dup pairs at this radius; spec is vacuous")
-
-    val buckets = Dedup.simhashBuckets(sigsDf, WideWidths, WideChoose)
-    val a = buckets.toDF("a_id", "a_hash", "tbl", "bkey")
-    val b = buckets.toDF("b_id", "b_hash", "tbl", "bkey")
-    val got = a.join(b, Seq("tbl", "bkey"))
-      .filter(col("a_id") < col("b_id"))
-      .filter(bit_count(expr("a_hash ^ b_hash")) <= Dedup.SimHashRadius)
-      .select("a_id", "b_id").distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the pigeonhole guarantee holds for the widened family too: with
-    // <= 6 differing bits, some 4 of the 10 blocks are untouched and that
-    // combination's table catches the pair
-    assert((expected -- got).isEmpty,
-      s"widened family missed ${(expected -- got).size} of ${expected.size} true pairs")
-    assert((got -- expected).isEmpty, "pairs beyond the radius emitted")
-  }
-
-  test("wider keys cut candidate work at the same radius (sf0.1)") {
-    val dir = "/root/testdata/sf0.1"
-    assume(new java.io.File(dir).isDirectory)
-    val sigsDf = Tables.documents(spark, dir)
-      .select(col("doc_id"), expr("simhash60_md5(text)").as("simhash"))
-      .persist()
-    try {
-      // candidate work = sum over (tbl, bucket) of n*(n-1)/2 joined pairs
-      // — the self-join's actual row count, computed from bucket sizes
-      def pairWork(widths: Array[Int], c: Int): Long =
-        Dedup.simhashBuckets(sigsDf, widths, c)
-          .groupBy("tbl", "bkey").count()
-          .agg(sum(col("count") * (col("count") - 1))).head.getLong(0) / 2
-      val pairCfg = pairWork(Dedup.BlockWidth, 2)
-      val wideCfg = pairWork(WideWidths, WideChoose)
-      info(s"candidate pairs: 8-choose-2 = $pairCfg, 10-choose-4 = $wideCfg")
-      // 7.5x the tables but ~2^8 sparser buckets: the widened family must
-      // do strictly less join work on the same corpus
-      assert(wideCfg < pairCfg,
-        s"widened family did MORE candidate work ($wideCfg >= $pairCfg)")
-    } finally sigsDf.unpersist()
-  }
-
-  test("d03 output is invariant under the count-laddered family switch") {
-    // both families are exhaustively complete at the radius and the
-    // Hamming filter is exact, so forcing the wide family (switch-over
-    // count 0) must change NOTHING — the ladder is a density knob, not a
-    // semantics knob. This is what makes the count ladder safe: a rung
-    // disagreement could only ever cost performance, never correctness.
-    val gate = SparkEntry.queries("d03_simhash")(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    val forcedWide = Dedup.d03Body(spark, sfDir, wideAt = 0L)
-      .collect().map(_.toSeq).toSeq
-    assert(gate.nonEmpty, "no simhash pairs at gate scale; spec is vacuous")
-    assert(gate == forcedWide,
-      s"family switch changed the output: ${gate.size} vs ${forcedWide.size} rows")
-  }
-
   test("d03 block-pair banding is exhaustively complete at the radius (sf0.01)") {
     val dir = "/root/testdata/sf0.01"
     assume(new java.io.File(dir).isDirectory)
@@ -181,7 +106,9 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
   test("the dense 6-choose-2 family is exhaustively complete at radius 4 (sf0.01)") {
     // the denser-corpus escape (smaller guaranteed radius): C(6,2) = 15
     // tables of 20-bit keys — provably everything within Hamming <= 4,
-    // nothing beyond it
+    // nothing beyond it. A negative threshold makes the selector's
+    // sp*n > threshold*n_s^2 always true, so d03's own plan runs the
+    // dense arm.
     val dir = "/root/testdata/sf0.01"
     assume(new java.io.File(dir).isDirectory)
     val sigs = Tables.documents(spark, dir)
@@ -197,7 +124,7 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
     } yield (sigs(i)._1, sigs(j)._1, h)).toSet
     assert(expected.nonEmpty, "testdata has no pairs at radius 4; spec is vacuous")
 
-    val got = Dedup.d03DenseBody(spark, dir)
+    val got = Dedup.d03Body(spark, dir, densePairsPerDoc = -1L)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
       .toSet
@@ -208,9 +135,9 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("the dense family halves bucket rows against the narrow family") {
-    // the cost terms the wide family couldn't cut: 15 tables of rows
+    // the two cost terms of the bucket self-join: 15 tables of rows
     // (vs 28) and 20-bit keys (vs 15/16) — the structural claim behind
-    // the probe's measured candidate cut
+    // the measured candidate cut (bench/BENCH_d03_dense_r8.json)
     assert(Dedup.blockCombos(Dedup.DenseBlockWidth, Dedup.DenseChoose).size == 15)
     assert(Dedup.DenseRadius == 4)
     val dir = "/root/testdata/sf0.01"
@@ -269,7 +196,7 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
       "no pairs in the 5-6 Hamming band; the radius cut is untestable")
 
     def run(threshold: Long) =
-      Dedup.d03Body(spark, dir.toString, Dedup.SimHashWideAt, threshold)
+      Dedup.d03Body(spark, dir.toString, threshold)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val dense = run(Dedup.D03DensePairsPerDoc)
     assert(dense == exp4,
@@ -286,7 +213,7 @@ class SimHashSpec extends AnyFunSuite with SparkFixture {
     // pairs (non-vacuously narrow) and equal the forced-narrow run.
     val gate = SparkEntry.queries("d03_simhash")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val forcedNarrow = Dedup.d03Body(spark, sfDir, Dedup.SimHashWideAt, Long.MaxValue)
+    val forcedNarrow = Dedup.d03Body(spark, sfDir, densePairsPerDoc = Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(gate == forcedNarrow,
       "the gate corpus flipped to the dense family; threshold miscalibrated")
