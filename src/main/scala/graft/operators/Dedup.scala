@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.OpDef
 import graft.expressions.GraftFunctions
@@ -790,16 +790,18 @@ object Dedup {
     // so a tiny edge table can be coalesced before it is written — one
     // checkpoint file and task instead of the caller's 32. The small
     // setting lives in a CLONED session (shared context, caches and
-    // checkpoint dir; private conf): mutate-and-restore on the caller's
-    // session raced — two interleaved runs could strand the session at
-    // 1 partition, and any concurrent query planned its shuffles with
-    // the loop's tiny value.
+    // checkpoint dir; a private copy of the caller's runtime conf, so
+    // e.g. a broadcast threshold the caller set still governs the
+    // loop's joins): mutate-and-restore on the caller's session raced —
+    // two interleaved runs could strand the session at 1 partition, and
+    // any concurrent query planned its shuffles with the loop's tiny
+    // value.
     val partsKey = "spark.sql.shuffle.partitions"
     val loopParts = math.max(1L, math.min(s.conf.get(partsKey).toLong,
       (edgeRows + 99999L) / 100000L)).toString
     val edgesCut = (if (loopParts == "1") edges.coalesce(1) else edges)
       .checkpoint() // eager: materialize, then truncate
-    val loopSession = s.newSession()
+    val loopSession = GraftSqlBridge.cloneSession(s)
     loopSession.conf.set(partsKey, loopParts)
     // a single-partition loop gains nothing from adaptive re-planning —
     // AQE's per-stage plan/stats round-trips are pure overhead at this
@@ -814,15 +816,15 @@ object Dedup {
       loopSession.conf.set("spark.sql.codegen.wholeStage", "false")
     }
     // frames plan under the session that CREATED them, so the loop must
-    // build from a frame owned by the clone — a global temp view (the
-    // global_temp db is shared across sessions) carries the checkpoint
-    // scan over without re-materializing anything
+    // build from a frame owned by the clone — re-binding the checkpoint
+    // scan's plan to it carries the scan over without re-materializing
+    // anything, and without a shared view name two concurrent loops
+    // could collide on
     // (a 1-partition loop reads a 1-partition checkpoint: a
     // SinglePartition child satisfies every join distribution, so the
     // per-iteration joins run exchange-free in one stage)
-    val edgesView = s"graft_${name}_loop_edges"
-    edgesCut.createOrReplaceGlobalTempView(edgesView)
-    val edgesLoop = loopSession.table(s"global_temp.$edgesView")
+    val edgesLoop = GraftSqlBridge.ofRows(loopSession,
+      GraftSqlBridge.logicalPlan(edgesCut))
     // `cached` is whatever materialized table currently backs the labels;
     // `pending` holds persisted-but-unreleased intermediates (odd steps
     // materialize lazily through the NEXT step's evaluation — counting
@@ -938,23 +940,19 @@ object Dedup {
         (ckptFileOf(edgesCut) ++ prevCkptFile).foreach(f => dropCkpt(s, Some(f)))
         if (staleCkpts.nonEmpty) keptCkpts.put(name, staleCkpts)
         throw t
-    } finally s.catalog.dropGlobalTempView(edgesView)
-    // Hand the converged labels back to the CALLER's session (again via
-    // the shared global_temp db): downstream plans built on the result
-    // must plan under the caller's conf, not the loop clone's
-    // 1-partition setting. The CALLER-bound frame is what gets
-    // persisted+tracked: cache replacement does NOT reliably match the
-    // clone-session frame through the view alias (measured: consumers
-    // recomputed the final hops per use), so the tracked copy must be
-    // the very frame consumers' plans are built from. It materializes
-    // once, from the kept checkpoint cut; the loop-session incarnation
-    // is released here.
-    val labelsView = s"graft_${name}_loop_labels"
-    cached.createOrReplaceGlobalTempView(labelsView)
+    }
+    // Hand the converged labels back to the CALLER's session (the same
+    // plan re-bind): downstream plans built on the result must plan
+    // under the caller's conf, not the loop clone's 1-partition setting.
+    // The CALLER-bound frame is what gets persisted+tracked: cache
+    // replacement does NOT reliably match the clone-session frame
+    // (measured: consumers recomputed the final hops per use), so the
+    // tracked copy must be the very frame consumers' plans are built
+    // from. It materializes once, from the kept checkpoint cut; the
+    // loop-session incarnation is released here.
     val out = persistTracked(s"${name}_labels",
-      s.table(s"global_temp.$labelsView")
+      GraftSqlBridge.ofRows(s, GraftSqlBridge.logicalPlan(cached))
         .select(col("src").as("doc_id"), col("lbl").as("canonical_id")))
-    s.catalog.dropGlobalTempView(labelsView) // resolution was eager
     cached.unpersist(blocking = false)
     // the new labels now back the tracker entry, so the previous run's
     // cuts are finally unreferenced — delete them and record this run's

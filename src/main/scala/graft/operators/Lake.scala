@@ -850,8 +850,9 @@ object Lake {
 
     // l15: PARTITION-SCOPED MERGE inside the facade — l08's
     // touched-slice rewrite composed with versioning (the r14 verdict's
-    // missing trickle-tick cost model): GraftTable.mergeScoped rewrites
-    // ONLY the files whose manifest key ranges the changelog touches;
+    // missing trickle-tick cost model): GraftTable.merge's scoped arm
+    // rewrites ONLY the files whose manifest key ranges the changelog
+    // touches (a key-local changelog touches under half the files);
     // untouched files carry forward in the new version's manifest as
     // the SAME bytes — cost ∝ touched-files + changelog, never
     // snapshot. The gate applies a key-LOCAL changelog (keys below
@@ -861,7 +862,8 @@ object Lake {
     // carried-forward old files and the rewritten new ones must
     // compose into exactly the full answer. GraftTableSpec's scoped leg
     // proves untouched-file byte-identity, manifest/file agreement,
-    // scoped==full content, and reference-aware vacuum.
+    // scoped content == the whole-snapshot CDC merge, and
+    // reference-aware vacuum.
     "l15_scoped_merge" -> OpDef.sql(
       (s, d) => {
         val base = scratch("l15", d)
@@ -869,7 +871,7 @@ object Lake {
         val docs = Tables.documents(s, d).select("doc_id", "source", "text")
         val t = graft.sources.GraftTable.create(s, s"$base/tbl", docs)
         val cut = docs.agg(max("doc_id")).head.getLong(0) / 8
-        t.mergeScoped(cdcChangelog(t.read())
+        t.merge(cdcChangelog(t.read())
           .filter(col("doc_id") < lit(cut)))
         t.read()
           .select(col("doc_id"), col("source"),
@@ -899,10 +901,10 @@ object Lake {
         val t = graft.sources.GraftTable.create(s, s"$base/tbl", docs)
         val log = cdcChangelog(t.read())
         val cut = docs.agg(max("doc_id")).head.getLong(0) / 3
-        t.mergeScoped(log.filter(col("doc_id") < cut))
-        t.mergeScoped(log.filter(col("doc_id") >= cut &&
-                                 col("doc_id") < 2 * cut))
-        t.mergeScoped(log.filter(col("doc_id") >= 2 * cut))
+        t.merge(log.filter(col("doc_id") < cut))
+        t.merge(log.filter(col("doc_id") >= cut &&
+                           col("doc_id") < 2 * cut))
+        t.merge(log.filter(col("doc_id") >= 2 * cut))
         t.compact()
         t.vacuum(keep = 1)
         t.read()
@@ -1066,7 +1068,7 @@ object Lake {
     // `UPDATE ... SET ... WHERE` on the facade. Both derive a keyed
     // changelog from the predicate scan (matches → 'D', or 'U' with
     // the SET projection applied against the OLD row) and land it
-    // through mergeScoped, so the WRITE cost is touched-files +
+    // through the merge dispatch, so the WRITE cost is touched-files +
     // matches — a selective delete/update at 100 TB rewrites the
     // files holding matches, never the snapshot (the read is one
     // predicate scan with plain parquet pushdown). The gate deletes a
@@ -1234,8 +1236,10 @@ object Lake {
     // exercises schema evolution: `action` is a source-only column,
     // so the table gains it (null for survivors and updated rows,
     // 'ins' for inserted ones). Execution is two passes over TOUCHED
-    // files only (manifest interval-join admission, then the scoped
-    // merge) — write cost ∝ touched + source at any table size.
+    // files only (manifest interval-join admission, then the merge
+    // dispatch) — a selective source's write cost ∝ touched + source at
+    // any table size (this gate's hash-spread source touches every file
+    // and takes the full arm).
     // Oracle: the merge statement replayed as joins in DuckDB.
     "l26_merge_into" -> OpDef.sql(
       (s, d) => {
@@ -1299,13 +1303,14 @@ object Lake {
     // carries forward VERBATIM and ZERO data files are written, so a
     // scattered delete (one row in each of 10k files at 100 TB) costs
     // one predicate scan + a tombstone write instead of 10k file
-    // rewrites (the l22 delete's scoped-merge cost). Readers pay one
+    // rewrites (the l22 delete's rewrite cost). Readers pay one
     // broadcast anti-join on (file, key) until compaction collects the
     // DVs; the per-FILE half of the identity is what makes re-insertion
-    // sound — the gate interleaves a DV delete, a scoped upsert that
-    // RE-INSERTS a subset of the deleted keys (new files, which no
-    // tombstone names), and a second DV delete spanning both vintages.
-    // Oracle: the three statements replayed logically.
+    // sound — the gate interleaves a DV delete, an upsert that
+    // RE-INSERTS a subset of the deleted keys (hash-spread keys touch
+    // every file, so the merge rewrites them all and collects the first
+    // DV; DeletionVectorSpec re-inserts under a carried DV), and a
+    // second DV delete. Oracle: the three statements replayed logically.
     "l27_deletion_vectors" -> OpDef.sql(
       (s, d) => {
         val base = scratch("l27", d)
@@ -1313,7 +1318,7 @@ object Lake {
         val docs = Tables.documents(s, d).select("doc_id", "source", "text")
         val t = graft.sources.GraftTable.create(s, s"$base/tbl", docs)
         t.deleteVectored(pmod(col("doc_id"), lit(10)) === 3)
-        t.mergeScoped(docs.filter(pmod(col("doc_id"), lit(20)) === 3)
+        t.merge(docs.filter(pmod(col("doc_id"), lit(20)) === 3)
           .select(lit("U").as("op"), col("doc_id"), col("source"),
             concat(col("text"), lit(" (back)")).as("text")))
         t.deleteVectored(pmod(col("doc_id"), lit(7)) === 1)

@@ -135,11 +135,8 @@ final class GraftSource extends RelationProvider
     require(partitionColumns.isEmpty,
       "graft sink ignores partitionBy — the table's layout is the " +
         "facade's (range-clustered on the key, manifest-profiled)")
-    val merge = parameters.getOrElse("merge", "auto").trim
-    require(merge == "auto" || merge == "full",
-      s"graft sink: merge must be 'auto' or 'full', got '$merge'")
     new GraftStreamSink(ctx.sparkSession, pathOf(parameters),
-      parameters.getOrElse("key", "doc_id"), full = merge == "full")
+      parameters.getOrElse("key", "doc_id"))
   }
 
   override def createRelation(ctx: SQLContext,

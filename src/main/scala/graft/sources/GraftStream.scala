@@ -219,10 +219,10 @@ private[graft] final class GraftStreamSource(spark: SparkSession,
 /** `df.writeStream.format("graft")` — the versioned table as a
   * STREAMING SINK with the facade's exactly-once discipline built in:
   * micro-batch b lands as table version b+1 through
-  * [[GraftTable.mergeAs]] / [[GraftTable.mergeAutoAs]], so a checkpoint
-  * replay OVERWRITES its own version from the same immutable base and
-  * converges — the s23/s27 foreachBatch recipe, now behind the format
-  * string where PySpark and SQL users can reach it.
+  * [[GraftTable.mergeAs]], so a checkpoint replay OVERWRITES its own
+  * version from the same immutable base and converges — the s23/s27
+  * foreachBatch recipe, now behind the format string where PySpark and
+  * SQL users can reach it.
   *
   * Contract (loud, not implied): the table must exist (create v0 with
   * the batch writer or the facade — the resident snapshot), and this
@@ -231,12 +231,12 @@ private[graft] final class GraftStreamSource(spark: SparkSession,
   * fails the batch rather than rewriting history. Rows are keyed
   * upserts; a frame carrying an `op` column is applied as a CDC
   * changelog verbatim (I/U/D — deletes at the wire), anything else is
-  * wrapped as all-'U'. `merge=full` forces self-contained versions;
-  * the default (`auto`) takes the scoped arm when a tick touches few
-  * files — the 100-TB cost model (write ∝ touched files + changelog).
+  * wrapped as all-'U'. The merge's measured touch fraction picks the
+  * write arm per tick: a tick touching few files rewrites only those —
+  * the 100-TB cost model (write ∝ touched files + changelog).
   */
 private[graft] final class GraftStreamSink(spark: SparkSession,
-    dir: String, key: String, full: Boolean) extends Sink {
+    dir: String, key: String) extends Sink {
 
   /** ONE table instance for the sink's lifetime: [[GraftTable]] memoizes
     * collected manifest rows per (version, commit payload), and reopening
@@ -269,7 +269,7 @@ private[graft] final class GraftStreamSink(spark: SparkSession,
       val log =
         if (cached.columns.contains("op")) cached
         else cached.withColumn("op", lit("U"))
-      if (full) t.mergeAs(log, v) else t.mergeAutoAs(log, v)
+      t.mergeAs(log, v)
       ()
     } finally {
       cached.unpersist()

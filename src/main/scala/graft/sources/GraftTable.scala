@@ -39,19 +39,23 @@ import graft.operators.Lake
   * touches `java.io.File`/`java.nio` (GraftTableFsSpec drives the whole
   * lifecycle over a non-`file:` scheme to pin that).
   *
-  * Two merge cost models, one table:
-  *  - [[merge]] (full): the new version stores the full snapshot,
-  *    range-partitioned + key-sorted (l10's model — self-contained
-  *    versions, replay-overwritable, vacuum drops whole directories).
-  *  - [[mergeScoped]] (trickle): only the files whose key ranges the
-  *    changelog touches are rewritten; untouched files carry forward in
-  *    the new manifest as the SAME bytes (l08's partition-scoped rewrite
-  *    re-expressed over the manifest — at 100 TB a 0.1%-of-keys tick
-  *    pays ~0.1% of the write, not a full-snapshot rewrite). Vacuum is
-  *    reference-aware: a retired version's files survive exactly as
-  *    long as a retained manifest still points at them.
+  * One merge dispatch, two write arms: every keyed write ([[merge]],
+  * [[mergeAs]], [[delete]], [[update]], [[mergeInto]], the connector's
+  * Append and the streaming sink) measures which of the base version's
+  * files its changelog touches, and the touch fraction picks the arm —
+  * the caller never does:
+  *  - under half the files touched: only those files are rewritten;
+  *    untouched files carry forward in the new manifest as the SAME
+  *    bytes (l08's partition-scoped rewrite re-expressed over the
+  *    manifest — at 100 TB a 0.1%-of-keys tick pays ~0.1% of the write,
+  *    not a full-snapshot rewrite). Vacuum is reference-aware: a retired
+  *    version's files survive exactly as long as a retained manifest
+  *    still points at them.
+  *  - half or more: every file is rewritten, so the new version is
+  *    self-contained, range-partitioned + key-sorted (l10's model —
+  *    replay-overwritable, vacuum drops whole directories).
   *
-  * SCHEMA EVOLUTION (both merge forms): a changelog carrying columns
+  * SCHEMA EVOLUTION (both arms): a changelog carrying columns
   * the snapshot lacks ADDS them — old rows read as null (the parquet
   * reader backfills from the version's stored schema), `readAsOf(k)`
   * keeps returning version k's schema verbatim, and [[diff]] compares
@@ -83,8 +87,8 @@ import graft.operators.Lake
   * one driver-side read of the version's one-file manifest, no Spark
   * job (metadata-sized — the l09 argument: at 10M files the per-footer
   * planning IO is what a 100-TB reader pays, and the manifest replaces
-  * it; [[ManifestIO]] is that driver plane). The full-merge path never
-  * shuffles the snapshot on the broadcast side; the scoped path's cost
+  * it; [[ManifestIO]] is that driver plane). The full arm never
+  * shuffles the snapshot on the broadcast side; the scoped arm's cost
   * is touched-files + changelog, not snapshot.
   */
 final class GraftTable private (s: SparkSession, val dir: String,
@@ -256,20 +260,50 @@ final class GraftTable private (s: SparkSession, val dir: String,
     ()
   }
 
-  /** Land version `next`'s manifest when it patches version `n`: `n`'s
-    * rows minus the `rewritten` files, plus the stats of the files just
-    * written under `vdir` — array arithmetic on the driver, no job. A
-    * z-order compact's extra span columns stay on carried rows and read
-    * NULL on the new files (unknown span, readers must admit). Returns
-    * the landed manifest.
+  /** The one landing step of every version that writes data files:
+    * clear any stale DV at `next`, write `rows` as the version's files
+    * (`write`; range-clustered on the key unless a z-order compact
+    * passes its own), land the manifest ([[landManifest]]), carry
+    * `base`'s DV forward only when the manifest still carries some of
+    * its files (DV rows on rewritten files drop with them), write the
+    * version's schema, then commit. Everything lands before the marker,
+    * so a crash anywhere leaves an uncommitted (invisible) version that
+    * the next landing at that number overwrites. Returns `next`.
     */
-  private[graft] def landPatchManifest(n: Int, vdir: String,
-      rewritten: Seq[String], schema: StructType): ManifestIO.Data = {
-    val base = manifestData(n)
+  private def land(next: Int, rows: DataFrame, op: String,
+      base: Option[Int] = None, rewritten: Seq[String] = Nil,
+      write: (String, DataFrame) => Unit = writeFiles(s, _, key, _),
+      statCols: Seq[String] = Nil): Int = {
+    val vdir = s"$dir/v$next"
+    clearDv(next)
+    write(vdir, rows)
+    val landed = landManifest(vdir, rows.schema, base, rewritten, statCols)
+    // `rewritten` is a subset of base's files: any left over are carried
+    base.filter(manifestData(_)._2.length > rewritten.size)
+      .foreach(carryDv(_, next, landed))
+    writeSchema(s, dir, next, rows.schema)
+    commitWith(next, landed, op)
+    next
+  }
+
+  /** The manifest half of [[land]]: version `base`'s rows minus the
+    * `rewritten` files, plus the stats of the files just written under
+    * `vdir` — array arithmetic on the driver, no job. With no base row
+    * left the manifest is the new files' alone (a self-contained
+    * version); otherwise a z-order compact's extra span columns stay on
+    * carried rows and read NULL on the new files (unknown span, readers
+    * must admit). Returns the landed manifest.
+    */
+  private[graft] def landManifest(vdir: String, schema: StructType,
+      base: Option[Int], rewritten: Seq[String],
+      statCols: Seq[String] = Nil): ManifestIO.Data = {
+    val stats = fileStats(s, vdir, key, schema, statCols)
     val drop = rewritten.toSet
-    val pi = base._1.fieldIndex("path")
-    val carried = (base._1, base._2.filterNot(r => drop(r.getString(pi))))
-    val (sch, rows) = unionByName(carried, fileStats(s, vdir, key, schema))
+    val carried = base.map(manifestData).map { case (sch, rows) =>
+      val pi = sch.fieldIndex("path")
+      (sch, rows.filterNot(r => drop(r.getString(pi))))
+    }.filter(_._2.nonEmpty)
+    val (sch, rows) = carried.fold(stats)(unionByName(_, stats))
     writeManifest(s, s"$vdir/_manifest", sch, rows)
   }
 
@@ -287,13 +321,17 @@ final class GraftTable private (s: SparkSession, val dir: String,
     * and a pre-evolution version returns its OLD schema verbatim (files
     * lacking a later column never enter its manifest).
     */
-  def readAsOf(v: Int): DataFrame = {
-    val schema = schemaAsOf(v)
-    val paths = pathsOf(manifestData(v))
-    if (paths.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
-    else minusDv(v, s.read.schema(schema).parquet(paths.toIndexedSeq: _*))
-  }
+  def readAsOf(v: Int): DataFrame =
+    scanOf(v, schemaAsOf(v), pathsOf(manifestData(v)).toSeq)
+
+  /** The rows of `paths` — some of version v's manifest files — under
+    * `schema`, minus v's deletion vector; no paths reads as an empty
+    * frame WITH the schema.
+    */
+  private def scanOf(v: Int, schema: StructType,
+      paths: Seq[String]): DataFrame =
+    if (paths.isEmpty) s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
+    else minusDv(v, s.read.schema(schema).parquet(paths: _*))
 
   /** Manifest-planned key-range read `[lo, hi)` at version `v`: one
     * interval-overlap filter on the version's manifest admits the files
@@ -307,11 +345,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val admitted = manifest(v)
       .filter(col("key_hi") >= lo && col("key_lo") < hi)
       .select("path").collect().map(_.getString(0)).toSeq
-    val src =
-      if (admitted.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
-      else minusDv(v, s.read.schema(schema).parquet(admitted: _*))
-    src.filter(col(key) >= lo && col(key) < hi)
+    scanOf(v, schema, admitted).filter(col(key) >= lo && col(key) < hi)
   }
 
   def readRange(lo: Long, hi: Long): DataFrame =
@@ -337,11 +371,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
       .filter(col(s"${c}_lo").isNull ||
         (col(s"${c}_hi") >= lo && col(s"${c}_lo") < hi))
       .select("path").collect().map(_.getString(0)).toSeq
-    val src =
-      if (admitted.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
-      else minusDv(v, s.read.schema(schema).parquet(admitted: _*))
-    src.filter(col(c) >= lo && col(c) < hi)
+    scanOf(v, schema, admitted).filter(col(c) >= lo && col(c) < hi)
   }
 
   // ── Deletion vectors (Delta DVs) ─────────────────────────────────────
@@ -408,7 +438,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
     * the predecessor's VERBATIM and **zero data files are written or
     * rewritten** at any table size. This is the other end of the delete
     * cost spectrum from [[delete]] (which rewrites every touched file
-    * through the scoped merge): a scattered delete — one row in each of
+    * through the merge dispatch): a scattered delete — one row in each of
     * 10k files at 100 TB — costs one predicate scan plus a churn-sized
     * tombstone write here, vs 10k file rewrites there. The trade is
     * read-side: every reader pays one broadcast anti-join against the
@@ -449,15 +479,14 @@ final class GraftTable private (s: SparkSession, val dir: String,
   }
 
   /** Dispatch between the two delete cost models by MEASURED spread
-    * (the mergeAuto discipline on the delete axis — the trade runs the
-    * OPPOSITE way): a delete whose matches are spread across MANY files
-    * (≥ half the snapshot) would rewrite most of the table through the
-    * scoped path, so it lands as a deletion vector (tombstone write,
-    * zero data IO); a concentrated delete rewrites its few touched
-    * files and keeps the read path anti-join-free. The spread is
-    * measured from the manifest alone — the same interval join the
-    * scoped path would run anyway, against the (broadcast, churn-sized)
-    * distinct match keys.
+    * (the merge dispatch's discipline on the delete axis — the trade
+    * runs the OPPOSITE way): a delete whose matches are spread across
+    * MANY files (≥ half the snapshot) would rewrite most of the table,
+    * so it lands as a deletion vector (tombstone write, zero data IO); a
+    * concentrated delete rewrites its few touched files and keeps the
+    * read path anti-join-free. The spread is measured from the manifest
+    * alone — the merge's own interval join, against the (broadcast,
+    * churn-sized) distinct match keys.
     */
   def deleteAuto(cond: Column): Int = {
     val n = currentVersion
@@ -490,17 +519,16 @@ final class GraftTable private (s: SparkSession, val dir: String,
       .filter(col("_graft_dv_n") >= col("n_rows") * minDvFraction)
       .select("path").collect().map(_.getString(0)).toSeq
     if (targets.isEmpty) return n
-    val next = n + 1
+    land(n + 1, liveRows(n, targets), "REORG PURGE", Some(n), targets)
+  }
+
+  /** The live rows of version n's `paths` in n's stored column order —
+    * what a layout-only rewrite (binpack, purge) lands: the version's
+    * schema file keeps n's column order.
+    */
+  private def liveRows(n: Int, paths: Seq[String]): DataFrame = {
     val schema = schemaAsOf(n)
-    val rows = minusDv(n, s.read.schema(schema).parquet(targets: _*))
-    val vdir = s"$dir/v$next"
-    clearDv(next)
-    writeFiles(s, vdir, key, rows)
-    val landed = landPatchManifest(n, vdir, targets, schema)
-    carryDv(n, next, landed)
-    writeSchema(s, dir, next, schema)
-    commitWith(next, landed, "REORG PURGE")
-    next
+    scanOf(n, schema, paths).select(schema.fieldNames.toSeq.map(col): _*)
   }
 
   /** Schema-align a merge: columns the changelog ADDS extend the base
@@ -620,25 +648,22 @@ final class GraftTable private (s: SparkSession, val dir: String,
   }
 
   /** Apply a changelog (`op` = 'D' | 'U' + the table's columns, plus any
-    * NEW columns — see schema evolution above) as one new committed
-    * FULL version; returns the new version number. Delta-size dispatch
-    * picks the broadcast or bucketed-SMJ merge form.
+    * NEW columns — see schema evolution above) as the next committed
+    * version; returns the new version number. The write arm is the
+    * measured one ([[mergeOn]]); delta-size dispatch then picks the
+    * broadcast or bucketed-SMJ merge form.
     */
-  def merge(log: DataFrame): Int = {
-    validateIncoming(log)
-    val n = currentVersion
-    val next = n + 1
-    commitWith(next, landVersion(s, dir, next, key,
-      Lake.cdcMergeAuto(alignForMerge(readAsOf(n), log), log, key = key)),
-      "MERGE")
-    next
-  }
+  def merge(log: DataFrame): Int = mergeOn(currentVersion, log, "MERGE")
+
+  /** [[merge]] under the name the perfbench harness calls; library code
+    * calls [[merge]].
+    */
+  def mergeAuto(log: DataFrame): Int = merge(log)
 
   /** The files of version `n` whose key ranges the changelog touches —
-    * the scoped merge's admission, and [[mergeAuto]]'s dispatch signal.
-    * One interval-overlap join of the manifest against the (broadcast,
-    * trickle-sized) distinct log keys; only touched paths reach the
-    * driver.
+    * the merge's admission and its arm signal. One interval-overlap join
+    * of the manifest against the (broadcast, trickle-sized) distinct log
+    * keys; only touched paths reach the driver.
     */
   private def touchedPaths(n: Int, log: DataFrame): Seq[String] =
     manifest(n)
@@ -646,69 +671,47 @@ final class GraftTable private (s: SparkSession, val dir: String,
         col(key) >= col("key_lo") && col(key) <= col("key_hi"), "left_semi")
       .select("path").collect().map(_.getString(0)).toSeq
 
-  /** Dispatch between the two merge cost models by measured touch
-    * fraction (the cdcMergeAuto discipline one level up): a changelog
-    * touching under half the base's files merges SCOPED (rewrite cost ∝
-    * touched), anything wider merges FULL (a mostly-rewritten version
-    * may as well be self-contained — replay-overwritable, whole-dir
-    * vacuum, and one range exchange lays the whole snapshot back out
-    * with tight per-file spans). The admission scan that decides is the
-    * same one the scoped path would run anyway.
-    */
-  def mergeAuto(log: DataFrame): Int = {
-    val n = currentVersion
-    val touched = touchedPaths(n, log)
-    val total = manifestData(n)._2.length
-    if (touched.size * 2 >= total) merge(log)
-    else mergeScopedOn(n, touched, log)
-  }
-
-  /** The trickle-tick merge: rewrite ONLY the files whose key ranges the
-    * changelog touches (l08's partition-scoped rewrite, re-expressed
-    * over the manifest so it composes with versioning):
+  /** The one merge body behind every keyed write: lands `log` over
+    * version `n` as version n+1.
     *
-    *  1. admission — the base manifest interval-joined against the
-    *     changelog's (broadcast, trickle-sized) distinct keys; only
-    *     touched paths reach the driver;
-    *  2. the merge reads ONLY the touched files (plus the changelog) —
+    *  1. admission — `touched`, the files of n whose key ranges the
+    *     changelog's keys hit ([[touchedPaths]], unless the caller has
+    *     measured them already);
+    *  2. the arm, by measured touch fraction (the cdcMergeAuto
+    *     discipline one level up): under half of n's files touched
+    *     rewrites only those — cost ∝ touched files + changelog,
+    *     untouched manifest rows carry forward VERBATIM (same paths,
+    *     same bytes); anything wider rewrites every file, so the version
+    *     is self-contained (nothing carried, no DV: whole-dir vacuum, and
+    *     one range exchange lays the whole snapshot back out with tight
+    *     per-file spans);
+    *  3. the merge reads ONLY the rewritten files (plus the changelog) —
     *     untouched keys live in files no admitted range covers, so they
     *     cannot be superseded and need not be read;
-    *  3. rewritten rows + inserts land as v{n+1}'s own files; untouched
-    *     manifest rows carry forward VERBATIM — same paths, same bytes
-    *     (GraftTableSpec asserts byte-identity);
-    *  4. manifest, schema, then marker — the commit covers all three.
+    *  4. [[land]]: new files, manifest, schema, then marker.
     *
-    * Cost ∝ touched-files + changelog, never snapshot. The trade: new
-    * versions share files with old ones, so [[vacuum]] turns
-    * reference-aware, and a [[mergeAs]] REPLAY of a version that scoped
-    * successors reference is refused (see there). Schema evolution
-    * composes: an added column lands in the rewritten files only; the
-    * version schema is the union and untouched files read null-backfilled.
+    * Schema evolution composes: an added column lands in the rewritten
+    * files only; the version schema is the union and untouched files
+    * read null-backfilled. The trade of the scoped arm: new versions
+    * share files with old ones, so [[vacuum]] turns reference-aware,
+    * and a [[mergeAs]] replay of a version that later versions still
+    * reference is refused. `replay` drops version n+1's marker first
+    * ([[mergeAs]]). A plain merge's marker names its arm (`MERGE` or
+    * `MERGE SCOPED`); [[history]]'s `carried_files` shows it for every
+    * operation.
     */
-  def mergeScoped(log: DataFrame): Int = {
-    val n = currentVersion
-    mergeScopedOn(n, touchedPaths(n, log), log)
-  }
-
-  private def mergeScopedOn(n: Int, touched: Seq[String],
-      log: DataFrame, op: String = "MERGE SCOPED"): Int = {
+  private def mergeOn(n: Int, log: DataFrame, op: String,
+      touched: Option[Seq[String]] = None, replay: Boolean = false): Int = {
     validateIncoming(log)
-    val next = n + 1
-    val baseSchema = schemaAsOf(n)
-    val touchedRows =
-      if (touched.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[Row], baseSchema)
-      else minusDv(n, s.read.schema(baseSchema).parquet(touched: _*))
-    val merged =
-      Lake.cdcMergeAuto(alignForMerge(touchedRows, log), log, key = key)
-    val vdir = s"$dir/v$next"
-    clearDv(next)
-    writeFiles(s, vdir, key, merged)
-    val landed = landPatchManifest(n, vdir, touched, merged.schema)
-    carryDv(n, next, landed) // DV rows on rewritten files drop with them
-    writeSchema(s, dir, next, merged.schema)
-    commitWith(next, landed, op)
-    next
+    if (replay) uncommit(s, dir, n + 1) // invisible for the rewrite's duration
+    val all = pathsOf(manifestData(n)).toSeq
+    val hit = touched.getOrElse(touchedPaths(n, log))
+    val full = hit.size * 2 >= all.size
+    val rewritten = if (full) all else hit
+    val merged = Lake.cdcMergeAuto(
+      alignForMerge(scanOf(n, schemaAsOf(n), rewritten), log), log, key = key)
+    land(n + 1, merged, if (op == "MERGE" && !full) "MERGE SCOPED" else op,
+      Some(n), rewritten)
   }
 
   /** Rewrite the CURRENT snapshot as one fresh SELF-CONTAINED version —
@@ -740,26 +743,15 @@ final class GraftTable private (s: SparkSession, val dir: String,
     */
   def compact(zorderBy: Seq[String] = Nil): Int = {
     val n = currentVersion
-    val next = n + 1
     val snap = readAsOf(n)
-    val landed =
-      if (zorderBy.isEmpty) landVersion(s, dir, next, key, snap)
-      else {
-        require(zorderBy.size == 2,
-          s"compact(zorderBy) interleaves exactly two columns, got " +
-            s"${zorderBy.mkString("[", ", ", "]")}")
-        val vdir = s"$dir/v$next"
-        clearDv(next)
-        writeFilesZ(s, vdir, zorderBy, snap)
-        val (sch, rows) =
-          fileStats(s, vdir, key, snap.schema, statCols = zorderBy)
-        val m = writeManifest(s, s"$vdir/_manifest", sch, rows)
-        writeSchema(s, dir, next, snap.schema)
-        m
-      }
-    commitWith(next, landed,
-      if (zorderBy.isEmpty) "OPTIMIZE" else "OPTIMIZE ZORDER")
-    next
+    if (zorderBy.isEmpty) land(n + 1, snap, "OPTIMIZE")
+    else {
+      require(zorderBy.size == 2,
+        s"compact(zorderBy) interleaves exactly two columns, got " +
+          s"${zorderBy.mkString("[", ", ", "]")}")
+      land(n + 1, snap, "OPTIMIZE ZORDER",
+        write = writeFilesZ(s, _, zorderBy, _), statCols = zorderBy)
+    }
   }
 
   /** BINPACK compaction — what a scheduled Delta OPTIMIZE actually does:
@@ -774,7 +766,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
     * The new version's manifest composes carried rows with the packed
     * files' fresh spans — packed spans may overlap carried ones, which
     * manifest-planned reads already admit by interval overlap (the
-    * scoped-merge property). Returns the new version, or the CURRENT
+    * scoped-arm property). Returns the new version, or the CURRENT
     * version untouched when fewer than two small files exist (packing
     * one file buys nothing — no version event, no churn).
     */
@@ -786,81 +778,28 @@ final class GraftTable private (s: SparkSession, val dir: String,
       .filter(r => !r.isNullAt(bi) && r.getLong(bi) < smallBytes)
       .map(_.getString(pi)).toSeq
     if (small.size < 2) return n
-    val next = n + 1
-    val schema = schemaAsOf(n)
-    val rows = minusDv(n, s.read.schema(schema).parquet(small: _*))
-    val vdir = s"$dir/v$next"
-    clearDv(next)
-    writeFiles(s, vdir, key, rows)
-    val landed = landPatchManifest(n, vdir, small, schema)
-    carryDv(n, next, landed)
-    writeSchema(s, dir, next, schema)
-    commitWith(next, landed, "OPTIMIZE BINPACK")
-    next
+    land(n + 1, liveRows(n, small), "OPTIMIZE BINPACK", Some(n), small)
   }
 
-  /** The EXACTLY-ONCE merge form for streaming writers (s19's versioned
+  /** The EXACTLY-ONCE merge for streaming writers (s19's versioned
     * idempotence lifted into the facade): batch b lands as version
-    * `v = b + 1`, always computed from v-1, always FULL (self-contained
-    * — what makes the overwrite replayable). A checkpoint replay of the
-    * same batch hits the same `v` and OVERWRITES it from the same input
-    * — convergent, never duplicated — and a crash between data and
-    * marker leaves an uncommitted directory the replay finishes.
-    * Skipping ahead (v beyond current+1) is a stream-offset bug and
-    * fails loudly; so does a replay whose base v-1 was vacuumed away —
-    * and so does a replay of a version whose files a LATER scoped
-    * version still references (the overwrite would tear that successor;
-    * single-writer streams land full versions and never hit this).
+    * `v = b + 1`, always computed from v-1 through the same dispatch as
+    * [[merge]]. A checkpoint replay of the same batch hits the same `v`
+    * and OVERWRITES it from the same input — convergent, never
+    * duplicated — and a crash between data and marker leaves an
+    * uncommitted directory the replay finishes. Convergent in both
+    * arms: the touch fraction is measured against the immutable v-1
+    * manifest, so a replay re-takes the SAME arm and recomputes the
+    * same version (full: a self-contained overwrite; scoped: the same
+    * touched set, merged rows and carried references). Skipping ahead
+    * (v beyond current+1) is a stream-offset bug and fails loudly; so
+    * does a replay whose base v-1 was vacuumed away — and so does a
+    * replay of a version whose files a LATER version still references
+    * (the overwrite would tear that successor).
     */
   def mergeAs(log: DataFrame, v: Int): Int = {
-    validateIncoming(log)
     requireReplayable("mergeAs", v)
-    uncommit(s, dir, v) // replay: invisible for the rewrite's duration
-    commitWith(v, landVersion(s, dir, v, key,
-      Lake.cdcMergeAuto(alignForMerge(readAsOf(v - 1), log), log, key = key)),
-      "MERGE")
-    v
-  }
-
-  /** The exactly-once SCOPED merge for streaming writers — [[mergeAs]]'s
-    * replay discipline on [[mergeScoped]]'s cost model, so a trickle
-    * tick at the wire pays touched-files + changelog instead of a full
-    * snapshot rewrite. Convergence does not need a self-contained
-    * version: a replay of batch b recomputes the SAME touched set from
-    * v-1's immutable manifest (the interval join is deterministic), the
-    * same merged rows, and the same carried-forward references, then
-    * overwrites v{b+1} wholesale — so crash-anywhere + replay lands the
-    * identical version (GraftTableSpec pins content identity AND
-    * carried-reference identity). The same two loud refusals as
-    * [[mergeAs]] apply: version skips (a stream-offset bug) and replays
-    * that would tear a LATER scoped version still referencing v's files.
-    */
-  def mergeScopedAs(log: DataFrame, v: Int): Int = {
-    requireReplayable("mergeScopedAs", v)
-    uncommit(s, dir, v)
-    mergeScopedOn(v - 1, touchedPaths(v - 1, log), log)
-  }
-
-  /** [[mergeAuto]]'s dispatch under [[mergeAs]]'s exactly-once replay
-    * discipline — the streaming writer that takes trickle ticks AND the
-    * occasional wide backfill through one call. Replay-convergent in
-    * both arms: the touch fraction is measured against the immutable
-    * v-1 manifest, so a replay of batch b re-takes the SAME arm and
-    * recomputes the same version (full: self-contained overwrite;
-    * scoped: same touched set, same carried references).
-    */
-  def mergeAutoAs(log: DataFrame, v: Int): Int = {
-    requireReplayable("mergeAutoAs", v)
-    uncommit(s, dir, v)
-    val touched = touchedPaths(v - 1, log)
-    val total = manifestData(v - 1)._2.length
-    if (touched.size * 2 >= total) {
-      validateIncoming(log) // the scoped arm validates in mergeScopedOn
-      commitWith(v, landVersion(s, dir, v, key,
-        Lake.cdcMergeAuto(alignForMerge(readAsOf(v - 1), log), log,
-          key = key)), "MERGE")
-      v
-    } else mergeScopedOn(v - 1, touched, log)
+    mergeOn(v - 1, log, "MERGE", replay = true)
   }
 
   /** OPTIMISTIC CONCURRENT MERGE — the multi-writer form, for
@@ -941,11 +880,10 @@ final class GraftTable private (s: SparkSession, val dir: String,
         "or raise maxAttempts)", lastLoss)
   }
 
-  /** The exactly-once preconditions shared by [[mergeAs]] and
-    * [[mergeScopedAs]]: target version is current+1 (the normal tick) or
-    * a replay of a committed one that NO later scoped version still
-    * references (overwriting it would tear that successor's carried
-    * file references; single-writer streams never hit this).
+  /** The exactly-once preconditions of [[mergeAs]]: target version is
+    * current+1 (the normal tick) or a replay of a committed one that NO
+    * later scoped version still references (overwriting it would tear
+    * that successor's carried file references).
     */
   private def requireReplayable(what: String, v: Int): Unit = {
     val cur = currentVersion
@@ -966,9 +904,10 @@ final class GraftTable private (s: SparkSession, val dir: String,
 
   /** Predicate DELETE (Delta's `DELETE FROM t WHERE cond`) as one new
     * version: the matching rows become a 'D' changelog and land through
-    * [[mergeScoped]], so the write cost is touched-files + matches —
-    * untouched files carry forward verbatim (at 100 TB a selective
-    * delete rewrites the files holding matches, never the snapshot).
+    * the merge dispatch ([[mergeOn]]), so a selective delete's write cost
+    * is touched-files + matches — untouched files carry forward verbatim
+    * (at 100 TB it rewrites the files holding matches, never the
+    * snapshot).
     * The read cost is one predicate scan of the current snapshot (plain
     * parquet pushdown; a key-range `cond` additionally prunes at the
     * row-group level). Rows are identified BY KEY — the table's merge
@@ -981,7 +920,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val base = readAsOf(n)
     val log = base.filter(cond)
       .select(lit("D").as("op") +: base.columns.map(col): _*)
-    mergeScopedOn(n, touchedPaths(n, log), log, op = "DELETE")
+    mergeOn(n, log, "DELETE")
   }
 
   /** Predicate UPDATE (Delta's `UPDATE t SET ... WHERE cond`): matching
@@ -1007,8 +946,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
       set.getOrElse(c, col(c)).as(c)) // old-row semantics: all exprs
     // evaluate against the pre-update row, applied in one projection
     val log = base.filter(cond).select(lit("U").as("op") +: cols: _*)
-    val n = currentVersion
-    mergeScopedOn(n, touchedPaths(n, log), log, op = "UPDATE")
+    mergeOn(currentVersion, log, "UPDATE")
   }
 
   /** Delta's `MERGE INTO` as a builder — the general upsert statement
@@ -1034,7 +972,8 @@ final class GraftTable private (s: SparkSession, val dir: String,
     * against the source keys admits the files any match could live in,
     * the clause derivation runs as ONE full-outer join of those files
     * against the (broadcast-able, churn-sized) source, and the derived
-    * changelog lands through the scoped merge — write cost ∝ touched
+    * changelog lands through the merge dispatch ([[mergeOn]], with those
+    * touched files) — a selective source's write cost is ∝ touched
     * files + source, never snapshot. Schema evolution composes: source
     * columns the table lacks are ADDED (old rows read null), matching
     * the merge forms' evolution rule. Loud guards: a source with
@@ -1116,11 +1055,8 @@ final class GraftTable private (s: SparkSession, val dir: String,
       .filterNot(_ == key)
 
     val touched = touchedPaths(n, source)
-    val tRows =
-      if (touched.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[Row], baseSchema)
-      else minusDv(n, s.read.schema(baseSchema).parquet(touched: _*))
-    val joined = tRows.withColumn("_graft_t_in", lit(true)).alias("t")
+    val joined = scanOf(n, baseSchema, touched)
+      .withColumn("_graft_t_in", lit(true)).alias("t")
       .join(source.withColumn("_graft_s_in", lit(true)).alias("s"),
         col(s"t.$key") === col(s"s.$key"), "full_outer")
 
@@ -1171,7 +1107,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
     log.persist()
     try {
       log.count()
-      mergeScopedOn(n, touched, log, op = "MERGE INTO")
+      mergeOn(n, log, "MERGE INTO", touched = Some(touched))
     } finally { log.unpersist(); () }
   }
 
@@ -1185,9 +1121,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
     */
   def replace(df: DataFrame): Int = {
     validateIncoming(df)
-    val next = currentVersion + 1
-    commitWith(next, landVersion(s, dir, next, key, df), "REPLACE")
-    next
+    land(currentVersion + 1, df, "REPLACE")
   }
 
   /** ROLLBACK as a new version (Delta RESTORE): version n+1's manifest
@@ -1579,9 +1513,9 @@ object GraftTable {
     * frames, propagated estimates through joins/unions), divided by the
     * 128 MB file target, floored at [[VersionFilesFloor]]. A fixed fan
     * would be 12.5 TB/file at 100 TB; a size-derived fan keeps files
-    * scan-sized at every table size — and under [[GraftTable.mergeScoped]]
-    * it sizes by the REWRITTEN SLICE, so a trickle tick lands a few
-    * small files, not a snapshot-wide fan. Capped only by Int.MaxValue —
+    * scan-sized at every table size — and on a merge's scoped arm it
+    * sizes by the REWRITTEN SLICE, so a trickle tick lands a few small
+    * files, not a snapshot-wide fan. Capped only by Int.MaxValue —
     * the range exchange itself bounds task counts via AQE.
     */
   private[graft] def versionFan(df: DataFrame): Int = {
@@ -1776,31 +1710,11 @@ object GraftTable {
     writeFsString(fsOf(s, dir), new HPath(s"$dir/v$v/$SchemaFile"),
       nullable(schema).json, overwrite = true)
 
-  /** Land one FULL version: data files, manifest, schema — all before
-    * the caller's commit marker, so a crash anywhere leaves an
-    * uncommitted (invisible) version, never a committed version missing
-    * its metadata. The range exchange is the cost of tight stats; at
-    * trickle-tick rates [[GraftTable.mergeScoped]] is the path that
-    * skips it.
-    */
-  private def landVersion(s: SparkSession, dir: String, v: Int,
-      key: String, df: DataFrame): ManifestIO.Data = {
-    val vdir = s"$dir/v$v"
-    // a full version is self-contained: no DV — and must not inherit
-    // one from a crashed deleteVectored at this number
-    fsOf(s, dir).delete(new HPath(s"$vdir/_graft_dv"), true)
-    writeFiles(s, vdir, key, df)
-    val (sch, rows) = fileStats(s, vdir, key, df.schema)
-    val m = writeManifest(s, s"$vdir/_manifest", sch, rows)
-    writeSchema(s, dir, v, df.schema)
-    m
-  }
-
   /** Create a table at `dir` with `df` as committed version 0. */
   def create(s: SparkSession, dir: String, df: DataFrame,
       key: String = "doc_id"): GraftTable = {
     val t = new GraftTable(s, dir, key)
-    t.commitWith(0, landVersion(s, dir, 0, key, df), "CREATE")
+    t.land(0, df, "CREATE")
     t
   }
 

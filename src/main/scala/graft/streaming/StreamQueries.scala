@@ -818,7 +818,8 @@ object StreamQueries {
     // touched-files + changelog, not a full snapshot rewrite per
     // micro-batch (at 100 TB the full-rewrite form is a non-starter at
     // any tick rate). Each micro-batch b lands as version b+1 via
-    // GraftTable.mergeScopedAs: admission is the base manifest
+    // GraftTable.mergeAs, whose merge takes the scoped arm when a tick
+    // touches under half the base's files: admission is the base manifest
     // interval-joined against the batch's broadcast keys, untouched
     // manifest rows carry forward verbatim, and a checkpoint replay
     // recomputes the SAME touched set from the immutable v{b} manifest
@@ -856,7 +857,7 @@ object StreamQueries {
           .writeStream
           .option("checkpointLocation", s"$base/ckpt")
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            t.mergeScopedAs(batch, batchId.toInt + 1)
+            t.mergeAs(batch, batchId.toInt + 1)
             ()
           }
           .start()
@@ -1119,7 +1120,7 @@ object StreamQueries {
 
     // s33: the TABLE AS A STREAMING SINK — writeStream.format("graft")
     // is s23's exactly-once loop behind the format string: micro-batch
-    // b lands as version b+1 through mergeAutoAs (replay overwrites its
+    // b lands as version b+1 through mergeAs (replay overwrites its
     // own version from the same immutable base — convergent; the scoped
     // arm keeps tick cost ∝ touched files at 100 TB), the sink OWNS the
     // version chain (a chain that moved off batch↔version fails loudly

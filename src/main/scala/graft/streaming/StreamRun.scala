@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -15,7 +16,8 @@ private[streaming] object StreamRun {
 
   private val runId = new AtomicInteger()
 
-  /** The drain's private session and the streamed plan re-bound to it.
+  /** `body` run on the drain's private session and the streamed plan
+    * re-bound to it.
     *
     * Stateful streaming ops allocate one state store PER shuffle
     * partition per operator (a stream-stream join allocates four) and
@@ -37,11 +39,15 @@ private[streaming] object StreamRun {
     * build or stream on the caller's session keeps its own value, and
     * nothing is restored while the stream thread may still be
     * capturing confs. The caller's streaming listeners are registered
-    * on the clone too, so they still see the drain's progress. On a
-    * real cluster this knob sizes state shards to executors as usual.
+    * on the clone too, so they still see the drain's progress; when
+    * `body` returns, the clone's streaming listener bus is detached from
+    * the context ([[GraftSqlBridge.detachStreams]]), so no drain leaves
+    * a bus (or the forwarded listeners) behind ([[runToEnd]] does the
+    * same for the query's own session). On a real cluster this knob
+    * sizes state shards to executors as usual.
     */
-  private def runSession(spark: SparkSession, streamed: DataFrame,
-                         inputBytes: Long): (SparkSession, DataFrame) = {
+  private def onRunSession[T](spark: SparkSession, streamed: DataFrame,
+      inputBytes: Long)(body: (SparkSession, DataFrame) => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val parts =
       if (inputBytes <= 0L) 8L
@@ -50,8 +56,19 @@ private[streaming] object StreamRun {
     val run = GraftSqlBridge.cloneSession(spark)
     run.conf.set(key, parts.toString)
     spark.streams.listListeners().foreach(run.streams.addListener)
-    (run, GraftSqlBridge.ofRows(run, GraftSqlBridge.logicalPlan(streamed)))
+    try body(run, GraftSqlBridge.ofRows(run, GraftSqlBridge.logicalPlan(streamed)))
+    finally GraftSqlBridge.detachStreams(run)
   }
+
+  /** Run `feed` against the started query `q`, then stop it and detach
+    * the listener bus of the session Spark cloned for its batches.
+    */
+  private def runToEnd(q: StreamingQuery)(feed: => Unit): Unit =
+    try feed
+    finally {
+      q.stop()
+      GraftSqlBridge.detachStreams(GraftSqlBridge.sessionOf(q))
+    }
 
   /** [[drain]] for append-mode legs whose RESULT is large (sf10's
     * sessionization emits millions of sessions, the dedup leg re-emits
@@ -68,13 +85,14 @@ private[streaming] object StreamRun {
                    name: String, scratch: String,
                    inputBytes: Long = -1L): DataFrame = {
     graft.operators.Lake.deleteTree(java.nio.file.Paths.get(scratch))
-    val (_, onRun) = runSession(spark, streamed, inputBytes)
-    val q = onRun.writeStream.format("parquet")
-      .option("path", s"$scratch/out")
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    onRunSession(spark, streamed, inputBytes) { (_, onRun) =>
+      val q = onRun.writeStream.format("parquet")
+        .option("path", s"$scratch/out")
+        .option("checkpointLocation", s"$scratch/ckpt")
+        .outputMode("append")
+        .start()
+      runToEnd(q)(q.processAllAvailable())
+    }
     val outPath = java.nio.file.Paths.get(scratch, "out")
     val out =
       if (java.nio.file.Files.isDirectory(outPath))
@@ -91,18 +109,20 @@ private[streaming] object StreamRun {
             name: String, feeds: Seq[() => Unit] = Seq.empty,
             inputBytes: Long = -1L): DataFrame = {
     val sink = s"${name}_${runId.incrementAndGet()}"
-    val (run, onRun) = runSession(spark, streamed, inputBytes)
-    val q = onRun.writeStream.format("memory").queryName(sink)
-      .outputMode(mode).start()
-    try {
-      if (feeds.isEmpty) q.processAllAvailable()
-      else feeds.foreach { f => f(); q.processAllAvailable() }
-    } finally q.stop()
-    // the sink's temp view lives in the session that started the query;
-    // the result is handed back bound to the caller's session
-    val out = GraftSqlBridge.ofRows(spark, GraftSqlBridge.logicalPlan(run.table(sink)))
-    graft.Caching.persistTracked(name, out)
-    run.catalog.dropTempView(sink)
-    out
+    onRunSession(spark, streamed, inputBytes) { (run, onRun) =>
+      val q = onRun.writeStream.format("memory").queryName(sink)
+        .outputMode(mode).start()
+      runToEnd(q) {
+        if (feeds.isEmpty) q.processAllAvailable()
+        else feeds.foreach { f => f(); q.processAllAvailable() }
+      }
+      // the sink's temp view lives in the session that started the
+      // query; the result is handed back bound to the caller's session
+      val out = GraftSqlBridge.ofRows(spark,
+        GraftSqlBridge.logicalPlan(run.table(sink)))
+      graft.Caching.persistTracked(name, out)
+      run.catalog.dropTempView(sink)
+      out
+    }
   }
 }

@@ -58,17 +58,24 @@ class DeletionVectorSpec extends AnyFunSuite with SparkFixture {
 
   test("per-file DV: an upsert re-inserts a DV-deleted key cleanly") {
     val docs = freshDocs()
-    val t = GraftTable.create(spark, tmp(), docs)
+    val dir = tmp()
+    val t = GraftTable.create(spark, dir, docs)
     t.deleteVectored(pmod(col("doc_id"), lit(10)) === 3)
-    // re-insert a subset of the deleted keys with new payloads; the new
-    // rows land in NEW files no DV row names — a key-global tombstone
-    // would (wrongly) hide them
-    val back = docs.filter(pmod(col("doc_id"), lit(20)) === 3)
+    // re-insert a key-local subset of the deleted keys with new
+    // payloads (a narrow upsert: the merge takes the scoped arm, so the
+    // DV carries forward onto the untouched files); the new rows land
+    // in NEW files no DV row names — a key-global tombstone would
+    // (wrongly) hide them
+    val cut = docs.agg(max("doc_id")).head().getLong(0) / 4
+    val backKeys = pmod(col("doc_id"), lit(20)) === 3 && col("doc_id") < cut
+    val back = docs.filter(backKeys)
       .select(lit("U").as("op"), col("doc_id"), col("source"),
         concat(col("text"), lit(" (back)")).as("text"))
-    t.mergeScoped(back)
+    t.merge(back)
+    assert(vdirNames(dir, 2).contains("_graft_dv"),
+      "the upsert carried no DV; the per-file leg is vacuous")
     val expect = docs.filter(pmod(col("doc_id"), lit(10)) =!= 3)
-      .unionByName(docs.filter(pmod(col("doc_id"), lit(20)) === 3)
+      .unionByName(docs.filter(backKeys)
         .withColumn("text", concat(col("text"), lit(" (back)"))))
     assert(collectSorted(t.read()) == collectSorted(expect))
     // and a DV delete over the mixed-vintage snapshot hits both

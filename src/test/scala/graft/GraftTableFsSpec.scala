@@ -34,8 +34,8 @@ class GraftTableFsSpec extends AnyFunSuite with SparkFixture {
     val wide = log.filter(col("doc_id") >= cut).withColumn("rev", lit(1))
 
     val t = GraftTable.create(spark, dir, docs)
-    assert(t.mergeScoped(trickle) == 1) // scoped: carried mockfs: refs
-    assert(t.merge(wide) == 2)          // full, +1 evolved column
+    assert(t.merge(trickle) == 1) // key-local, scoped: carried mockfs: refs
+    assert(t.merge(wide) == 2)    // wide, full, +1 evolved column
 
     // the manifests speak the scheme — the point of the port — and v1
     // really is a cross-scheme-invisible patchwork (carried v0 refs)
@@ -48,7 +48,7 @@ class GraftTableFsSpec extends AnyFunSuite with SparkFixture {
 
     // content identity with a plain-local twin, per version
     val twin = GraftTable.create(spark, localTwin.toString, docs)
-    twin.mergeScoped(trickle)
+    twin.merge(trickle)
     twin.merge(wide)
     for (v <- 0 to 2) {
       assert(rows(t.readAsOf(v)) == rows(twin.readAsOf(v)),

@@ -132,9 +132,11 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     val dir = java.nio.file.Files.createTempDirectory("graft_tbl_bp").toString
     val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
     val t = GraftTable.create(spark, dir, docs)
-    // three trickle ticks leave small per-tick files in the manifest
+    // three trickle ticks, each on its own eighth of the key span (so
+    // each takes the scoped arm), leave small per-tick files in the manifest
+    val w = docs.agg(max("doc_id")).head().getLong(0) / 8
     (0 until 3).foreach { i =>
-      t.mergeScoped(docs.filter(col("doc_id") % 97 === i)
+      t.merge(docs.filter(col("doc_id") >= i * w && col("doc_id") < (i + 1) * w)
         .select(lit("U").as("op"), col("doc_id"), col("source"),
           concat(col("text"), lit(s" (tick $i)")).as("text")))
     }
@@ -194,8 +196,13 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     assert(e.getMessage.contains("has_text") &&
       e.getMessage.contains("3 incoming row(s)"))
     assert(t.currentVersion == v0)
-    // ...on the scoped path and the connector writer too
-    intercept[IllegalArgumentException] { t.mergeScoped(violation) }
+    // ...on the full arm (a violation spread over every file), the DML
+    // and the connector writer too
+    intercept[IllegalArgumentException] {
+      t.merge(docs.filter(pmod(col("doc_id"), lit(97)) === 0)
+        .select(lit("U").as("op"), col("doc_id"), col("source"),
+          lit("").as("text")))
+    }
     intercept[IllegalArgumentException] {
       t.update(col("doc_id") < 5, Map("text" -> lit("")))
     }
@@ -374,19 +381,19 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
   test("scoped merge: untouched bytes carry forward, manifest agrees, " +
        "vacuum is reference-aware") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tbl_sc").toString
-    val dirF = java.nio.file.Files.createTempDirectory("graft_tbl_sf").toString
     val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
     val t = GraftTable.create(spark, dir, docs)
-    val tFull = GraftTable.create(spark, dirF, docs)
     val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
+    // a key-local changelog: touches under half the files, so the
+    // merge takes the scoped arm
     val log = Lake.cdcChangelog(t.read()).filter(col("doc_id") < cut)
+    val full = collectSorted(Lake.cdcMerge(docs, log))
 
     val v0State = fileState(s"$dir/v0")
-    t.mergeScoped(log)
-    tFull.merge(log)
+    t.merge(log)
 
-    // content identity with the full-merge twin
-    assert(collectSorted(t.read()) == collectSorted(tFull.read()))
+    // content identity with the whole-snapshot CDC merge
+    assert(collectSorted(t.read()) == full)
 
     // untouched files carry forward as the SAME paths and bytes; the
     // rewritten slice is a strict subset
@@ -428,38 +435,85 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
       "vacuum deleted files a retained manifest references")
     assert((m0 -- carried).forall(p => !java.nio.file.Files.exists(local(p))),
       "vacuum kept unreferenced files")
-    assert(collectSorted(t.read()) == collectSorted(tFull.read()),
+    assert(collectSorted(t.read()) == full,
       "post-vacuum scoped version lost rows")
     val gone = intercept[java.util.NoSuchElementException](t.readAsOf(0))
     assert(gone.getMessage.contains("vacuum"))
 
     Lake.deleteTree(java.nio.file.Paths.get(dir))
-    Lake.deleteTree(java.nio.file.Paths.get(dirF))
   }
 
-  test("mergeAuto dispatches by measured touch fraction") {
+  test("every keyed writer dispatches by measured touch fraction") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tbl_au").toString
     val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
     val t = GraftTable.create(spark, dir, docs)
     val log = Lake.cdcChangelog(t.read())
     val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
+    val narrow = col("doc_id") < cut
+    // hash-spread keys: every file holds some
+    val wide = pmod(col("doc_id"), lit(7)) === 2
+    // the arm version v took, from the audit trail: the scoped arm
+    // carries earlier versions' files forward, the full arm carries none
+    def armOf(g: GraftTable, v: Int): String = {
+      val carried = g.history().filter(col("version") === v).head()
+        .getAs[Long]("carried_files")
+      if (carried > 0) "scoped" else "full"
+    }
+    def arm(v: Int): String = armOf(t, v)
+    def upserts(c: org.apache.spark.sql.Column, tag: String) =
+      docs.filter(c).select(lit("U").as("op"), col("doc_id"),
+        col("source"), concat(col("text"), lit(tag)).as("text"))
 
     // a key-local trickle (touches < half the files) merges SCOPED:
     // the new manifest carries old paths forward
-    t.mergeAuto(log.filter(col("doc_id") < cut))
+    t.merge(log.filter(col("doc_id") < cut))
     val m1 = t.manifest(1).select("path").collect().map(_.getString(0))
     assert(m1.exists(_.contains("/v0/")),
       "trickle tick did not take the scoped path")
     assert(collectSorted(t.readAsOf(1)) ==
       collectSorted(Lake.cdcMerge(docs, log.filter(col("doc_id") < cut))))
+    assert(arm(1) == "scoped")
+    assert(t.history().filter(col("version") === 1).head()
+      .getAs[String]("operation") == "MERGE SCOPED")
 
     // the full md5-bucket changelog touches hash-spread keys in every
     // file — a wide tick merges FULL: the new version is self-contained
     // (re-applying the first tick's D/U rows is idempotent by payload)
-    t.mergeAuto(log)
+    t.merge(log)
     val m2 = t.manifest(2).select("path").collect().map(_.getString(0))
     assert(m2.forall(_.contains("/v2/")),
       "wide tick did not take the full self-contained path")
+    assert(arm(2) == "full")
+    assert(t.history().filter(col("version") === 2).head()
+      .getAs[String]("operation") == "MERGE")
+
+    // the same measurement behind every other keyed writer, each input
+    // landed as v1 of a fresh table: a narrow input takes the scoped
+    // arm, a wide one the full arm
+    def both(what: String)(write: (GraftTable, String,
+        org.apache.spark.sql.Column) => Unit): Unit =
+      Seq(narrow -> "scoped", wide -> "full").foreach { case (c, expect) =>
+        val d = java.nio.file.Files.createTempDirectory("graft_tbl_aw").toString
+        val g = GraftTable.create(spark, d, docs)
+        write(g, d, c)
+        assert(g.versions == Seq(0, 1))
+        assert(armOf(g, 1) == expect,
+          s"$what over a $expect-arm input took the other arm")
+        Lake.deleteTree(java.nio.file.Paths.get(d))
+      }
+    both("mergeAs")((g, _, c) => g.mergeAs(upserts(c, " (as)"), 1))
+    both("delete")((g, _, c) => g.delete(c && pmod(col("doc_id"), lit(3)) === 0))
+    both("update")((g, _, c) =>
+      g.update(c, Map("text" -> concat(col("text"), lit("!")))))
+    both("mergeInto") { (g, _, c) =>
+      g.mergeInto(docs.filter(c))
+        .whenMatchedUpdate(Map("text" -> "concat(t.text, ' (into)')"))
+        .execute()
+    }
+    both("connector Append") { (_, d, c) =>
+      upserts(c, " (append)").drop("op").write.format("graft")
+        .mode("append").save(d)
+    }
 
     Lake.deleteTree(java.nio.file.Paths.get(dir))
   }
@@ -470,9 +524,10 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     val t = GraftTable.create(spark, dir, docs)
     val log = Lake.cdcChangelog(t.read())
     val cut = docs.agg(max("doc_id")).head().getLong(0) / 3
-    t.mergeScoped(log.filter(col("doc_id") < cut))
-    t.mergeScoped(log.filter(col("doc_id") >= cut && col("doc_id") < 2 * cut))
-    t.mergeScoped(log.filter(col("doc_id") >= 2 * cut))
+    // key-disjoint thirds: each touches under half its base's files
+    t.merge(log.filter(col("doc_id") < cut))
+    t.merge(log.filter(col("doc_id") >= cut && col("doc_id") < 2 * cut))
+    t.merge(log.filter(col("doc_id") >= 2 * cut))
 
     // the scoped chain left a cross-version patchwork
     val before = t.manifest(3).select("path").collect().map(_.getString(0))
@@ -509,8 +564,8 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     val even = log.filter(pmod(col("doc_id"), lit(2)) === 0)
     val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
     t.mergeAs(even, 1) // full v1 (the streaming shape)
-    t.mergeScoped(log.filter(pmod(col("doc_id"), lit(2)) === 1 &&
-      col("doc_id") < cut)) // scoped v2 carries v1 files forward
+    t.merge(log.filter(pmod(col("doc_id"), lit(2)) === 1 &&
+      col("doc_id") < cut)) // key-local: scoped v2 carries v1 files forward
     assert(t.manifest(2).filter(col("path").contains("/v1/")).count() > 0,
       "scoped v2 references nothing under v1; guard spec is vacuous")
 
@@ -525,7 +580,7 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     Lake.deleteTree(java.nio.file.Paths.get(dir))
   }
 
-  test("mergeScopedAs: exactly-once scoped ticks for streaming writers") {
+  test("mergeAs: exactly-once scoped ticks for streaming writers") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tbl_ss").toString
     val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
     val t = GraftTable.create(spark, dir, docs)
@@ -534,10 +589,11 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     val tick0 = log.filter(col("doc_id") < cut)
     val tick1 = log.filter(col("doc_id") >= cut && col("doc_id") < 2 * cut)
 
-    assert(t.mergeScopedAs(tick0, 1) == 1)
+    // key-disjoint thirds: each tick touches under half its base's files
+    assert(t.mergeAs(tick0, 1) == 1)
     assert(t.manifest(1).filter(col("path").contains("/v0/")).count() > 0,
       "tick 0 carried no v0 files; the scoped leg is vacuous")
-    assert(t.mergeScopedAs(tick1, 2) == 2)
+    assert(t.mergeAs(tick1, 2) == 2)
     assert(t.manifest(2).filter(col("path").contains("/v1/")).count() > 0,
       "tick 1 carried no v1 files; the tear leg below is vacuous")
     val content = collectSorted(t.readAsOf(2))
@@ -556,7 +612,7 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     // stream issues): recomputed from v1's immutable manifest — same
     // touched set, same content, same carried references, earlier
     // versions' bytes untouched. Convergent without self-containment.
-    assert(t.mergeScopedAs(tick1, 2) == 2)
+    assert(t.mergeAs(tick1, 2) == 2)
     assert(t.versions == Seq(0, 1, 2))
     assert(collectSorted(t.readAsOf(2)) == content)
     assert(carriedRefs() == carried)
@@ -568,21 +624,21 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(dir, "v2", "_GRAFT_COMMITTED"))
     assert(t.versions == Seq(0, 1))
-    assert(t.mergeScopedAs(tick1, 2) == 2)
+    assert(t.mergeAs(tick1, 2) == 2)
     assert(collectSorted(t.readAsOf(2)) == content)
 
     // a skipped offset is a stream bug, not a silent gap
-    intercept[IllegalArgumentException](t.mergeScopedAs(tick1, 9))
+    intercept[IllegalArgumentException](t.mergeAs(tick1, 9))
     // replaying an older version whose files a scoped successor still
     // references would tear that successor — refused, naming the holder
-    val torn = intercept[IllegalStateException](t.mergeScopedAs(tick0, 1))
+    val torn = intercept[IllegalStateException](t.mergeAs(tick0, 1))
     assert(torn.getMessage.contains("v2"),
       s"replay-tear failure unhelpful: ${torn.getMessage}")
 
     Lake.deleteTree(java.nio.file.Paths.get(dir))
   }
 
-  test("mergeAutoAs: one streaming call takes trickle ticks and backfills") {
+  test("mergeAs: one streaming call takes trickle ticks and backfills") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tbl_as").toString
     val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
     val t = GraftTable.create(spark, dir, docs)
@@ -590,11 +646,11 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
 
     // trickle tick -> the scoped arm: v1 carries v0 files forward
-    assert(t.mergeAutoAs(log.filter(col("doc_id") < cut), 1) == 1)
+    assert(t.mergeAs(log.filter(col("doc_id") < cut), 1) == 1)
     assert(t.manifest(1).filter(col("path").contains("/v0/")).count() > 0,
       "trickle tick took the full arm")
     // wide backfill -> the full arm: v2 is self-contained
-    assert(t.mergeAutoAs(log.filter(col("doc_id") >= cut), 2) == 2)
+    assert(t.mergeAs(log.filter(col("doc_id") >= cut), 2) == 2)
     assert(t.manifest(2).filter(!col("path").contains("/v2/")).count() == 0,
       "wide tick took the scoped arm")
     val content = collectSorted(t.readAsOf(2))
@@ -603,16 +659,65 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
 
     // replay of the latest batch re-measures against the same immutable
     // v1 manifest, re-takes the full arm, converges
-    assert(t.mergeAutoAs(log.filter(col("doc_id") >= cut), 2) == 2)
+    assert(t.mergeAs(log.filter(col("doc_id") >= cut), 2) == 2)
     assert(t.versions == Seq(0, 1, 2))
     assert(collectSorted(t.readAsOf(2)) == content)
 
     // skips stay loud, naming the caller
     val skip = intercept[IllegalArgumentException](
-      t.mergeAutoAs(log, 9))
-    assert(skip.getMessage.contains("mergeAutoAs"))
+      t.mergeAs(log, 9))
+    assert(skip.getMessage.contains("mergeAs"))
 
     Lake.deleteTree(java.nio.file.Paths.get(dir))
+  }
+
+  test("mergeAs replay finishes a crash at every boundary of the landing step") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
+    val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
+    val log = Lake.cdcChangelog(docs)
+    // the landing step's artifacts in write order; a crash after one of
+    // them leaves it (and everything before it) on disk, nothing after
+    val artifacts = Seq("data", "_manifest", "_graft_schema.json",
+      "_GRAFT_COMMITTED")
+    // a narrow changelog takes the scoped arm, a wide one the full arm
+    for ((arm, tick) <- Seq("scoped" -> log.filter(col("doc_id") < cut),
+                            "full" -> log);
+         crashAfter <- Seq("data", "_manifest", "_graft_schema.json")) {
+      val leg = s"$arm arm, crash after $crashAfter"
+      val dir = java.nio.file.Files.createTempDirectory("graft_tbl_cr").toString
+      val t = GraftTable.create(spark, dir, docs)
+      val v0State = fileState(s"$dir/v0")
+      assert(t.mergeAs(tick, 1) == 1)
+      def carriedRefs(): Seq[String] = t.manifest(1).select("path")
+        .collect().map(_.getString(0)).filterNot(_.contains("/v1/"))
+        .sorted.toSeq
+      val twinCarried = carriedRefs()
+      assert((arm == "scoped") == twinCarried.nonEmpty,
+        s"$leg: the tick took the other arm")
+
+      // the crash: every artifact after `crashAfter` is gone
+      artifacts.dropWhile(_ != crashAfter).drop(1).foreach(a =>
+        Lake.deleteTree(java.nio.file.Paths.get(dir, "v1", a)))
+      // and a crashed deleteVectored left a stale DV at v1 naming a
+      // live v0 row (v0's last file: untouched by the narrow tick)
+      val last = t.manifest(0).orderBy(col("key_lo").desc).head()
+      spark.createDataFrame(Seq((last.getAs[String]("path"),
+          last.getAs[Long]("key_hi")))).toDF("path", "doc_id")
+        .write.parquet(s"$dir/v1/_graft_dv")
+      assert(t.versions == Seq(0), s"$leg: the crashed version is visible")
+
+      // a fault-free replay finishes the version
+      assert(t.mergeAs(tick, 1) == 1)
+      assert(t.versions == Seq(0, 1), leg)
+      assert(collectSorted(t.readAsOf(1)) ==
+        collectSorted(Lake.cdcMerge(docs, tick)), s"$leg: content")
+      assert(fileState(s"$dir/v0") == v0State, s"$leg: v0 bytes moved")
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(dir, "v1", "_graft_dv")),
+        s"$leg: the replay inherited the stale DV")
+      assert(carriedRefs() == twinCarried, s"$leg: carried references")
+      Lake.deleteTree(java.nio.file.Paths.get(dir))
+    }
   }
 
   test("history reports the version audit trail from metadata alone") {
@@ -621,8 +726,8 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     val t = GraftTable.create(spark, dir, docs)
     val log = Lake.cdcChangelog(t.read())
     val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
-    t.mergeScoped(log.filter(col("doc_id") < cut)) // v1: scoped patchwork
-    t.merge(log.filter(col("doc_id") >= cut)       // v2: full, +1 column
+    t.merge(log.filter(col("doc_id") < cut))  // v1: key-local, scoped patchwork
+    t.merge(log.filter(col("doc_id") >= cut)  // v2: wide, full, +1 column
       .withColumn("rev", lit(1)))
 
     val h = t.history().orderBy("version").collect()
@@ -736,15 +841,21 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     assert(admitted.size < total, "secondary-range admission is vacuous")
 
     // a later scoped tick writes files with NULL spans (unprofiled on
-    // the z keys) — readRangeOn must still admit them, never lose rows
+    // the z keys) — readRangeOn must still admit them, never lose rows.
+    // Every Morton file spans ~all order keys, so updating existing keys
+    // would touch every file (the full arm); the tick instead copies the
+    // low orders to new keys past the table's last, which touch no file
+    // (the scoped arm), with part keys inside the probed range, so a
+    // skipped NULL-span file would lose rows the probe must return
     val mx = li.agg(max("l_orderkey")).head().getLong(0)
     // a complete-key-group U tick (l_orderkey repeats per line number,
     // so the tick must carry every row of each touched key)
     val tick = t.read().filter(col("l_orderkey") < mx / 64)
       .withColumn("l_quantity", col("l_quantity") + 1)
-      .select(lit("U").as("op"), col("l_orderkey"), col("l_linenumber"),
-              col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-    t.mergeScoped(tick)
+      .select(lit("U").as("op"), (col("l_orderkey") + mx + 1).as("l_orderkey"),
+              col("l_linenumber"), (pmod(col("l_partkey"), lit(8L)) + pMid)
+                .as("l_partkey"), col("l_suppkey"), col("l_quantity"))
+    t.merge(tick)
     val m2 = t.manifest(2)
     assert(m2.filter(col("l_partkey_lo").isNull).count() > 0,
       "scoped tick left no NULL-span files; the widen leg is vacuous")
@@ -868,13 +979,13 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     val t = GraftTable.create(spark, dir, docs)
     assertManifestMatchesScan(t, dir, 0, "doc_id") // keyed full version
     val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
-    assert(t.mergeScoped(Lake.cdcChangelog(t.read())
+    assert(t.merge(Lake.cdcChangelog(t.read())
       .filter(col("doc_id") < cut)) == 1)
     assertManifestMatchesScan(t, dir, 1, "doc_id") // scoped patch
     // evolved schema: the changelog ADDS a column
     val evolved = t.read().filter(col("doc_id") < cut)
       .withColumn("op", lit("U")).withColumn("score", col("doc_id") * 2)
-    assert(t.mergeScoped(evolved) == 2)
+    assert(t.merge(evolved) == 2)
     assert(t.schemaAsOf(2).fieldNames.contains("score"))
     assertManifestMatchesScan(t, dir, 2, "doc_id")
     // a mergeConcurrent token manifest (files under v3/d_<token>/)
@@ -910,7 +1021,7 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
       val t = GraftTable.create(spark, dir, docs)
       assertManifestMatchesScan(t, dir, 0, "doc_id", footers = false)
       val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
-      t.mergeScoped(Lake.cdcChangelog(t.read()).filter(col("doc_id") < cut))
+      t.merge(Lake.cdcChangelog(t.read()).filter(col("doc_id") < cut))
       assertManifestMatchesScan(t, dir, 1, "doc_id", footers = false)
       assert(collectSorted(t.readRange(0L, cut)) ==
         collectSorted(t.read().filter(col("doc_id") < cut)))
@@ -952,7 +1063,7 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     // and a later version still patches on top of it (an identity
     // upsert of the low keys: content unchanged, files rewritten)
     val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
-    assert(cold.mergeScoped(cold.read().filter(col("doc_id") < cut)
+    assert(cold.merge(cold.read().filter(col("doc_id") < cut)
       .withColumn("op", lit("U"))) == 1)
     assert(collectSorted(GraftTable.open(spark, dir).read()) ==
       collectSorted(docs))
@@ -964,7 +1075,7 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     val dir = java.nio.file.Files.createTempDirectory("graft_tbl_nj").toString
     val t = GraftTable.create(spark, dir, docs)
     val cut = docs.agg(max("doc_id")).head().getLong(0) / 8
-    assert(t.mergeScoped(Lake.cdcChangelog(t.read())
+    assert(t.merge(Lake.cdcChangelog(t.read())
       .filter(col("doc_id") < cut)) == 1)
 
     // a cold handle loads the manifest on the driver
@@ -973,13 +1084,13 @@ class GraftTableSpec extends AnyFunSuite with SparkFixture {
     assert(coldJobs == 0, s"cold manifest(1) started $coldJobs job(s)")
     assert(m1.nonEmpty)
 
-    // the scoped merge's manifest landing, re-run over v1's own files:
-    // footer stats, the carried-rows filter and the write, no job
+    // the manifest half of the landing step, re-run over v1's own
+    // files: footer stats, the carried-rows filter and the write, no job
     val v0Paths = t.manifest(0).select("path").collect().map(_.getString(0))
     val touched = v0Paths.filterNot(m1.map(_.getAs[String]("path")).toSet)
     assert(touched.nonEmpty, "the scoped merge rewrote nothing")
     val (landed, landJobs) = jobsDuring(
-      t.landPatchManifest(0, s"$dir/v1", touched.toSeq, t.schemaAsOf(1)))
+      t.landManifest(s"$dir/v1", t.schemaAsOf(1), Some(0), touched.toSeq))
     assert(landJobs == 0, s"manifest landing started $landJobs job(s)")
     assert(landed._2.map(_.toSeq).toSet == m1.map(_.toSeq).toSet)
     assert(GraftTable.open(spark, dir).manifest(1).collect()

@@ -56,6 +56,42 @@ class LabelLocalSpec extends AnyFunSuite with SparkFixture {
     } finally spark.conf.unset("spark.graft.labels.localMaxEdges")
   }
 
+  test("distributed loop plans its joins under the caller's runtime conf") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    // every plan the loop runs (initial and adaptive re-plans) — the
+    // loop's own columns (`nl1` seed, `nlbl` hops) pick them out
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => plans.add(x.physicalPlanDescription); ()
+        case x: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(x.physicalPlanDescription); ()
+        case _ => ()
+      }
+    }
+    val sc = spark.sparkContext
+    spark.conf.set("spark.graft.labels.localMaxEdges", "0")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    org.apache.spark.ListenerBusAccess.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val (labels, steps) =
+        Dedup.propagateLabelsCounted(spark, edges, "spec_lbl_conf")
+      assert(steps > 0, "bound 0 must force the distributed loop")
+      assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == truth)
+      org.apache.spark.ListenerBusAccess.drain(sc)
+    } finally {
+      sc.removeSparkListener(l)
+      spark.conf.unset("spark.graft.labels.localMaxEdges")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+    import scala.jdk.CollectionConverters._
+    val loop = plans.asScala.toSeq.filter(p => p.contains("nlbl") || p.contains("nl1"))
+    assert(loop.exists(_.contains("Join")), "no label-loop join plan was seen")
+    assert(!loop.exists(_.contains("Broadcast")),
+      "a label-loop join broadcast although the caller disabled broadcast joins")
+  }
+
   test("empty edge table yields an empty label table on the local path") {
     val none = edges.filter(col("src") > 1000L)
     val (labels, steps) =

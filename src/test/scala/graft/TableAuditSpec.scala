@@ -58,8 +58,8 @@ class TableAuditSpec extends AnyFunSuite with SparkFixture {
     val t = GraftTable.create(spark, tmp(), docs)
     val mx = docs.agg(max("doc_id")).head().getLong(0)
     val log = Lake.cdcChangelog(t.read())
-    t.mergeScoped(log.filter(col("doc_id") < mx / 8)) // v1 carries v0 files
-    t.merge(log.filter(col("doc_id") >= mx / 8))      // v2 self-contained
+    t.merge(log.filter(col("doc_id") < mx / 8))  // key-local: v1 carries v0 files
+    t.merge(log.filter(col("doc_id") >= mx / 8)) // wide: v2 self-contained
 
     val before = collectSorted(t.read())
     val preview = t.vacuumPreview(keep = 2).collect()

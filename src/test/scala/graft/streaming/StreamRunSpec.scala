@@ -59,4 +59,36 @@ class StreamRunSpec extends AnyFunSuite with SparkFixture {
     assert(out.collect().map(r => (r.getInt(0), r.getLong(1))).toMap ==
       Map(0 -> 6L, 1 -> 7L, 2 -> 7L))
   }
+
+  test("drains leave no streaming listener bus behind") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val sc = s.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
+        started.incrementAndGet(); ()
+      }
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
+        ended.incrementAndGet(); ()
+      }
+    }
+    s.streams.addListener(listener)
+    val before = ListenerBusAccess.streamingBuses(sc)
+    try (1 to 3).foreach { i =>
+      val input = MemoryStream[Int]
+      input.addData(1 to 10)
+      StreamRun.drain(s, input.toDF().groupBy((col("value") % 2).as("k")).count(),
+        "complete", s"stream_run_bus_$i")
+      // the drain delivered its events before detaching: the caller's
+      // listener has seen this query start and terminate already
+      assert((started.get, ended.get) == ((i, i)),
+        s"after drain $i the caller's listener saw ${started.get} starts, ${ended.get} ends")
+    } finally s.streams.removeListener(listener)
+    assert(ListenerBusAccess.streamingBuses(sc) == before,
+      s"three drains left ${ListenerBusAccess.streamingBuses(sc) - before} listener buses behind")
+  }
 }

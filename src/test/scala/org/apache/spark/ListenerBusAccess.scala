@@ -6,4 +6,10 @@ package org.apache.spark
   */
 object ListenerBusAccess {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** How many sessions' streaming listener buses the context's bus holds. */
+  def streamingBuses(sc: SparkContext): Int = sc.listenerBus
+    .findListenersByClass[
+      org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus]()
+    .size
 }
