@@ -746,11 +746,11 @@ object Lake {
     // l13: VERSION DIFF — time travel's other half: "what happened
     // between v0 and v1", as a CDC changelog derived from the stored
     // bytes alone (no changelog retention needed — the versions ARE the
-    // log). GraftTable.diff full-outer-joins the two immutable
-    // snapshots on the key: presence sentinels tag I/D, a null-safe
-    // compare tags U, unchanged keys never leave the join. The gate
-    // diffs v0 against one full merge and emits (op, doc_id, fp_a,
-    // fp_b). HASH-PROVEN with an algorithmically symmetric but
+    // log). GraftTable.diff groups the rows of the files the two
+    // versions do not share on the key: presence tags I/D, a null-safe
+    // compare tags U, unchanged keys in shared files are never read.
+    // The gate diffs v0 against one full merge and emits (op, doc_id,
+    // fp_a, fp_b). HASH-PROVEN with an algorithmically symmetric but
     // INPUT-independent oracle: DuckDB diffs the LOGICAL replay of the
     // same merge, so the stored table's land/commit/read machinery must
     // round-trip every byte the diff touches. VersionDiffSpec holds the
@@ -950,9 +950,9 @@ object Lake {
     // retention of a separate changelog). The gate lands the full
     // deterministic changelog as TWO parity-split merges and reads
     // changes(0, 2): every step boundary, both update images, and the
-    // cross-step composition are all under the hash. Scale: each step
-    // is one full-outer join of two immutable snapshots (churn-sized
-    // output, unchanged keys never leave the join), and the step loop
+    // cross-step composition are all under the hash. Scale: the feed
+    // reads the files each step changed (the manifests' per-step
+    // difference) with one shuffle on (key, step), and the step loop
     // is retention-bounded. GraftTableSpec adds the evolution leg
     // (union schema across steps) and the loud vacuumed-end refusal.
     "l18_change_feed" -> OpDef.sql(

@@ -1091,6 +1091,11 @@ object TextAnalysis {
           wr.join(nrm, "doc_id")
             .select(col("doc_id"), col("h"), col("df"),
                     (col("wr") / col("nrm")).as("w")))
+        // INVARIANT: the partition-less window below sees one row per
+        // HOT feature (df > HotDf). A feature's df counts its postings and
+        // the dfs sum to |postings| (the rows of `w`), so at most
+        // |postings| / (HotDf + 1) features are hot: the single-partition
+        // window is bounded by 1/1025 of the postings it was cut from.
         val dropped = w.filter(col("df") > HotDf)
           .groupBy("h").agg(max(col("w") * col("w")).as("mw2"))
           .withColumn("cum", sum(col("mw2")).over(

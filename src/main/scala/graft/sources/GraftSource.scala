@@ -363,10 +363,10 @@ private[graft] final case class GraftRelation(spark: SparkSession,
   * (`readChangeFeed` + `startingVersion`/`endingVersion` options) over
   * [[GraftTable.changes]]: one row per changed key per version step in
   * (from, to], typed `_change_type` with both update images, derived
-  * purely from the stored versions. No pruning machinery: each step's
-  * diff is already churn-sized (unchanged keys never leave its join),
-  * so the relation is a plain scan of a frame that was never
-  * snapshot-sized to begin with.
+  * purely from the stored versions. No pruning machinery: the feed
+  * reads the files each step changed (the manifests' per-step
+  * difference), so the relation is a plain scan of a frame that was
+  * never snapshot-sized to begin with.
   */
 private[graft] final case class GraftChangeFeedRelation(
     spark: SparkSession, table: GraftTable, from: Int, to: Int)

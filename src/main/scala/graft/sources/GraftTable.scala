@@ -3,7 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField,
+  StructType}
 import graft.operators.Lake
 
 /** A versioned keyed table in the lake — the unified facade over the
@@ -121,8 +122,10 @@ final class GraftTable private (s: SparkSession, val dir: String,
     * retention event, an uncommitted/never-written one names the
     * committed range.
     */
-  private def validate(v: Int): Unit = {
-    val vs = versions
+  private def validate(v: Int): Unit = validateIn(versions, v)
+
+  /** [[validate]] against an already-listed committed chain `vs`. */
+  private def validateIn(vs: Seq[Int], v: Int): Unit = {
     if (!vs.contains(v)) {
       val msg =
         if (vs.nonEmpty && v >= 0 && v < vs.min)
@@ -190,7 +193,12 @@ final class GraftTable private (s: SparkSession, val dir: String,
     */
   def schemaAsOf(v: Int): StructType = {
     validate(v)
-    val sf = metaSuffix(v) match {
+    schemaAt(v, markerPayload(fs, v))
+  }
+
+  /** Version v's stored schema, named by its marker `payload`. */
+  private def schemaAt(v: Int, payload: String): StructType = {
+    val sf = metaSuffixOf(payload) match {
       case "" => SchemaFile
       case t  => s"_graft_schema$t.json"
     }
@@ -238,7 +246,14 @@ final class GraftTable private (s: SparkSession, val dir: String,
 
   private def manifestData(v: Int): ManifestIO.Data = {
     validate(v)
-    val k = (v, markerPayload(fs, v))
+    manifestAt(v, markerPayload(fs, v))
+  }
+
+  /** [[manifestData]] of a version already validated, whose marker
+    * payload is `payload`.
+    */
+  private def manifestAt(v: Int, payload: String): ManifestIO.Data = {
+    val k = (v, payload)
     Option(manifestMemo.get(k)).getOrElse {
       val loaded = readManifest(s,
         s"$dir/v$v/_manifest${metaSuffixOf(k._2)}")
@@ -280,7 +295,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val landed = landManifest(vdir, rows.schema, base, rewritten, statCols)
     // `rewritten` is a subset of base's files: any left over are carried
     base.filter(manifestData(_)._2.length > rewritten.size)
-      .foreach(carryDv(_, next, landed))
+      .foreach(carryDv(_, next, landed, rows.schema))
     writeSchema(s, dir, next, rows.schema)
     commitWith(next, landed, op)
     next
@@ -330,8 +345,15 @@ final class GraftTable private (s: SparkSession, val dir: String,
     */
   private def scanOf(v: Int, schema: StructType,
       paths: Seq[String]): DataFrame =
+    scanWith(schema, dvOf(v, schema), paths)
+
+  /** [[scanOf]] with the version's deletion vector `dv` already looked
+    * up; `dv` is not evaluated when there is nothing to scan.
+    */
+  private def scanWith(schema: StructType, dv: => Option[DataFrame],
+      paths: Seq[String]): DataFrame =
     if (paths.isEmpty) s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
-    else minusDv(v, s.read.schema(schema).parquet(paths: _*))
+    else without(dv, s.read.schema(schema).parquet(paths: _*))
 
   /** Manifest-planned key-range read `[lo, hi)` at version `v`: one
     * interval-overlap filter on the version's manifest admits the files
@@ -388,9 +410,20 @@ final class GraftTable private (s: SparkSession, val dir: String,
     */
   private def dvPath(v: Int): HPath = new HPath(s"$dir/v$v/_graft_dv")
 
-  private def dvOf(v: Int): Option[DataFrame] = {
-    val p = dvPath(v)
-    if (fs.exists(p)) Some(s.read.parquet(p.toString)) else None
+  /** Version v's DV, its key column typed as the table key is in
+    * `keyed` (any schema holding the key). The DV directory's data
+    * files are listed on the driver and read by name with the schema
+    * given: a scan rooted at the `_`-prefixed directory itself trips
+    * Spark's hidden-path filter ("All paths were ignored"), and an
+    * inferred schema costs a footer-reading job.
+    */
+  private def dvOf(v: Int, keyed: StructType): Option[DataFrame] = {
+    val files = ManifestIO.dataFiles(s.sparkContext.hadoopConfiguration,
+      dvPath(v).toString)
+    if (files.isEmpty) None
+    else Some(s.read
+      .schema(StructType(Seq(StructField("path", StringType), keyed(key))))
+      .parquet(files.map(_._1.toString).toIndexedSeq: _*))
   }
 
   /** Crash debris guard: every landing path clears any stale DV at its
@@ -408,7 +441,11 @@ final class GraftTable private (s: SparkSession, val dir: String,
     * path spelling (both derive from the same metadata column).
     */
   private[sources] def minusDv(v: Int, src: DataFrame): DataFrame =
-    dvOf(v) match {
+    without(dvOf(v, src.schema), src)
+
+  /** `src` minus the rows deletion vector `dv` names (see [[minusDv]]). */
+  private def without(dv: Option[DataFrame], src: DataFrame): DataFrame =
+    dv match {
       case None => src
       case Some(dv) =>
         src.withColumn("_graft_fp", col("_metadata.file_path"))
@@ -419,10 +456,12 @@ final class GraftTable private (s: SparkSession, val dir: String,
 
   /** Carry the base version's DV into `next`, restricted to the paths
     * `next`'s manifest `m` still references — DV rows naming rewritten
-    * files are dropped with the files. Call before [[commit]].
+    * files are dropped with the files; `keyed` types the DV's key (see
+    * [[dvOf]]). Call before [[commit]].
     */
-  private def carryDv(n: Int, next: Int, m: ManifestIO.Data): Unit =
-    dvOf(n).foreach { dv =>
+  private def carryDv(n: Int, next: Int, m: ManifestIO.Data,
+      keyed: StructType): Unit =
+    dvOf(n, keyed).foreach { dv =>
       val sp = s
       import sp.implicits._
       val keep = dv.join(pathsOf(m).toSeq.toDF("path"), Seq("path"),
@@ -461,14 +500,15 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val m = manifestData(n)
     val paths = pathsOf(m)
     if (paths.isEmpty) return n // nothing to delete from
+    val dvOld = dvOf(n, schema)
     val src = s.read.schema(schema).parquet(paths.toIndexedSeq: _*)
       .withColumn("_graft_fp", col("_metadata.file_path"))
-    val live = dvOf(n).fold(src)(dv =>
+    val live = dvOld.fold(src)(dv =>
       src.join(broadcast(dv.withColumnRenamed("path", "_graft_fp")),
         Seq("_graft_fp", key), "left_anti"))
     val matches = live.filter(cond)
       .select(col("_graft_fp").as("path"), col(key))
-    val dvNew = dvOf(n).fold(matches)(_.unionByName(matches))
+    val dvNew = dvOld.fold(matches)(_.unionByName(matches))
     clearDv(next)
     val landed = writeManifest(s, s"$dir/v$next/_manifest", m._1, m._2)
     dvNew.coalesce(1)
@@ -510,7 +550,7 @@ final class GraftTable private (s: SparkSession, val dir: String,
     */
   def reorgPurge(minDvFraction: Double = 0.05): Int = {
     val n = currentVersion
-    val dvO = dvOf(n)
+    val dvO = dvOf(n, schemaAsOf(n))
     if (dvO.isEmpty) return n
     val dv = dvO.get
     val m = manifest(n)
@@ -1144,9 +1184,10 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val landed = writeManifest(s, s"$dir/v$next/_manifest", msch, mrows)
     // the restored state includes v's soft deletes: the DV is part of
     // the version's metadata and copies with the manifest
-    dvOf(v).foreach(_.coalesce(1).write.mode(SaveMode.Overwrite)
+    val sch = schemaAsOf(v)
+    dvOf(v, sch).foreach(_.coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(dvPath(next).toString))
-    writeSchema(s, dir, next, schemaAsOf(v))
+    writeSchema(s, dir, next, sch)
     commitWith(next, landed, "RESTORE")
     next
   }
@@ -1176,9 +1217,10 @@ final class GraftTable private (s: SparkSession, val dir: String,
     val (msch, mrows) = manifestData(v)
     writeManifest(s, s"$destDir/v0/_manifest", msch, mrows)
     // the clone-instant snapshot includes the source's soft deletes
-    dvOf(v).foreach(_.coalesce(1).write.mode(SaveMode.Overwrite)
+    val sch = schemaAsOf(v)
+    dvOf(v, sch).foreach(_.coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$destDir/v0/_graft_dv"))
-    writeSchema(s, destDir, 0, schemaAsOf(v))
+    writeSchema(s, destDir, 0, sch)
     // the clone inherits the constraint SET as of clone time (it is
     // part of the table definition); the two sets diverge thereafter
     val cs = constraints
@@ -1239,21 +1281,23 @@ final class GraftTable private (s: SparkSession, val dir: String,
       // dv_rows is how many of them the version's deletion vector hides
       // — live rows = n_rows - dv_rows (Delta reports DV'd files the
       // same way). One tombstone-sized parquet count per DV'd version.
-      val dvRows = dvOf(v).map(_.count()).getOrElse(0L)
+      val sch = schemaAsOf(v)
+      val dvRows = dvOf(v, sch).map(_.count()).getOrElse(0L)
       (v, committedAt, rows.length.toLong, total("n_rows"), total("n_bytes"),
         rows.count(r => !r.getString(pi).contains(s"/v$v/")).toLong,
-        schemaAsOf(v).fields.length, dvRows, opOf(f, v))
+        sch.fields.length, dvRows, opOf(f, v))
     }.toDF("version", "committed_at", "n_files", "n_rows", "bytes",
       "carried_files", "n_columns", "dv_rows", "operation")
   }
 
   /** Changelog BETWEEN two committed versions — time travel's other
     * half: not "what did the table look like at v" but "what happened
-    * between vA and vB". One full-outer join on the key (both sides are
-    * plain parquet scans of immutable version file sets; the join
-    * shuffles each side once on the key — linear, no driver state),
-    * presence sentinels decide I/D, and a null-safe column compare
-    * decides U; unchanged keys never leave the join. Rows carry both
+    * between vA and vB". It reads only the files the two versions do
+    * not share, plus shared files a deletion vector names on either
+    * side ([[delta]]): every other row is the same bytes on both sides.
+    * One shuffle on the key groups each key's two sides; presence
+    * decides I/D and a null-safe column compare decides U, so a key a
+    * rewritten file re-lands unchanged emits nothing. Rows carry both
     * sides' payloads as `a_*` / `b_*` so a consumer can re-apply or
     * audit without re-reading either version. Schema asymmetry (an
     * evolution between vA and vB) compares over the UNION column set:
@@ -1262,31 +1306,15 @@ final class GraftTable private (s: SparkSession, val dir: String,
     * sides is unchanged.
     */
   def diff(vA: Int, vB: Int): DataFrame = {
-    val aCols = schemaAsOf(vA).fields.map(f => f.name -> f.dataType)
-    val bCols = schemaAsOf(vB).fields.map(f => f.name -> f.dataType)
-    val types = (aCols ++ bCols).toMap
-    val cols = (aCols.map(_._1) ++ bCols.map(_._1))
+    val Seq(a, b) = snapsOf(Seq(vA, vB))
+    val cols = (a.schema.fieldNames ++ b.schema.fieldNames)
       .distinct.filterNot(_ == key).toSeq
-    // presence sentinels live in a reserved namespace — a payload column
-    // literally named `_a`/`_b` must not collide with them
-    def side(v: Int, names: Array[(String, DataType)], tag: String) = {
-      val present = names.map(_._1).toSet
-      readAsOf(v).select(
-        (col(key) +: lit(true).as(s"_graft_in_$tag") +:
-          cols.map(c =>
-            (if (present(c)) col(c)
-             else lit(null).cast(types(c))).as(s"${tag}_$c"))): _*)
-    }
-    val changed = cols.map(c => !(col(s"a_$c") <=> col(s"b_$c")))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    side(vA, aCols, "a").join(side(vB, bCols, "b"), Seq(key), "full_outer")
-      .withColumn("op",
-        when(col("_graft_in_b").isNull, "D")
-          .when(col("_graft_in_a").isNull, "I")
-          .otherwise("U"))
-      .filter(col("_graft_in_a").isNull || col("_graft_in_b").isNull ||
-        changed)
-      .drop("_graft_in_a", "_graft_in_b")
+    val (pre, post) = (col("_graft_a"), col("_graft_b"))
+    delta(Seq((vB, a, b)), cols).select(col(key) +:
+      (cols.map(c => pre.getField(c).as(s"a_$c")) ++
+        cols.map(c => post.getField(c).as(s"b_$c")) :+
+        when(post.isNull, "D").when(pre.isNull, "I").otherwise("U")
+          .as("op")): _*)
   }
 
   /** The CHANGE DATA FEED over the version chain (Delta's
@@ -1295,87 +1323,137 @@ final class GraftTable private (s: SparkSession, val dir: String,
     * 'delete' | 'update_preimage' | 'update_postimage'; updates emit
     * BOTH images, Delta-faithful, so a consumer can re-apply or audit
     * without reading any snapshot) and `_commit_version` (the step's
-    * landing version). Derived purely from stored bytes — [[diff]] per
-    * step, each one full-outer join of two immutable snapshots; the
-    * versions ARE the log, no changelog retention needed, and a CDC
-    * consumer that polls `changes(lastSeen, currentVersion)` gets
-    * exactly the ticks it missed. Schema evolution composes: steps are
-    * unioned over the CHAIN's column set, pre-evolution steps reading
-    * typed nulls in later columns. Step count is retention-bounded
-    * (the version chain is), so the per-step loop is metadata-sized;
-    * each step's cost is the diff's — linear in the two snapshots,
-    * churn-sized output.
+    * landing version). Derived purely from stored bytes: the versions
+    * ARE the log, no changelog retention needed, and a CDC consumer
+    * that polls `changes(lastSeen, currentVersion)` gets exactly the
+    * ticks it missed. It reads the files each step changed — the files
+    * one side of the step holds and the other does not, plus shared
+    * files a deletion vector names on either side ([[delta]], Delta's
+    * add/remove actions read off the manifests) — so its cost is the
+    * churn of the span, not (span + 1) snapshots; a step that rewrites
+    * everything (a full merge, `replace`, `compact`) costs its two
+    * snapshots. All steps share one shuffle on (key, step). Schema
+    * evolution composes: steps are unioned over the CHAIN's column set,
+    * pre-evolution steps reading typed nulls in later columns. Step
+    * count is retention-bounded (the version chain is), and the chain's
+    * metadata is read once ([[snapsOf]]).
     */
   def changes(vA: Int, vB: Int): DataFrame = {
-    validate(vA); validate(vB) // loud on vacuumed ends; the chain
-    // between them is gap-free by construction (vacuum retires
-    // oldest-first, so any retained pair brackets retained versions)
+    // loud on vacuumed ends; the chain between them is gap-free by
+    // construction (vacuum retires oldest-first)
+    val chain = snapsOf(vA to vB)
     require(vA < vB,
       s"changes($vA, $vB) on graft table $dir: need vA < vB")
-    // ONE shuffle for the whole span, not one full-outer join per step:
-    // the per-step loop scanned every middle version twice and shuffled
-    // each diff's both sides (2N exchanges for N steps). Instead every
-    // snapshot in [vA, vB] is scanned ONCE, tagged with its version, and
-    // the union is windowed per key in version order — each present row
-    // sees its previous presence (lag) and whether a next one exists
-    // (lead), which determines exactly the per-step verdicts:
-    //   first presence at v > vA                  → insert @ v
-    //   consecutive presence, payload changed     → update pre+post @ v
-    //   presence gap (prev < v-1)                 → delete @ prev+1,
-    //                                               insert @ v
-    //   last presence at v < vB                   → delete @ v+1
-    // Equality compares over the CHAIN's column set null-safely — a
-    // column absent from both versions of a step reads null on both
-    // sides, exactly the per-step pair-union compare. Output rows,
-    // images and _commit_version are unchanged (the oracle pins them);
-    // column order reproduces the old step-union reduce (the first
-    // step's columns, then later-introduced columns appended last).
-    val verSchemas = (vA to vB).map(v => v -> schemaAsOf(v))
-    val types: Map[String, DataType] = verSchemas
-      .flatMap(_._2.fields.map(f => f.name -> f.dataType)).toMap
-    val firstPair = (verSchemas(0)._2.fieldNames ++
-      verSchemas(1)._2.fieldNames).distinct.filterNot(_ == key).toSeq
-    val laterCols = verSchemas.drop(2)
-      .flatMap(_._2.fieldNames).distinct
+    // column order: the first step's columns, then the CDF columns, then
+    // columns later steps introduce
+    val firstPair = (chain(0).schema.fieldNames ++
+      chain(1).schema.fieldNames).distinct.filterNot(_ == key).toSeq
+    val laterCols = chain.drop(2).flatMap(_.schema.fieldNames).distinct
       .filterNot(c => c == key || firstPair.contains(c))
-    val cols = firstPair ++ laterCols
-    val tagged = verSchemas.map { case (v, sch) =>
-      val present = sch.fieldNames.toSet
-      readAsOf(v).select(col(key) +: lit(v).as("_graft_cdf_v") +:
-        cols.map(c =>
-          (if (present(c)) col(c)
-           else lit(null).cast(types(c))).as(c)): _*)
-    }.reduce(_.unionByName(_))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(key).orderBy("_graft_cdf_v")
-    val pay = struct(cols.map(col): _*)
-    val v = col("_graft_cdf_v")
-    val pv = col("_graft_cdf_pv")
-    val pp = col("_graft_cdf_pp")
-    val nv = col("_graft_cdf_nv")
-    val changed = cols.map(c => !(col(c) <=> pp.getField(c)))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    def ev(ct: String, cv: Column, p: Column) = struct(
-      lit(ct).as("ct"), cv.cast("int").as("cv"), p.as("p"))
-    val emit = array(
-      when(pv.isNull && v > vA, ev("insert", v, pay)),
-      when(pv.isNotNull && pv === v - 1 && changed,
-        ev("update_preimage", v, pp)),
-      when(pv.isNotNull && pv === v - 1 && changed,
-        ev("update_postimage", v, pay)),
-      when(pv.isNotNull && pv < v - 1, ev("delete", pv + 1, pp)),
-      when(pv.isNotNull && pv < v - 1, ev("insert", v, pay)),
-      when(nv.isNull && v < vB, ev("delete", v + 1, pay)))
-    tagged
-      .withColumn("_graft_cdf_pv", lag("_graft_cdf_v", 1).over(w))
-      .withColumn("_graft_cdf_pp", lag(pay, 1).over(w))
-      .withColumn("_graft_cdf_nv", lead("_graft_cdf_v", 1).over(w))
-      .select(col(key), explode(array_compact(emit)).as("_graft_cdf_e"))
+    val steps = chain.sliding(2).map { case Seq(a, b) => (b.v, a, b) }.toSeq
+    val (pre, post) = (col("_graft_a"), col("_graft_b"))
+    val both = pre.isNotNull && post.isNotNull
+    def ev(ct: String, p: Column) = struct(lit(ct).as("ct"), p.as("p"))
+    val e = col("_graft_cdf_e")
+    delta(steps, firstPair ++ laterCols)
+      .select(col(key), col("_graft_step"), explode(array_compact(array(
+        when(pre.isNull, ev("insert", post)),
+        when(post.isNull, ev("delete", pre)),
+        when(both, ev("update_preimage", pre)),
+        when(both, ev("update_postimage", post))))).as("_graft_cdf_e"))
       .select(col(key) +:
-        (firstPair.map(c => col(s"_graft_cdf_e.p.$c").as(c)) ++
-          Seq(col("_graft_cdf_e.ct").as("_change_type"),
-              col("_graft_cdf_e.cv").as("_commit_version")) ++
-          laterCols.map(c => col(s"_graft_cdf_e.p.$c").as(c))): _*)
+        (firstPair.map(c => e.getField("p").getField(c).as(c)) ++
+          Seq(e.getField("ct").as("_change_type"),
+              col("_graft_step").as("_commit_version")) ++
+          laterCols.map(c => e.getField("p").getField(c).as(c))): _*)
+  }
+
+  /** One committed version's metadata as a change feed reads it: the
+    * stored schema, the manifest rows and the deletion vector.
+    */
+  private case class Snap(v: Int, schema: StructType, m: ManifestIO.Data,
+      dv: Option[DataFrame])
+
+  /** The [[Snap]]s of versions `vs`, validated against ONE listing of
+    * the committed chain (loud on a vacuumed or unknown version), each
+    * version's marker read once for both its schema and its manifest.
+    */
+  private def snapsOf(vs: Seq[Int]): Seq[Snap] = {
+    val committed = versions
+    vs.foreach(validateIn(committed, _))
+    val f = fs
+    vs.map { v =>
+      val payload = markerPayload(f, v)
+      val sch = schemaAt(v, payload)
+      Snap(v, sch, manifestAt(v, payload), dvOf(v, sch))
+    }
+  }
+
+  /** The keys that differ between the two versions of each
+    * `(step, before, after)` pair, one row per (key, step) with the
+    * key's `before` payload as `_graft_a` and its `after` payload as
+    * `_graft_b` — each a struct over `cols` (typed null where the
+    * version lacks the column), NULL where that version does not hold
+    * the key — kept only when the two differ (null-safe per column).
+    *
+    * Exact from the manifests alone: keys are unique within a version
+    * and data files immutable, so a key whose row sits in a file both
+    * versions hold, under the same deletion-vector rows, is unchanged.
+    * Every differing row is in a file only one side holds or in a shared
+    * file whose DV rows differ; each side scans those files under its
+    * own schema minus its own DV. Shared files any DV of the pair names
+    * are read on both sides — a superset, whose unchanged rows cancel in
+    * the compare. The side scans are unioned and grouped ONCE on
+    * (key, step).
+    */
+  private def delta(pairs: Seq[(Int, Snap, Snap)],
+      cols: Seq[String]): DataFrame = {
+    val snaps = pairs.flatMap(p => Seq(p._2, p._3))
+    val types = snaps.flatMap(_.schema.fields)
+      .map(f => f.name -> f.dataType).toMap
+    val dvPaths = dvPathsOf(snaps)
+    def side(step: Int, sn: Snap, paths: Seq[String], after: Boolean) = {
+      val present = sn.schema.fieldNames.toSet
+      scanWith(sn.schema, sn.dv, paths).select(col(key),
+        lit(step).as("_graft_step"), lit(after).as("_graft_after"),
+        struct(cols.map(c =>
+          (if (present(c)) col(c) else lit(null).cast(types(c))).as(c)): _*)
+          .as("_graft_p"))
+    }
+    val sides = pairs.flatMap { case (step, a, b) =>
+      val (pa, pb) = (pathsOf(a.m), pathsOf(b.m))
+      val (inA, inB) = (pa.toSet, pb.toSet)
+      val dvd = dvPaths(a.v) ++ dvPaths(b.v)
+      Seq(
+        (a, pa.filter(p => !inB(p) || dvd(p)), false),
+        (b, pb.filter(p => !inA(p) || dvd(p)), true))
+        .collect { case (sn, ps, after) if ps.nonEmpty =>
+          side(step, sn, ps.toSeq, after) }
+    }
+    val (pre, post) = (col("_graft_a"), col("_graft_b"))
+    val changed = cols.map(c => !(pre.getField(c) <=> post.getField(c)))
+      .reduceOption(_ || _).getOrElse(lit(false))
+    val p = col("_graft_p")
+    val after = col("_graft_after")
+    sides.reduceOption(_ union _)
+      .getOrElse(side(pairs.head._1, pairs.head._3, Nil, after = true))
+      .groupBy(col(key), col("_graft_step"))
+      .agg(first(when(!after, p), ignoreNulls = true).as("_graft_a"),
+        first(when(after, p), ignoreNulls = true).as("_graft_b"))
+      .filter(pre.isNull || post.isNull || changed)
+  }
+
+  /** The data files each deletion vector among `snaps` names, by
+    * version — one distinct job over those DVs, none when no version
+    * has one.
+    */
+  private def dvPathsOf(snaps: Seq[Snap]): Map[Int, Set[String]] = {
+    val named = snaps.distinctBy(_.v).flatMap(sn =>
+      sn.dv.map(_.select(lit(sn.v).as("v"), col("path"))))
+    named.reduceOption(_ union _).fold(Map.empty[Int, Set[String]])(
+      _.distinct().collect().toSeq.groupMap(_.getInt(0))(_.getString(1))
+        .map { case (v, ps) => v -> ps.toSet })
+      .withDefaultValue(Set.empty)
   }
 
   /** Retire all but the newest `keep` committed versions (floored at 1 —

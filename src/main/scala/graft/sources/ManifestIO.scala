@@ -61,7 +61,7 @@ private[graft] object ManifestIO {
     * qualified directory (a raw local listing spells `file:///x` where
     * Spark's scans and `_metadata.file_path` spell `file:/x`).
     */
-  private def dataFiles(c: Configuration,
+  private[sources] def dataFiles(c: Configuration,
       dir: String): Array[(HPath, FileStatus)] = {
     val p = new HPath(dir)
     val fs = p.getFileSystem(c)
